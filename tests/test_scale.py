@@ -7,11 +7,33 @@ fraction of the bytes, and per-query latency stays sub-linear in
 corpus size (pruned search cost ~ nprobe/nlist of the data).
 """
 
+import glob
+import os
 import time
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+
+def _scan_files(df):
+    """Distinct files read by the scan of `df`: the paths in the
+    FilePartitions of its executed RDD. Building the partitions lists
+    the (pruned) files on the driver and runs no Spark job."""
+    parts = df._jdf.queryExecution().executedPlan().execute().partitions()
+    return {
+        os.path.realpath(f.toPath().toUri().getPath())
+        for p in parts
+        for f in p.files()
+    }
+
+
+def _parquet_files(dirs):
+    return {
+        os.path.realpath(f)
+        for d in dirs
+        for f in glob.glob(os.path.join(d, "*.parquet"))
+    }
 
 
 @pytest.fixture(scope="module")
@@ -69,14 +91,25 @@ class TestScaleContracts:
         probes4 = big_index._probe_lists(spark, q, 4)
         lists = big_index.lists(spark)
         pruned = lists.filter(F.col("list_id").isin(probes4))
-        # rdd partition count reflects the post-pruning scan splits
-        # (inputFiles() lists the base relation and is pruning-blind)
-        n_pruned = pruned.rdd.getNumPartitions()
-        n_full = lists.rdd.getNumPartitions()
-        # scan splits pack small files together (openCostInBytes), so
-        # the ratio is not exactly nprobe/nlist — but pruning must cut
-        # the split count by at least half at nprobe=4 of 32
-        assert n_pruned <= n_full // 2
+        # count the files the scan reads, not its splits: Spark packs
+        # files into splits of maxSplitBytes = min(maxPartitionBytes,
+        # max(openCostInBytes, (bytes + files*openCostInBytes) /
+        # defaultParallelism)), so the split count follows the core
+        # count (a full scan of 32 lists is 4 splits at local[4]), and
+        # inputFiles() lists the base relation and is pruning-blind
+        pruned_files = _scan_files(pruned)
+        full_files = _scan_files(lists)
+        # expected values come from the filesystem, not from Spark
+        root = os.path.join(big_index.path, "lists")
+        list_dirs = glob.glob(os.path.join(root, "list_id=*"))
+        assert len(list_dirs) == 32
+        assert pruned_files == _parquet_files(
+            os.path.join(root, f"list_id={p}") for p in probes4
+        )
+        # and the full scan reads every list file: the counter sees the
+        # pruning that inputFiles() is blind to
+        assert full_files == _parquet_files(list_dirs)
+        assert len(pruned_files) <= len(full_files) // 2
 
     def test_recall_at_scale(self, spark, big_index, probes):
         from lantern_spark.operators.index import recall_at_k
