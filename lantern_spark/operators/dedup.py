@@ -79,9 +79,12 @@ def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ----------------------------------------------------------------------
 
 def shingles(tokens_col, k: int = 3) -> Column:
-    """Distinct word k-shingles from a token array (1-based element_at)."""
+    """Distinct word k-shingles from a token array (1-based element_at).
+    A document with fewer than ``k`` tokens has no shingle: ``[]``."""
     t = tokens_col if isinstance(tokens_col, Column) else F.col(tokens_col)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(t) - (k - 1), F.lit(0)))
+    n = F.size(t) - (k - 1)
+    # sequence(1, 0) is [1, 0], not [] — slice it down to n starts
+    idx = F.slice(F.sequence(F.lit(1), F.greatest(n, F.lit(1))), 1, F.greatest(n, F.lit(0)))
     parts = lambda i: F.concat_ws(  # noqa: E731
         " ", *[F.element_at(t, i + j) for j in range(k)]
     )

@@ -42,7 +42,6 @@ O(nodes popped), not O(distances).
 from __future__ import annotations
 
 import heapq
-import json
 import math
 import os
 import pickle
@@ -54,7 +53,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lantern_spark.operators.index import _dir_fingerprint, _path_has_parquet
+from lantern_spark.operators import artifact
+from lantern_spark.operators.artifact import (
+    DELTA,
+    DELTA_SEQ,
+    MANIFEST,
+    IndexArtifact,
+    commit,
+    stage_path,
+)
 from lantern_spark.types import Metric
 
 
@@ -467,43 +474,20 @@ def _build_graph_row(
     )
 
 
-class HNSWIndex:
+class HNSWIndex(IndexArtifact):
     """Persisted per-partition HNSW index (one graph row per shard)."""
 
     def __init__(self, path: str, manifest: dict):
-        self.path = path
+        super().__init__(path)
         self.manifest = manifest
         # one-behind probe snapshot from the last DataFrame-path
         # search_batch — released at the next call (unpersist is
         # lazy-safe: a held result recomputes)
         self._batch_snap = None
-        # lazy-relation cache for the artifact's parquet dirs, same
-        # contract as IVFIndex._cached_read: holds ONLY unexecuted
-        # DataFrame handles (no rows — every action still scans
-        # parquet), validated by a directory fingerprint so a mutation
-        # through ANY handle on the same path invalidates before the
-        # next read
-        self._rel_cache: dict = {}
 
-    def _cached_read(self, spark: SparkSession, rel_dir: str) -> DataFrame:
-        """`spark.read.parquet(self.path/rel_dir)` memoized while the
-        directory's (name, mtime_ns, size) child fingerprint is
-        unchanged — Spark writes create/delete part files, which bumps
-        the containing dir, so appends/folds/rmtrees all change the
-        token. The session object is pinned in the value so `id(spark)`
-        cannot recycle across sessions."""
-        tok = _dir_fingerprint(os.path.join(self.path, rel_dir))
-        if tok is None:
-            # unscannable path (URI / permission / vanished): never
-            # cache — `None == None` would pin a stale handle forever
-            self._rel_cache.pop(rel_dir, None)
-            return spark.read.parquet(os.path.join(self.path, rel_dir))
-        hit = self._rel_cache.get(rel_dir)
-        if hit is not None and hit[0] == tok and hit[2] is spark:
-            return hit[1]
-        df = spark.read.parquet(os.path.join(self.path, rel_dir))
-        self._rel_cache[rel_dir] = (tok, df, spark)
-        return df
+    def _delta_keys(self) -> tuple:
+        mf = self.manifest
+        return mf["id_column"], mf["column"], int(mf.get("folded_seq", 0))
 
     @classmethod
     def build(
@@ -563,6 +547,7 @@ class HNSWIndex:
                 "hamming graphs store exact packed words; quant must be "
                 "'f32' (b1 packing IS the quantization)"
             )
+        artifact.recover(path)
         first = df.select(column).where(F.col(column).isNotNull()).first()
         if first is None:
             raise ValueError(f"no non-null vectors in {column!r}")
@@ -589,15 +574,16 @@ class HNSWIndex:
                 qval, pq_splits, pq_clusters, max_payload_bytes,
             )
 
+        # staged inside the artifact: an in-place rebuild reads the live
+        # graphs/vectors lazily while this writes
         (
             df.select(id_column, column)
             .repartition(shards, F.col(id_column))
             .mapInPandas(build_shard, _GRAPH_SCHEMA)
             .write.mode("overwrite")
-            .parquet(os.path.join(path, "graphs"))
+            .parquet(stage_path(path, "graphs"))
         )
-        import shutil
-
+        staged = ["graphs"]
         if qval != "f32":
             # Quantized graphs are LOSSY — a rebuild fed from
             # dequantized rows would re-quantize the reconstruction and
@@ -605,29 +591,11 @@ class HNSWIndex:
             # the reference's reindex re-reads original heap vectors).
             # Persist the exact originals as the heap analog; search
             # never touches this dir, only rebuild does (map-only
-            # write, no shuffle). Written BEFORE the delta dir is
-            # removed: df's lineage may still read the delta (in-place
-            # rebuild), and a crash between the two steps must leave
-            # the delta intact — rebuild dedups by id, so re-folding a
-            # survived delta is lossless, while losing it is not.
+            # write, no shuffle).
             df.select(id_column, column).write.mode("overwrite").parquet(
-                os.path.join(path, "vectors")
+                stage_path(path, "vectors")
             )
-        else:
-            # f32 payload dumps are exact; a stale vectors dir from an
-            # earlier quantized generation must not shadow them
-            shutil.rmtree(os.path.join(path, "vectors"), ignore_errors=True)
-        # a reused path may carry a stale delta dir (or fold shards
-        # from an earlier generation's fold_delta) — either would
-        # silently union into searches of the fresh build (ADVICE r2).
-        # Removed only AFTER the graphs and vectors writes succeeded
-        # (crash mid-build loses nothing).
-        shutil.rmtree(os.path.join(path, "delta"), ignore_errors=True)
-        shutil.rmtree(os.path.join(path, "graphs_delta"), ignore_errors=True)
-        try:
-            os.remove(os.path.join(path, "delta_seq"))
-        except OSError:
-            pass
+            staged.append("vectors")
         manifest = {
             "kind": "hnsw",
             "column": column,
@@ -645,92 +613,87 @@ class HNSWIndex:
             # types.check_format_version
             "format_version": "1.1",
         }
-        with open(os.path.join(path, "manifest.json"), "w") as f:
-            json.dump(manifest, f)
+        # one commit swaps the graphs (and heap) in and drops what an
+        # earlier generation at the same path left — a delta dir or
+        # fold shards would silently union into searches of the fresh
+        # build (ADVICE r2); f32 payload dumps are exact, so a stale
+        # quantized heap must not shadow them
+        commit(
+            path,
+            moves=[(os.path.join(artifact.STAGE, d), d) for d in staged],
+            writes={MANIFEST: manifest},
+            deletes=[DELTA, "graphs_delta", DELTA_SEQ]
+            + (["vectors"] if qval == "f32" else []),
+        )
         return cls(path, manifest)
 
     @classmethod
     def load(cls, path: str) -> "HNSWIndex":
         from lantern_spark.types import check_format_version
 
-        with open(os.path.join(path, "manifest.json")) as f:
-            manifest = json.load(f)
+        manifest = artifact.read_json(path)
         check_format_version(manifest.setdefault("format_version", "1.0"), path)
         return cls(path, manifest)
 
     # -- incremental fold plumbing --------------------------------------
 
-    def _graph_dirs(self) -> list:
-        """Existing graph-row directories: the base build plus the
-        LIVE fold shards — epoch dirs are enumerated explicitly from
-        ``fold_epoch_base`` (exclusive; epochs at or below it were
-        merged away by a fold compaction and are superseded) up to the
-        manifest's ``fold_epoch``, so a fold shard written just before
-        a crash (manifest never committed) stays invisible until the
-        re-run commits it; otherwise its rows would appear from the
-        shard AND from the still-unfolded delta scan (review r7 #3:
-        the manifest commit must be the cut-over the fold docstring
-        promises)."""
-        dirs = [os.path.join(self.path, "graphs")]
-        committed = int(self.manifest.get("fold_epoch", 0))
-        base = int(self.manifest.get("fold_epoch_base", 0))
-        fold = os.path.join(self.path, "graphs_delta")
-        for e in range(base + 1, committed + 1):
-            dirs.append(os.path.join(fold, f"fold_epoch={e}"))
+    def _vec_sql(self) -> str:
+        # hamming rows are integer[] bit packs — a float cast would
+        # round words past 24 mantissa bits
+        return "array<int>" if self.manifest["metric"] == "hamming" else "array<float>"
+
+    def _graph_dirs(self, folds_only: bool = False) -> list:
+        """Existing graph-row directories: the base build plus the LIVE
+        fold shards. Epoch dirs are enumerated from ``fold_epoch_base``
+        (exclusive; epochs at or below it were merged away by a fold
+        compaction) up to the manifest's ``fold_epoch``, so the
+        manifest is the cut-over: a shard it does not name is never
+        read (review r7 #3)."""
+        mf = self.manifest
+        rels = [] if folds_only else ["graphs"]
+        rels += [
+            os.path.join("graphs_delta", f"fold_epoch={e}")
+            for e in range(
+                int(mf.get("fold_epoch_base", 0)) + 1,
+                int(mf.get("fold_epoch", 0)) + 1,
+            )
+        ]
+        dirs = [os.path.join(self.path, r) for r in rels]
         return [d for d in dirs if os.path.isdir(d)]
 
-    def _graphs(self, spark: SparkSession) -> DataFrame:
-        """All shard graph rows (shard_id, n, payload)."""
-        dirs = self._graph_dirs()
-        rels = [os.path.relpath(d, self.path) for d in dirs]
-        out = self._cached_read(spark, rels[0]).select(
-            "shard_id", "n", "payload"
-        )
-        for rel in rels[1:]:
-            out = out.unionByName(
-                self._cached_read(spark, rel).select(
-                    "shard_id", "n", "payload"
-                )
-            )
+    def _graphs(self, spark: SparkSession, folds_only: bool = False):
+        """Graph rows (shard_id, n, payload) of :meth:`_graph_dirs`, or
+        None when there are none."""
+        out = None
+        for d in self._graph_dirs(folds_only):
+            g = self._cached_read(spark, os.path.relpath(d, self.path))
+            g = g.select("shard_id", "n", "payload")
+            out = g if out is None else out.unionByName(g)
         return out
 
-    def _unfolded_delta(self, spark: SparkSession):
-        """Delta rows NOT yet promoted into a fold shard (seq >
-        manifest ``folded_seq``), or None. Folded rows may linger in
-        the delta dir after a crash between the fold commit and the
-        cleanup — the watermark keeps them out of searches and future
-        folds (they already live in a fold shard)."""
-        delta_path = os.path.join(self.path, "delta")
-        if not _path_has_parquet(delta_path):
-            return None
-        d = self._cached_read(spark, "delta")
-        folded = int(self.manifest.get("folded_seq", 0))
-        if "__delta_seq" in d.columns:
-            from pyspark.sql import Window
+    def _dump(self, graphs: DataFrame) -> DataFrame:
+        """(id, vector, __stored_seq) rows of the given graph rows —
+        DEQUANTIZED: for i8/pq the raw buffer holds codes, not
+        coordinates (lossy round-trip is the quantized-index contract,
+        vectors() doc). __stored_seq = shard id: fold shards (appended
+        after the base build) hold strictly newer data."""
+        id_col, col = self.manifest["id_column"], self.manifest["column"]
 
-            # newest row per id (highest sequence): two add_delta
-            # updates of one id surface as ONE row in every search,
-            # matching what the eventual fold/rebuild keeps.
-            # xxhash64(vector) breaks same-sequence ties (one batch
-            # carrying an id twice) deterministically by content.
-            w = Window.partitionBy(self.manifest["id_column"]).orderBy(
-                F.col("__delta_seq").desc(),
-                F.xxhash64(F.col(self.manifest["column"])).desc(),
-            )
-            d = (
-                d.filter(
-                    F.coalesce(F.col("__delta_seq"), F.lit(0)) > folded
-                )
-                .withColumn("__drn", F.row_number().over(w))
-                .filter(F.col("__drn") == 1)
-                .drop("__drn")
-            )
-        elif folded:
-            # a seq-less (pre-1.1) delta can never be partially folded:
-            # fold_delta refuses it below, so folded_seq > 0 implies
-            # every row here is stamped
-            return None
-        return d
+        def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
+                    g = HnswGraph.from_payload(bytes(payload))
+                    yield pd.DataFrame(
+                        {
+                            id_col: g.ids,
+                            col: [v.tolist() for v in g.vectors()],
+                            "__stored_seq": [int(sid)] * g.n,
+                        }
+                    )
+
+        return graphs.mapInPandas(
+            dump, f"{id_col} long, {col} {self._vec_sql()}, __stored_seq long"
+        )
 
     def _live_fold_rows(self, spark: SparkSession):
         """(id, vector) rows held by the LIVE fold shards (epochs in
@@ -740,16 +703,9 @@ class HNSWIndex:
         ``__fold_epoch``); f32 builds dump the fold-shard payloads,
         which are exact by construction."""
         mf = self.manifest
-        base = int(mf.get("fold_epoch_base", 0))
         cur = int(mf.get("fold_epoch", 0))
-        if cur <= base:
+        if cur <= int(mf.get("fold_epoch_base", 0)):
             return None
-        vec_sql = (
-            "array<int>" if mf["metric"] == "hamming" else "array<float>"
-        )
-        vec_spark = T.ArrayType(
-            T.IntegerType() if mf["metric"] == "hamming" else T.FloatType()
-        )
         id_col, col = mf["id_column"], mf["column"]
         vec_path = os.path.join(self.path, "vectors")
         if os.path.isdir(vec_path):
@@ -762,47 +718,14 @@ class HNSWIndex:
             # so the live-fold content is epochs (0, cur] regardless
             # of fold_epoch_base (a compacted shard carries rows whose
             # heap epochs PREDATE the base — filtering at > base would
-            # silently drop them from the next compaction). Bounded
-            # ABOVE at cur: the in-flight fold appends its delta
-            # originals at epoch cur+1 BEFORE reading this (and a
-            # crashed prior attempt may have left epoch cur+1 rows) —
-            # including them would duplicate the delta in the shard.
+            # silently drop them from the next compaction).
             ep = F.coalesce(F.col("__fold_epoch"), F.lit(0))
             return heap.filter((ep > 0) & (ep <= cur)).select(
                 F.col(id_col).cast("long").alias(id_col),
-                F.col(col).cast(vec_sql).alias(col),
+                F.col(col).cast(self._vec_sql()).alias(col),
             )
-        dirs = [
-            os.path.join(self.path, "graphs_delta", f"fold_epoch={e}")
-            for e in range(base + 1, cur + 1)
-        ]
-        dirs = [d for d in dirs if os.path.isdir(d)]
-        if not dirs:
-            return None
-        g = spark.read.parquet(dirs[0]).select("shard_id", "n", "payload")
-        for d in dirs[1:]:
-            g = g.unionByName(
-                spark.read.parquet(d).select("shard_id", "n", "payload")
-            )
-        schema = T.StructType(
-            [
-                T.StructField(id_col, T.LongType()),
-                T.StructField(col, vec_spark),
-            ]
-        )
-
-        def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for payload in pdf["payload"]:
-                    gr = HnswGraph.from_payload(bytes(payload))
-                    yield pd.DataFrame(
-                        {
-                            id_col: gr.ids,
-                            col: [v.tolist() for v in gr.vectors()],
-                        }
-                    )
-
-        return g.mapInPandas(dump, schema)
+        g = self._graphs(spark, folds_only=True)
+        return None if g is None else self._dump(g).drop("__stored_seq")
 
     def fold_delta(
         self, spark: SparkSession, max_fold_shards: int = 8
@@ -826,15 +749,18 @@ class HNSWIndex:
         Live shards therefore never exceed ``base + max_fold_shards``.
         Pass ``max_fold_shards=0`` to force compaction on every fold.
 
-        The fold shard lands under ``graphs_delta/fold_epoch=N/`` via
-        dynamic partition overwrite with a deterministic shard id
-        (monotonic ``next_shard_id`` counter — never reused, so f32
-        payload dumps keep their shard-id-orders-recency property),
-        and the manifest commit (fold_epoch, fold_epoch_base,
-        folded_seq watermark, shards) is the atomic cut-over — a crash
-        anywhere re-runs to the same bytes, and rows at-or-below the
-        watermark are invisible to search even if the delta-dir
-        cleanup never happened.
+        The fold shard (deterministic shard id: the monotonic
+        ``next_shard_id`` counter — never reused, so f32 payload dumps
+        keep their shard-id-orders-recency property) is written to the
+        artifact's stage dir and published by ONE journaled commit
+        (operators/artifact.py): the move to ``graphs_delta/
+        fold_epoch=N/`` (plus, for quantized builds, the heap part
+        files), then the manifest (fold_epoch, fold_epoch_base,
+        folded_seq watermark, shards), then the removal of the
+        consumed delta and of the epochs a compaction superseded. A
+        kill before the journal leaves the pre-fold artifact; a kill
+        after it is finished by the next writer call, which replays the
+        journal.
 
         Contract: the add-only contract of :meth:`add_delta` (an id
         already in a graph shard would DUPLICATE after folding —
@@ -842,6 +768,7 @@ class HNSWIndex:
         detects it, ``rebuild`` repairs it, because shard payloads are
         sealed). Within the delta itself the newest ``__delta_seq``
         per id wins, the rebuild rule."""
+        self._writer_entry()
         mf = self.manifest
         delta = self._unfolded_delta(spark)
         if delta is None:
@@ -852,14 +779,11 @@ class HNSWIndex:
                 "fold_delta cannot track a fold watermark — rebuild() "
                 "instead"
             )
-        vec_sql = (
-            "array<int>" if mf["metric"] == "hamming" else "array<float>"
-        )
         # _unfolded_delta already keeps the newest row per id with a
         # deterministic tie-break — no second window (review r7c #5)
         rows = delta.select(
             F.col(mf["id_column"]).cast("long").alias(mf["id_column"]),
-            F.col(mf["column"]).cast(vec_sql).alias(mf["column"]),
+            F.col(mf["column"]).cast(self._vec_sql()).alias(mf["column"]),
             "__delta_seq",
         )
         agg = rows.agg(
@@ -879,20 +803,20 @@ class HNSWIndex:
         # re-runs: derived from the committed manifest)
         sid = int(mf.get("next_shard_id", mf["shards"]))
         qval = mf.get("quant", "f32")
+        heap_moves = []
         if qval != "f32":
             # quantized graphs are lossy — delta originals join the
-            # exact heap BEFORE the fold commit (the build/rebuild
-            # ordering contract; duplicate appends after a crash are
-            # deduped by rebuild's id rule). __fold_epoch orders heap
+            # exact heap in the fold's commit. __fold_epoch orders heap
             # copies by recency (base rows read NULL → 0), so a folded
             # UPDATE beats its stale base copy at rebuild. Compaction
             # appends NOTHING extra: the merged fold rows already live
             # in the heap from their own fold's append.
             rows.select(mf["id_column"], mf["column"]).withColumn(
                 "__fold_epoch", F.lit(epoch).cast("long")
-            ).write.mode("append").parquet(
-                os.path.join(self.path, "vectors")
+            ).write.mode("overwrite").parquet(
+                stage_path(self.path, "vectors")
             )
+            heap_moves = artifact.staged_file_moves(self.path, "vectors")
 
         dim, m_, efc = mf["dim"], mf["m"], mf["ef_construction"]
         seed, mval = mf["seed"], mf["metric"]
@@ -924,17 +848,11 @@ class HNSWIndex:
             .mapInPandas(build_fold, _GRAPH_SCHEMA)
             .withColumn("fold_epoch", F.lit(epoch))
         )
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        old_mode = spark.conf.get(conf_key, "static")
-        try:
-            spark.conf.set(conf_key, "dynamic")
-            out.write.mode("overwrite").partitionBy("fold_epoch").parquet(
-                os.path.join(self.path, "graphs_delta")
-            )
-        finally:
-            spark.conf.set(conf_key, old_mode)
-        # commit point: watermark + shard registration + (on compact)
-        # the epoch-base cut-over land together
+        out.write.mode("overwrite").partitionBy("fold_epoch").parquet(
+            stage_path(self.path, "graphs_delta")
+        )
+        # watermark + shard registration + (on compact) the epoch-base
+        # cut-over land together in the manifest
         mf["fold_epoch"] = epoch
         mf["folded_seq"] = max_seq
         mf["next_shard_id"] = sid + 1
@@ -943,23 +861,21 @@ class HNSWIndex:
             mf["shards"] = int(mf["shards"]) - live_folds + 1
         else:
             mf["shards"] = int(mf["shards"]) + 1
-        with open(os.path.join(self.path, "manifest.json"), "w") as fh:
-            json.dump(mf, fh)
-        # best-effort cleanup — rows ≤ folded_seq are invisible anyway,
-        # and superseded fold-epoch dirs are unreachable via _graph_dirs
-        import shutil
-
-        shutil.rmtree(
-            os.path.join(self.path, "delta"), ignore_errors=True
+        epoch_dir = os.path.join("graphs_delta", f"fold_epoch={epoch}")
+        # superseded fold epochs are unreachable via _graph_dirs once
+        # the manifest lands, so they go after it with the delta
+        commit(
+            self.path,
+            moves=[(os.path.join(artifact.STAGE, epoch_dir), epoch_dir)]
+            + heap_moves,
+            writes={MANIFEST: mf},
+            deletes=[DELTA]
+            + [
+                os.path.join("graphs_delta", f"fold_epoch={e}")
+                for e in range(old_base + 1, old_epoch + 1)
+                if compact
+            ],
         )
-        if compact:
-            for e in range(old_base + 1, old_epoch + 1):
-                shutil.rmtree(
-                    os.path.join(
-                        self.path, "graphs_delta", f"fold_epoch={e}"
-                    ),
-                    ignore_errors=True,
-                )
         return self
 
     def add_delta(self, df: DataFrame) -> None:
@@ -986,19 +902,7 @@ class HNSWIndex:
         for the append-only ingest shape. IVF's fold, whose partitions
         are rewritable, handles updates incrementally."""
         mf = self.manifest
-        seq_file = os.path.join(self.path, "delta_seq")
-        seq = 0
-        if os.path.exists(seq_file):
-            with open(seq_file) as fh:
-                seq = int(fh.read().strip() or 0)
-        seq += 1
-        df.select(mf["id_column"], mf["column"]).withColumn(
-            "__delta_seq", F.lit(seq).cast("long")
-        ).write.mode("append").parquet(os.path.join(self.path, "delta"))
-        tmp = seq_file + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(seq))
-        os.replace(tmp, seq_file)
+        self._append_delta(df.select(mf["id_column"], mf["column"]))
 
     def rebuild(
         self, spark: SparkSession, path: Optional[str] = None
@@ -1006,59 +910,30 @@ class HNSWIndex:
         """Fold the delta into fresh per-shard graphs at ``path``
         (omitted/same path = in-place).
 
-        In-place rebuild stages the merged rows to a temp parquet
-        EAGERLY first, exactly like ``IVFIndex.rebuild``: ``build``
-        would otherwise overwrite the graphs/vectors directories its
-        input is still lazily reading from (Spark rejects the
-        self-overwrite) and remove the delta dir mid-lineage — a crash
-        there would lose the delta rows from the persisted heap."""
+        ``build`` stages its output inside the artifact and publishes it
+        with one journaled commit that also drops the folded-in delta
+        and fold shards, so an in-place rebuild reads the live graphs,
+        heap and delta lazily while it writes — exactly like
+        ``IVFIndex.rebuild``."""
+        self._writer_entry()
         mf = self.manifest
-        from pyspark.sql import Window
-
-        # delta rows WIN on duplicate ids (an aminsert carrying an
-        # updated vector must not lose to the stale stored row, which
-        # a bare dropDuplicates decides arbitrarily), and among
-        # multiple delta updates of one id the HIGHEST append sequence
-        # wins — (__src asc, __seq desc) is fully deterministic
-        w = Window.partitionBy(mf["id_column"]).orderBy(
-            F.col("__src").asc(), F.col("__seq").desc()
+        base = artifact.newest_per_id(
+            self._all_rows(spark, tag_source=True), mf["id_column"]
         )
-        base = (
-            self._all_rows(spark, tag_source=True)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__src", "__seq")
+        return HNSWIndex.build(
+            base,
+            mf["column"],
+            mf["id_column"],
+            path or self.path,
+            m=mf["m"],
+            ef_construction=mf["ef_construction"],
+            shards=mf["shards"],
+            metric=mf["metric"],
+            seed=mf["seed"],
+            quant=mf.get("quant", "f32"),
+            pq_splits=mf.get("pq_splits", 8),
+            pq_clusters=mf.get("pq_clusters", 16),
         )
-        import shutil
-        import tempfile
-
-        stage_root = None
-        try:
-            if path is None or os.path.realpath(path) == os.path.realpath(
-                self.path
-            ):
-                stage_root = tempfile.mkdtemp(prefix="hnsw_rebuild_")
-                staged = os.path.join(stage_root, "rows")
-                base.write.mode("overwrite").parquet(staged)
-                base = spark.read.parquet(staged)
-                path = self.path
-            return HNSWIndex.build(
-                base,
-                mf["column"],
-                mf["id_column"],
-                path,
-                m=mf["m"],
-                ef_construction=mf["ef_construction"],
-                shards=mf["shards"],
-                metric=mf["metric"],
-                seed=mf["seed"],
-                quant=mf.get("quant", "f32"),
-                pq_splits=mf.get("pq_splits", 8),
-                pq_clusters=mf.get("pq_clusters", 16),
-            )
-        finally:
-            if stage_root is not None:
-                shutil.rmtree(stage_root, ignore_errors=True)
 
     def _all_rows(
         self, spark: SparkSession, tag_source: bool = False
@@ -1078,14 +953,7 @@ class HNSWIndex:
         tying arbitrarily with its stale base-shard copy
         (review r7c #2)."""
         mf = self.manifest
-        # hamming rows are integer[] bit packs — a float cast would
-        # round words past 24 mantissa bits
-        vec_sql = (
-            "array<int>" if mf["metric"] == "hamming" else "array<float>"
-        )
-        vec_spark = T.ArrayType(
-            T.IntegerType() if mf["metric"] == "hamming" else T.FloatType()
-        )
+        vec_sql = self._vec_sql()
 
         def tag(df, src):
             for helper in ("__delta_seq", "__stored_seq"):
@@ -1138,35 +1006,7 @@ class HNSWIndex:
                     tag(read_delta(d), 0), allowMissingColumns=True
                 )
             return out
-        schema = T.StructType(
-            [
-                T.StructField(mf["id_column"], T.LongType()),
-                T.StructField(mf["column"], vec_spark),
-                T.StructField("__stored_seq", T.LongType()),
-            ]
-        )
-
-        def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                    g = HnswGraph.from_payload(bytes(payload))
-                    # DEQUANTIZED rows — for i8/pq the raw buffer holds
-                    # codes, not coordinates; dumping it verbatim would
-                    # feed garbage into a rebuild (lossy round-trip is
-                    # the quantized-index contract, vectors() doc).
-                    # __stored_seq = shard id: fold shards (appended
-                    # after the base build) hold strictly newer data.
-                    yield pd.DataFrame(
-                        {
-                            mf["id_column"]: g.ids,
-                            mf["column"]: [
-                                v.tolist() for v in g.vectors()
-                            ],
-                            "__stored_seq": [int(sid)] * g.n,
-                        }
-                    )
-
-        out = tag(self._graphs(spark).mapInPandas(dump, schema), 1)
+        out = tag(self._dump(self._graphs(spark)), 1)
         d = self._unfolded_delta(spark)
         if d is not None:
             out = out.unionByName(tag(read_delta(d), 0))

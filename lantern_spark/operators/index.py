@@ -32,6 +32,7 @@ balance; AQE handles residual skew at search.
 from __future__ import annotations
 
 import os
+from dataclasses import asdict
 from typing import Optional, Sequence
 
 import numpy as np
@@ -42,6 +43,16 @@ from pyspark.sql import types as T
 
 from lantern_spark.functions.distances import distance
 from lantern_spark.functions.vectors import vec_lit
+from lantern_spark.operators import artifact
+from lantern_spark.operators.artifact import (
+    DELTA,
+    DELTA_SEQ,
+    MANIFEST,
+    TOMBSTONES,
+    IndexArtifact,
+    commit,
+    stage_path,
+)
 from lantern_spark.operators.pq import _kmeans_fit
 from lantern_spark.types import IndexManifest, Metric, PQSpec
 
@@ -152,14 +163,6 @@ def _train_centroids_hamming(
     return from_uint32_words(cents)
 
 
-def _train_centroids(
-    df: DataFrame, column: str, nlist: int, seed: int, train_limit: int
-) -> np.ndarray:
-    return _train_centroids_from(
-        _collect_sample(df, column, train_limit), nlist, seed
-    )
-
-
 def _assign_expr(column: str, cents: np.ndarray, metric: Metric):
     """pandas UDF: nearest-centroid list id per row (vectorized numpy)."""
     if metric is Metric.HAMMING:
@@ -267,54 +270,25 @@ def _probe_lists_udf(spark: SparkSession, c: np.ndarray, ids, metric: str,
     return _rank_rows, bc
 
 
-class IVFIndex:
+class IVFIndex(IndexArtifact):
     """Handle over a persisted IVF index artifact."""
 
     def __init__(self, path: str, manifest: IndexManifest):
-        self.path = path
+        super().__init__(path)
         self.manifest = manifest
         # one-behind batched-search cache: (persisted assignment DF,
         # centroid broadcast) from the LAST search_batch call, released
         # at the next call so repeated inference batches on a
         # long-lived handle hold at most one snapshot (review r7 #8)
         self._batch_artifacts = None
-        # lazy-relation cache for the artifact's parquet dirs (r14
-        # guide §1.2/§7: `spark.read.parquet` over the partitioned
-        # lists dir costs ~200-250 ms of DRIVER time per call — file
-        # listing + schema resolution — and every search paid it for
-        # lists, delta, tombstones and codebook). Holds ONLY unexecuted
-        # DataFrame handles (no rows, no results: each action still
-        # scans parquet), validated by a directory fingerprint so a
-        # mutation through ANY handle — even another instance on the
-        # same path — is seen before the next read.
-        self._rel_cache: dict = {}
 
-    def _cached_read(self, spark: SparkSession, sub: str) -> DataFrame:
-        """`spark.read.parquet(self.path/sub)`, memoized while the
-        directory's fingerprint is unchanged. The fingerprint covers
-        direct children (name, mtime_ns, size): Spark never modifies a
-        file in place (writes create/delete part files, which bumps the
-        containing directory's mtime), so appends, dynamic partition
-        overwrites, manifest commits and rmtrees all change the token.
-        The session object is pinned in the value so `id(spark)` cannot
-        recycle across sessions."""
-        tok = _dir_fingerprint(os.path.join(self.path, sub))
-        if tok is None:
-            # Unscannable path (object-store URI, permission error,
-            # vanished dir): never cache — `None == None` would pin a
-            # stale handle forever. Drop any prior entry too.
-            self._rel_cache.pop(sub, None)
-            return spark.read.parquet(os.path.join(self.path, sub))
-        hit = self._rel_cache.get(sub)
-        if (
-            hit is not None
-            and hit[0] == tok
-            and hit[2] is spark
-        ):
-            return hit[1]
-        df = spark.read.parquet(os.path.join(self.path, sub))
-        self._rel_cache[sub] = (tok, df, spark)
-        return df
+    def _delta_keys(self) -> tuple:
+        mf = self.manifest
+        return (
+            mf.id_column,
+            mf.column,
+            int((mf.params or {}).get("folded_seq", 0)),
+        )
 
     def _release_batch_artifacts(self) -> None:
         """Release the previous batch's cached assignment + broadcast.
@@ -374,6 +348,7 @@ class IVFIndex:
                 "pq codes are trained in euclidean subspaces — "
                 "incompatible with a hamming (packed-bit) index"
             )
+        artifact.recover(path)
         sample = _collect_sample(df, column, train_limit)
         if sample.size == 0:
             raise ValueError(f"no non-null vectors in column {column!r}")
@@ -434,7 +409,7 @@ class IVFIndex:
             from lantern_spark._localpq import write_local_parquet
 
             write_local_parquet(
-                os.path.join(path, "pq_codebook"),
+                stage_path(path, "pq_codebook"),
                 {
                     "subvector_id": [int(r[0]) for r in cb_rows],
                     "centroid_id": [int(r[1]) for r in cb_rows],
@@ -469,25 +444,14 @@ class IVFIndex:
         n_write = _sized_list_buckets(
             df.sparkSession, nlist, n_est, dim
         )
+        # staged inside the artifact: an in-place rebuild reads the live
+        # lists lazily while this writes
         assigned.repartition(n_write, F.col("list_id")).write.mode(
             "overwrite"
-        ).partitionBy("list_id").parquet(os.path.join(path, "lists"))
+        ).partitionBy("list_id").parquet(stage_path(path, "lists"))
         # row count piggybacks on the write job via Observation — no
         # second pass, no extra job
         n = int(obs.get["n"])
-        # a reused path may carry stale delta/tombstone dirs from an
-        # earlier index generation — they would silently union into
-        # searches of the fresh build (ADVICE r2). Removed only AFTER
-        # the lists write succeeded, so a crash mid-build never drops
-        # un-folded updates.
-        import shutil
-
-        shutil.rmtree(os.path.join(path, "delta"), ignore_errors=True)
-        shutil.rmtree(os.path.join(path, "tombstones"), ignore_errors=True)
-        try:
-            os.remove(os.path.join(path, "delta_seq"))
-        except OSError:
-            pass
         manifest = IndexManifest(
             kind="ivf",
             column=column,
@@ -525,12 +489,22 @@ class IVFIndex:
                 ),
             },
         )
-        manifest.save(path)
+        # one commit swaps the lists (and codebook) in and drops the
+        # delta/tombstones of an earlier generation at the same path —
+        # they would silently union into searches of the fresh build
+        # (ADVICE r2)
+        staged = ["lists"] + (["pq_codebook"] if pq is not None else [])
+        commit(
+            path,
+            moves=[(os.path.join(artifact.STAGE, d), d) for d in staged],
+            writes={MANIFEST: asdict(manifest)},
+            deletes=[DELTA, TOMBSTONES, DELTA_SEQ],
+        )
         return cls(path, manifest)
 
     @classmethod
     def load(cls, path: str) -> "IVFIndex":
-        return cls(path, IndexManifest.load(path))
+        return cls(path, IndexManifest.from_dict(artifact.read_json(path), path))
 
     # -- read paths -----------------------------------------------------
 
@@ -639,9 +613,8 @@ class IVFIndex:
             out = s if out is None else out.unionByName(s)
         if round_digits is not None:
             out = out.withColumn(dist_col, F.round(dist_col, round_digits))
-        tomb_path = os.path.join(self.path, "tombstones")
-        if _path_has_parquet(tomb_path):
-            tombs = self._cached_read(spark, "tombstones")
+        if self._has(TOMBSTONES):
+            tombs = self._cached_read(spark, TOMBSTONES)
             out = out.join(
                 F.broadcast(tombs), on=mf.id_column, how="left_anti"
             )
@@ -751,10 +724,9 @@ class IVFIndex:
                 distance(F.col(mf.column), F.col(query_col), mf.metric),
             ).select(qid_col, mf.id_column, dist_col)
             out = s if out is None else out.unionByName(s)
-        tomb_path = os.path.join(self.path, "tombstones")
-        if _path_has_parquet(tomb_path):
+        if self._has(TOMBSTONES):
             out = out.join(
-                F.broadcast(self._cached_read(spark, "tombstones")),
+                F.broadcast(self._cached_read(spark, TOMBSTONES)),
                 on=mf.id_column,
                 how="left_anti",
             )
@@ -872,9 +844,8 @@ class IVFIndex:
                     ddist.alias(dist_col),
                 )
             )
-        tomb_path = os.path.join(self.path, "tombstones")
-        if _path_has_parquet(tomb_path):
-            tombs = self._cached_read(spark, "tombstones")
+        if self._has(TOMBSTONES):
+            tombs = self._cached_read(spark, TOMBSTONES)
             out = out.join(
                 F.broadcast(tombs), on=mf.id_column, how="left_anti"
             )
@@ -892,89 +863,34 @@ class IVFIndex:
         Each append stamps a monotonic ``__delta_seq`` (the HNSW
         convention): among multiple updates of one id the highest
         sequence wins at fold/rebuild, and the manifest's
-        ``folded_seq`` watermark makes folds crash-consistent — rows
-        at-or-below it are invisible even if the delta-dir cleanup
-        never ran."""
+        ``folded_seq`` watermark hides rows a fold already moved into
+        the lists (artifact.IndexArtifact._unfolded_delta)."""
         extras = [
             c
             for c in (self.manifest.params or {}).get("extra_columns", [])
             if c in df.columns
         ]
-        seq_file = os.path.join(self.path, "delta_seq")
-        seq = 1
-        if os.path.exists(seq_file):
-            with open(seq_file) as fh:
-                seq = int(fh.read().strip()) + 1
-        df.select(
-            self.manifest.id_column, self.manifest.column, *extras
-        ).withColumn(
-            "__delta_seq", F.lit(seq).cast("long")
-        ).write.mode("append").parquet(os.path.join(self.path, "delta"))
-        with open(seq_file, "w") as fh:
-            fh.write(str(seq))
-
-    def _unfolded_delta(self, spark: SparkSession):
-        """Delta rows not yet folded (``__delta_seq`` > the manifest's
-        ``folded_seq`` watermark), newest row per id, or None. Folded
-        rows may linger in the delta dir after a crash between the
-        fold's manifest commit and its cleanup — the watermark keeps
-        them out of every search and future fold (they already live in
-        the list partitions). The per-id dedup (highest sequence wins)
-        means two add_delta updates of one id surface as ONE row in
-        every search, matching what the eventual fold/rebuild keeps."""
-        delta_path = os.path.join(self.path, "delta")
-        if not _path_has_parquet(delta_path):
-            return None
-        d = self._cached_read(spark, "delta")
-        folded = int((self.manifest.params or {}).get("folded_seq", 0))
-        if "__delta_seq" in d.columns:
-            from pyspark.sql import Window
-
-            # xxhash64(vector) breaks ties BETWEEN rows sharing one
-            # append's sequence (an input batch carrying the same id
-            # twice): content-keyed, so the winner is identical across
-            # runs/layouts — and because fold/rebuild consume THIS
-            # frame, search and fold agree by construction
-            w = Window.partitionBy(self.manifest.id_column).orderBy(
-                F.col("__delta_seq").desc(),
-                F.xxhash64(F.col(self.manifest.column)).desc(),
-            )
-            return (
-                d.filter(
-                    F.coalesce(F.col("__delta_seq"), F.lit(0)) > folded
-                )
-                .withColumn("__drn", F.row_number().over(w))
-                .filter(F.col("__drn") == 1)
-                .drop("__drn")
-            )
-        # seq-less legacy delta: can never be partially folded
-        # (fold_delta stamps folded_seq only from stamped rows)
-        return d if folded == 0 else None
+        self._append_delta(
+            df.select(self.manifest.id_column, self.manifest.column, *extras)
+        )
 
     def delete(self, ids_df: DataFrame) -> None:
         """ambulkdelete analog: tombstone ids (delete.c:15-73 marks
         labels invalid without reclaiming — same contract)."""
-        ids_df.select(self.manifest.id_column).write.mode("append").parquet(
-            os.path.join(self.path, "tombstones")
-        )
+        self._writer_entry()
+        self._append(TOMBSTONES, ids_df.select(self.manifest.id_column))
 
     def rebuild(self, spark: SparkSession, path: Optional[str] = None) -> "IVFIndex":
         """Fold delta − tombstones into a fresh index (reindex analog).
 
-        In-place rebuild (``path`` omitted) stages the merged rows to a
-        temp parquet first: ``build`` would otherwise overwrite the
-        ``lists`` directory it is still lazily reading from, which Spark
-        rejects. The folded-in delta/tombstone artifacts are then
-        removed so the fresh index does not re-apply them.
+        ``build`` stages its output inside the artifact and publishes it
+        with one journaled commit that also drops the folded-in delta
+        and tombstones, so an in-place rebuild (``path`` omitted) reads
+        the live lists lazily while it writes.
         """
+        self._writer_entry()
         mf = self.manifest
-        from pyspark.sql import Window
-
-        # codes are re-derived by build (delta rows have none); delta
-        # rows WIN on duplicate ids and the newest __delta_seq wins
-        # among updates — (__src asc, __seq desc), the HNSW rebuild
-        # rule, replacing the old nondeterministic dropDuplicates
-        # (review r7 #7)
+        # codes are re-derived by build (delta rows have none)
         base = (
             self.lists(spark)
             .drop("list_id", "__pq_codes")
@@ -993,54 +909,27 @@ class IVFIndex:
             base = base.unionByName(
                 d.withColumn("__src", F.lit(0)), allowMissingColumns=True
             )
-        w = Window.partitionBy(mf.id_column).orderBy(
-            F.col("__src").asc(), F.col("__seq").desc()
-        )
-        base = (
-            base.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__src", "__seq")
-        )
-        if _path_has_parquet(os.path.join(self.path, "tombstones")):
+        base = artifact.newest_per_id(base, mf.id_column)
+        if self._has(TOMBSTONES):
             base = base.join(
-                F.broadcast(spark.read.parquet(os.path.join(self.path, "tombstones"))),
+                F.broadcast(self._cached_read(spark, TOMBSTONES)),
                 on=mf.id_column,
                 how="left_anti",
             )
-        import shutil
-        import tempfile
-
-        stage_root = None
-        try:
-            if path is None or path == self.path:
-                # stage the merged rows eagerly: build would otherwise
-                # overwrite the lists dir it is still lazily reading.
-                # delta/tombstones are NOT deleted here — build() folds
-                # them in and clears them only after the fresh lists
-                # land, so a crash mid-build loses nothing (ADVICE r2).
-                stage_root = tempfile.mkdtemp(prefix="lantern_rebuild_")
-                stage = os.path.join(stage_root, "base")
-                base.write.parquet(stage)
-                base = spark.read.parquet(stage)
-            return IVFIndex.build(
-                base,  # already deduped deterministically above
-                mf.column,
-                mf.id_column,
-                path or self.path,
-                metric=mf.metric,
-                nlist=mf.nlist,
-                seed=mf.params.get("seed", 42),
-                train_limit=mf.params.get("train_limit", 20000),
-                extra_columns=mf.params.get("extra_columns") or None,
-                pq=(
-                    PQSpec(**mf.params["pq"]) if mf.params.get("pq") else None
-                ),
-                opq=bool(mf.params.get("opq_rotation")),
-                opq_iters=mf.params.get("opq_iters", 8),
-            )
-        finally:
-            if stage_root is not None:
-                shutil.rmtree(stage_root, ignore_errors=True)
+        return IVFIndex.build(
+            base,  # already deduped deterministically above
+            mf.column,
+            mf.id_column,
+            path or self.path,
+            metric=mf.metric,
+            nlist=mf.nlist,
+            seed=mf.params.get("seed", 42),
+            train_limit=mf.params.get("train_limit", 20000),
+            extra_columns=mf.params.get("extra_columns") or None,
+            pq=PQSpec(**mf.params["pq"]) if mf.params.get("pq") else None,
+            opq=bool(mf.params.get("opq_rotation")),
+            opq_iters=mf.params.get("opq_iters", 8),
+        )
 
     def fold_delta(self, spark: SparkSession) -> "IVFIndex":
         """Incremental reindex: fold delta + tombstones by rewriting
@@ -1061,37 +950,33 @@ class IVFIndex:
            with the existing centroids (and PQ-encoded with the
            existing codebook); affected = victim ∪ receiving lists —
            a bounded driver collect (≤ nlist);
-        3. the affected lists' merged rows stage to a temp dir (Spark
-           cannot overwrite a path it is lazily reading), then land
-           via DYNAMIC partition overwrite — only those ``list_id=``
-           directories are replaced; unaffected partitions are never
-           read, shuffled, or rewritten. Lists emptied by the fold are
-           removed explicitly (dynamic overwrite skips absent
-           partitions).
+        3. the affected lists' merged rows are written, partitioned by
+           ``list_id``, to the artifact's stage dir (Spark cannot
+           overwrite a path it is lazily reading) and published by ONE
+           journaled commit (operators/artifact.py): per-list directory
+           moves, a delete for each list the fold emptied, the manifest
+           — ``folded_seq`` watermark, ``fold_epoch``, row count — and
+           then the removal of the consumed delta and tombstones.
+           Unaffected partitions are never read, shuffled, or
+           rewritten.
 
-        Crash consistency (review r7 #1/#4/#7): the manifest commit —
-        ``folded_seq`` watermark + ``fold_epoch`` — happens AFTER the
-        partition overwrite and BEFORE the delta/tombstone cleanup.
-        A crash before the commit re-applies idempotently on the next
-        fold (delta ids always replace existing copies); a crash after
-        it leaves lingering delta rows that the watermark already
-        hides from every search. Among multiple delta updates of one
-        id the highest ``__delta_seq`` wins (the rebuild rule), and a
-        delta row that was ALSO tombstoned folds as a deletion, never
-        a resurrection. ``fold_epoch`` bumps so attached per-cell
-        graph tiers detect staleness even when the row count nets out
-        unchanged.
+        Crash consistency: a kill before the journal is written leaves
+        the pre-fold artifact (the stage is dropped by the next writer
+        call, which re-folds from the intact delta); a kill after it is
+        finished by the next writer call, which replays the journal.
+        Among multiple delta updates of one id the highest
+        ``__delta_seq`` wins (the rebuild rule), and a delta row that
+        was ALSO tombstoned folds as a deletion, never a resurrection.
+        ``fold_epoch`` bumps so attached per-cell graph tiers detect
+        staleness even when the row count nets out unchanged.
 
         Scale contract: delta/tombstone volume per fold ≪ corpus (that
         is the point of folding); the removal-id set broadcasts.
         """
-        import shutil
-        import uuid
-
+        self._writer_entry()
         mf = self.manifest
-        tomb_path = os.path.join(self.path, "tombstones")
         raw_delta = self._unfolded_delta(spark)
-        has_tomb = _path_has_parquet(tomb_path)
+        has_tomb = self._has(TOMBSTONES)
         if raw_delta is None and not has_tomb:
             return self
         if raw_delta is not None and "__delta_seq" not in raw_delta.columns:
@@ -1113,7 +998,7 @@ class IVFIndex:
         # use with AQE's size-derived partitioning and is shared by
         # RDD identity. The chain bounds storage-mode leaves (cuts
         # live until the staged lists land → keep=3, released after
-        # the rename commit).
+        # the staged write).
         from lantern_spark.plans.lineage import CutChain, cut_lineage
 
         _fold_chain = CutChain(keep=3)
@@ -1149,7 +1034,7 @@ class IVFIndex:
                 if has_tomb:
                     live = live.join(
                         F.broadcast(
-                            self._cached_read(spark, "tombstones").select(
+                            self._cached_read(spark, TOMBSTONES).select(
                                 mf.id_column
                             )
                         ),
@@ -1179,7 +1064,7 @@ class IVFIndex:
                 # FIXED-COST bound: every saved action matters at
                 # stream cadence)
         if has_tomb:
-            tombs = self._cached_read(spark, "tombstones").select(mf.id_column)
+            tombs = self._cached_read(spark, TOMBSTONES).select(mf.id_column)
             # tombstone appends can repeat ids (and overlap delta ids)
             # — distinct only when tombs are in play; the delta-only
             # removal set is unique by construction
@@ -1224,18 +1109,18 @@ class IVFIndex:
         n_delta = sum(r["c"] for r in stats if not r["__vic"])
         affected = {r["list_id"] for r in stats}
         affected_ids = sorted(affected)
-        delta_path = os.path.join(self.path, "delta")
         if not affected_ids:
             # no list changes (tombstones of absent ids, or delta rows
-            # all tombstoned-and-absent) — still commit the watermark
-            # BEFORE cleanup so consumed delta rows stay invisible if
-            # the rmtree is lost to a crash
+            # all tombstoned-and-absent) — the commit only advances the
+            # watermark and drops the consumed delta/tombstones
             _fold_chain.release()
             if raw_delta is not None:
                 mf.params = {**(mf.params or {}), "folded_seq": max_seq}
-                mf.save(self.path)
-                shutil.rmtree(delta_path, ignore_errors=True)
-            shutil.rmtree(tomb_path, ignore_errors=True)
+            commit(
+                self.path,
+                writes={MANIFEST: asdict(mf)} if raw_delta is not None else {},
+                deletes=[DELTA, TOMBSTONES],
+            )
             return self
 
         existing = (
@@ -1275,79 +1160,19 @@ class IVFIndex:
                 delta, allowMissingColumns=True
             )
 
-        # ONE partitioned write to a stage dir INSIDE the artifact
+        # ONE partitioned write to the stage dir INSIDE the artifact
         # (same filesystem by construction), committed by per-list
-        # directory renames (r15, guide §6/§1.4). The former shape —
-        # unpartitioned staged write → read-back → dynamic partition
-        # overwrite — paid a second full pass (shuffle + write) over
-        # the staged rows plus a listing job; the renames are
-        # driver-side metadata ops. Crash contract unchanged from the
-        # dynamic overwrite (which also replaces partition dirs
-        # non-atomically as a set): a crash before the manifest commit
-        # re-applies idempotently on the next fold, and replaced dirs
-        # move to a trash dir first (never deleted before the new dir
-        # is in place), so no window exists where a list's rows exist
-        # nowhere on disk.
-        stage_root = os.path.join(
-            self.path, f"lists__fold_stage-{uuid.uuid4().hex[:8]}"
+        # directory moves — driver-side metadata ops, no second pass
+        # over the rows (r15, guide §6/§1.4). Each list's rows hash to
+        # exactly one task (the build write's file-count discipline),
+        # bounded at one task per affected list so a small fold doesn't
+        # fan into shuffle-partition-many near-empty write tasks.
+        (
+            merged.repartition(max(1, len(affected_ids)), F.col("list_id"))
+            .write.partitionBy("list_id")
+            .parquet(stage_path(self.path, "lists"))
         )
-        trash_root = os.path.join(
-            self.path, f"lists__fold_trash-{uuid.uuid4().hex[:8]}"
-        )
-        try:
-            # each list's rows hash to exactly one task (the build
-            # write's file-count discipline), bounded at one task per
-            # affected list so a small fold doesn't fan into
-            # shuffle-partition-many near-empty write tasks
-            (
-                merged.repartition(
-                    max(1, len(affected_ids)), F.col("list_id")
-                )
-                .write.partitionBy("list_id")
-                .parquet(stage_root)
-            )
-            surviving = {
-                int(name.split("=", 1)[1])
-                for name in os.listdir(stage_root)
-                if name.startswith("list_id=")
-            }
-            os.makedirs(trash_root, exist_ok=True)
-            lists_root = os.path.join(self.path, "lists")
-            try:
-                for lid in affected_ids:
-                    dst = os.path.join(lists_root, f"list_id={lid}")
-                    if os.path.isdir(dst):
-                        os.rename(
-                            dst, os.path.join(trash_root, f"list_id={lid}")
-                        )
-                    if lid in surviving:
-                        os.rename(
-                            os.path.join(stage_root, f"list_id={lid}"), dst
-                        )
-                    # a list emptied by the fold has no staged dir: its
-                    # old directory stays in the trash (dynamic
-                    # overwrite used to rmtree it)
-            except BaseException:
-                # roll the already-trashed dirs back before the trash
-                # is dropped — a failed fold must leave the pre-fold
-                # rows on disk (the idempotent-refold contract)
-                for name in os.listdir(trash_root):
-                    back = os.path.join(lists_root, name)
-                    if not os.path.exists(back):
-                        try:
-                            os.rename(os.path.join(trash_root, name), back)
-                        except OSError:
-                            pass
-                raise
-        finally:
-            shutil.rmtree(trash_root, ignore_errors=True)
-            shutil.rmtree(stage_root, ignore_errors=True)
         _fold_chain.release()
-        # COMMIT: watermark + epoch land before cleanup — a crash after
-        # this point leaves delta rows the watermark already hides
-        # (review r7 #4); a crash before it re-applies idempotently
-        # (removal includes every delta id, so re-folding replaces
-        # rather than duplicates)
         mf.num_vectors = int(mf.num_vectors) - int(n_removed) + int(n_delta)
         mf.params = {
             **(mf.params or {}),
@@ -1357,9 +1182,14 @@ class IVFIndex:
             # tier refreshes ONLY these (IVFGraphIndex.refresh)
             "last_fold_lists": [int(x) for x in affected_ids],
         }
-        mf.save(self.path)
-        shutil.rmtree(delta_path, ignore_errors=True)
-        shutil.rmtree(tomb_path, ignore_errors=True)
+        commit(
+            self.path,
+            moves=artifact.partition_moves(
+                self.path, "lists", "list_id", affected_ids
+            ),
+            writes={MANIFEST: asdict(mf)},
+            deletes=[DELTA, TOMBSTONES],
+        )
         return self
 
     # -- validation -----------------------------------------------------
@@ -1402,58 +1232,6 @@ class IVFIndex:
             "problems": problems,
             "recall_at_k": recall,
         }
-
-
-def _dir_fingerprint(path: str):
-    """Cheap fs token for a parquet directory: sorted (name, mtime_ns,
-    size) of DIRECT children, plus — for child DIRECTORIES (partition
-    dirs like ``list_id=N``) — one shallow scandir of the child's own
-    entries. The second level matters on filesystems with coarse
-    timestamps (1 s on HFS+/some NFS): a dynamic partition overwrite
-    replaces part files inside ``list_id=N`` without changing the
-    subdir's name or size, so with a same-tick mtime the shallow token
-    would miss the rewrite; the part-file names (UUID-bearing) and
-    sizes cannot collide across writes.
-
-    Returns ``None`` when the path cannot be scanned — missing dir,
-    permission error, or a non-local URI (``s3://…`` raises ENOENT or
-    similar locally). Callers MUST treat ``None`` as "never cache":
-    ``None == None`` would otherwise hit a stale entry forever."""
-    try:
-        out = []
-        with os.scandir(path) as it:
-            for e in it:
-                st = e.stat(follow_symlinks=False)
-                if e.is_dir(follow_symlinks=False):
-                    try:
-                        with os.scandir(e.path) as sub:
-                            inner = tuple(
-                                sorted(
-                                    (
-                                        s.name,
-                                        s.stat(follow_symlinks=False).st_mtime_ns,
-                                        s.stat(follow_symlinks=False).st_size,
-                                    )
-                                    for s in sub
-                                )
-                            )
-                    except OSError:
-                        return None
-                else:
-                    inner = None
-                out.append((e.name, st.st_mtime_ns, st.st_size, inner))
-        return tuple(sorted(out))
-    except OSError:
-        return None
-
-
-def _path_has_parquet(path: str) -> bool:
-    if not os.path.isdir(path):
-        return False
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
 
 
 def recall_at_k(

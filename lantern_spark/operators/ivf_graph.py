@@ -41,7 +41,6 @@ tolerates them better at higher per-query cost.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator, Optional, Sequence
 
@@ -56,7 +55,9 @@ from lantern_spark.operators.hnsw import (
     HnswGraph,
     _GRAPH_SCHEMA,
 )
-from lantern_spark.operators.index import IVFIndex, _path_has_parquet
+from lantern_spark.operators import artifact
+from lantern_spark.operators.artifact import TOMBSTONES, commit, stage_path
+from lantern_spark.operators.index import IVFIndex
 from lantern_spark.types import Metric, check_format_version
 
 _CELL_DIR = "cell_graphs"
@@ -122,6 +123,7 @@ class IVFGraphIndex:
         artifact. Map-side only after the groupBy co-shuffle; each cell
         graph serializes to one parquet row (the HNSW shard contract,
         including the payload ceiling)."""
+        ivf._writer_entry()
         mf = ivf.manifest
         build_cell = _cell_builder(
             mf.dim, mf.metric, mf.id_column, mf.column,
@@ -135,11 +137,11 @@ class IVFGraphIndex:
             .groupBy("list_id")
             .applyInPandas(build_cell, _GRAPH_SCHEMA)
             # partitioned by cell so an incremental refresh after
-            # fold_delta can dynamic-overwrite ONLY the affected
-            # cells' graphs (r7; flat pre-r7 artifacts still load)
+            # fold_delta can replace ONLY the affected cells' graphs
+            # (r7; flat pre-r7 artifacts still load)
             .write.mode("overwrite")
             .partitionBy("shard_id")
-            .parquet(os.path.join(ivf.path, _CELL_DIR))
+            .parquet(stage_path(ivf.path, _CELL_DIR))
         )
         meta = {
             "m": m,
@@ -157,8 +159,11 @@ class IVFGraphIndex:
             "fold_epoch": int((mf.params or {}).get("fold_epoch", 0)),
             "format_version": "1.1",
         }
-        with open(os.path.join(ivf.path, _META_FILE), "w") as fh:
-            json.dump(meta, fh)
+        commit(
+            ivf.path,
+            moves=[(os.path.join(artifact.STAGE, _CELL_DIR), _CELL_DIR)],
+            writes={_META_FILE: meta},
+        )
         return cls(ivf, meta)
 
     @classmethod
@@ -168,8 +173,7 @@ class IVFGraphIndex:
             if isinstance(path_or_ivf, IVFIndex)
             else IVFIndex.load(path_or_ivf)
         )
-        with open(os.path.join(ivf.path, _META_FILE)) as fh:
-            meta = json.load(fh)
+        meta = artifact.read_json(ivf.path, _META_FILE)
         check_format_version(
             meta.setdefault("format_version", "1.0"), ivf.path
         )
@@ -240,12 +244,14 @@ class IVFGraphIndex:
         IVF changed. When EXACTLY one :meth:`IVFIndex.fold_delta`
         happened since this tier was built (and the artifact uses the
         r7 partitioned layout), only the fold's touched cells rebuild
-        — a dynamic partition overwrite of their ``shard_id=`` graph
-        dirs, the same ≪-corpus maintenance contract as the fold
-        itself. Anything else (multiple folds, nlist change, a pre-r7
-        flat artifact) falls back to a full re-attach with this tier's
-        own (m, ef_construction, seed) params. Idempotent; returns a
+        — their ``shard_id=`` graph dirs are staged and moved in by one
+        journaled commit (operators/artifact.py), the same ≪-corpus
+        maintenance contract as the fold itself. Anything else
+        (multiple folds, nlist change, a pre-r7 flat artifact) falls
+        back to a full re-attach with this tier's own (m,
+        ef_construction, seed) params. Idempotent; returns a
         fresh handle (``self`` when incremental)."""
+        self.ivf._writer_entry()
         ivf, mf = self.ivf, self.ivf.manifest
         fold_epoch = int((mf.params or {}).get("fold_epoch", 0))
         if (
@@ -282,37 +288,25 @@ class IVFGraphIndex:
             self.meta["seed"],
             self.meta.get("max_payload_bytes", MAX_PAYLOAD_BYTES),
         )
-        sub = (
+        (
             ivf.lists(spark)
             .filter(F.col("list_id").isin([int(x) for x in touched]))
             .select("list_id", mf.id_column, mf.column)
+            .groupBy("list_id")
+            .applyInPandas(build_cell, _GRAPH_SCHEMA)
+            .write.mode("overwrite")
+            .partitionBy("shard_id")
+            .parquet(stage_path(ivf.path, _CELL_DIR))
         )
-        surviving = {
-            r["list_id"] for r in sub.select("list_id").distinct().collect()
-        }
-        out = sub.groupBy("list_id").applyInPandas(
-            build_cell, _GRAPH_SCHEMA
-        )
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        old_mode = spark.conf.get(conf_key, "static")
-        try:
-            spark.conf.set(conf_key, "dynamic")
-            out.write.mode("overwrite").partitionBy("shard_id").parquet(
-                cell_dir
-            )
-        finally:
-            spark.conf.set(conf_key, old_mode)
-        import shutil
-
-        for lid in set(int(x) for x in touched) - surviving:
-            shutil.rmtree(
-                os.path.join(cell_dir, f"shard_id={lid}"),
-                ignore_errors=True,
-            )
         self.meta["num_vectors"] = mf.num_vectors
         self.meta["fold_epoch"] = fold_epoch
-        with open(os.path.join(ivf.path, _META_FILE), "w") as fh:
-            json.dump(self.meta, fh)
+        commit(
+            ivf.path,
+            moves=artifact.partition_moves(
+                ivf.path, _CELL_DIR, "shard_id", sorted(int(x) for x in touched)
+            ),
+            writes={_META_FILE: self.meta},
+        )
         return self
 
     def search(
@@ -408,9 +402,8 @@ class IVFGraphIndex:
                 .withColumn("n_dist", F.lit(0).cast("long"))
             )
             out = out.unionByName(delta)
-        tomb_path = os.path.join(ivf.path, "tombstones")
-        if _path_has_parquet(tomb_path):
-            tombs = spark.read.parquet(tomb_path).select(
+        if ivf._has(TOMBSTONES):
+            tombs = ivf._cached_read(spark, TOMBSTONES).select(
                 F.col(mf.id_column).cast("long").alias(mf.id_column)
             )
             out = out.join(
@@ -566,9 +559,8 @@ class IVFGraphIndex:
                 )
             )
             out = out.unionByName(delta)
-        tomb_path = os.path.join(ivf.path, "tombstones")
-        if _path_has_parquet(tomb_path):
-            tombs = spark.read.parquet(tomb_path).select(
+        if ivf._has(TOMBSTONES):
+            tombs = ivf._cached_read(spark, TOMBSTONES).select(
                 F.col(mf.id_column).cast("long").alias(mf.id_column)
             )
             out = out.join(

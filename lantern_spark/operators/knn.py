@@ -232,9 +232,7 @@ def _shared_index_candidates(
     None) whenever the single-scan rewrite cannot reproduce
     ``idx.search`` verbatim: mixed/missing indexes, pending delta
     rows, or live tombstones."""
-    import os as _os
-
-    from lantern_spark.operators.index import IVFIndex, _path_has_parquet
+    from lantern_spark.operators.index import IVFIndex
 
     if indexes is None or len(terms) < 2:
         return None
@@ -257,9 +255,7 @@ def _shared_index_candidates(
             f"rebuild the index or match metrics"
         )
     spark = df.sparkSession
-    if idx0._unfolded_delta(spark) is not None or _path_has_parquet(
-        _os.path.join(idx0.path, "tombstones")
-    ):
+    if idx0._unfolded_delta(spark) is not None or idx0._has("tombstones"):
         return None
     mf = idx0.manifest
     lit_dtype = (

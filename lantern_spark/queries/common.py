@@ -60,7 +60,3 @@ def duck_cos(a: str, b: str) -> str:
         f" / sqrt(list_sum(list_transform({a}, x -> x*x))"
         f"      * list_sum(list_transform({b}, x -> x*x))))"
     )
-
-
-def duck_inner(a: str, b: str) -> str:
-    return f"(- list_sum(list_transform(list_zip({a}, {b}), x -> x[1]*x[2])))"

@@ -48,25 +48,6 @@ def dedup_exact_survivors(spark, sf_dir):
     )
 
 
-def minhash_signatures(spark, sf_dir):
-    """MinHash signatures (4 hashes shown as columns for hashability).
-
-    Retired from the oracle roster in r7 (50-query driver cap): the
-    signature kernel is already hash-checked THROUGH
-    ``lsh_candidate_pairs`` and ``dedup_components`` (both replay the
-    full shingle→minhash pipeline in SQL), so this standalone entry
-    was redundant evidence; its slot funds ``semdedup_survivors``."""
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_docs(docs, "text", "doc_id", n_hashes=4)
-    return sigs.select(
-        "doc_id",
-        F.element_at("sig", 1).alias("m0"),
-        F.element_at("sig", 2).alias("m1"),
-        F.element_at("sig", 3).alias("m2"),
-        F.element_at("sig", 4).alias("m3"),
-    )
-
-
 @register(
     "lsh_candidate_pairs",
     f"""

@@ -173,55 +173,6 @@ def pq_adc_topk(spark, sf_dir):
     )
 
 
-# float→float16 round-to-nearest-even, expressed in SQL: quantum =
-# 2^(e-10) (2^-24 subnormal), half-even on the exact quotient. Exact
-# because inputs are float32 values and quanta are powers of two.
-def _f16_sql(x: str) -> str:
-    a = f"abs({x})"
-    e0 = f"floor(log2({a}))"
-    e1 = (
-        f"(CASE WHEN 2.0 ** {e0} > {a} THEN {e0} - 1 "
-        f"WHEN 2.0 ** ({e0} + 1) <= {a} THEN {e0} + 1 ELSE {e0} END)"
-    )
-    q = f"(CASE WHEN {e1} < -14 THEN 2.0 ** (-24) ELSE 2.0 ** ({e1} - 10) END)"
-    r = f"({x} / {q})"
-    r2 = f"floor({r})"
-    frac = f"({r} - {r2})"
-    rn = (
-        f"(CASE WHEN {frac} > 0.5 THEN {r2} + 1 "
-        f"WHEN {frac} < 0.5 THEN {r2} "
-        f"ELSE {r2} + (CASE WHEN {r2} % 2 = 0 THEN 0 ELSE 1 END) END)"
-    )
-    return f"(CASE WHEN {x} = 0 THEN 0.0 ELSE {rn} * {q} END)"
-
-
-def sq_f16_roundtrip(spark, sf_dir):
-    """f16 round-trip (quant_bits=16 analog): per-row max absolute
-    error.
-
-    Retired from the oracle roster in r7 (50-query driver cap): the
-    f16 kernel stays hash-pinned in pytest (`test_bloom_sq.py` golden
-    bit patterns) and the scalar-quant family is already oracle-checked
-    via `sq_i8_roundtrip` + `sq_b1_hamming_top10`; this slot funds
-    `pii_redact_docs`. The arithmetic-f16 oracle SQL survives in
-    `_f16_sql` (git history has the registered form)."""
-    from lantern_spark.operators.pq import sq_round_f16
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.withColumn("f16", sq_round_f16("embedding"))
-    return q.select(
-        "vec_id",
-        F.round(
-            F.aggregate(
-                F.zip_with("embedding", "f16", lambda a, b: F.abs(a - b)),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, x),
-            ),
-            6,
-        ).alias("max_abs_err"),
-    )
-
-
 @register(
     "ivf_pq_adc_top10",
     f"""

@@ -26,7 +26,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lantern_spark.operators.index import IVFIndex, _path_has_parquet
+from lantern_spark.operators.artifact import _path_has_parquet
 
 
 def incremental_index_job(

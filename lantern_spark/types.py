@@ -14,11 +14,9 @@ Reference parity:
 
 from __future__ import annotations
 
-import json
 import os
-from dataclasses import asdict, dataclass, field
+from dataclasses import dataclass, field
 from enum import Enum
-from typing import Optional
 
 
 class Metric(str, Enum):
@@ -102,6 +100,9 @@ class IndexManifest:
 
     Analog of HnswIndexHeaderPage (external_index.h:38-56): stores the
     params needed to open/search the index without rescanning data.
+    Stored as the artifact's ``manifest.json``, which only the
+    journaled commit of operators/artifact.py writes (tmp + atomic
+    replace), so a killed writer never leaves a torn manifest.
     """
 
     kind: str  # "ivf" | "ivf_hnsw" | "flat"
@@ -124,15 +125,8 @@ class IndexManifest:
     # failing obscurely mid-search; minors are read-compatible
     format_version: str = "1.1"
 
-    def save(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "manifest.json"), "w") as f:
-            json.dump(asdict(self), f, indent=2)
-
     @classmethod
-    def load(cls, path: str) -> "IndexManifest":
-        with open(os.path.join(path, "manifest.json")) as f:
-            d = json.load(f)
+    def from_dict(cls, d: dict, path: str) -> "IndexManifest":
         if d.get("magic") != "lantern-spark-index":
             raise ValueError(f"Not a lantern-spark index at {path}")
         check_format_version(d.setdefault("format_version", "1.0"), path)
@@ -334,11 +328,3 @@ def load_events(spark, sf_dir: str):
             ),
         )
     return df
-
-
-def load_tables(spark, sf_dir: str, names: Optional[list] = None) -> dict:
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {n: load_table(spark, sf_dir, n) for n in names}

@@ -1136,3 +1136,57 @@ class TestSubstrKernelR9:
             f"kernel speedup {ratio:.1f}x < 10x "
             f"(new {t_new * 1e3:.2f} ms, legacy {t_old * 1e3:.2f} ms)"
         )
+
+
+class TestShortDocuments:
+    """A document with fewer tokens than the shingle width has no
+    shingle. ``shingles`` used to build ``sequence(1, 0)`` = ``[1, 0]``
+    for it and ``element_at(tokens, 0)`` raised
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT in every caller."""
+
+    TEXTS = [
+        (1, "hello world"),
+        (2, "hello world"),
+        (3, "hi"),
+        (4, "the quick brown fox jumps"),
+        (5, "the quick brown fox jumps"),
+    ]
+
+    def test_short_docs_through_every_shingle_caller(self, spark):
+        from lantern_spark.functions.text import tokenize
+        from lantern_spark.operators.curate import decontaminate_fuzzy
+        from lantern_spark.operators.dedup import shingles
+        from lantern_spark.streaming.neardup_stream import _verified_ids
+
+        df = spark.createDataFrame(self.TEXTS, "id long, text string")
+        sh = {
+            r["id"]: r["s"]
+            for r in df.select(
+                "id", shingles(tokenize("text"), 3).alias("s")
+            ).collect()
+        }
+        assert sh[1] == sh[2] == sh[3] == []
+        assert sorted(sh[4]) == [
+            "brown fox jumps", "quick brown fox", "the quick brown"
+        ]
+        # minhash_docs + ngram_jaccard: short docs never pair up
+        kept = near_dedup_minhash(df, "text", "id", threshold=0.5)
+        assert sorted(r["id"] for r in kept.collect()) == [1, 2, 3, 4]
+        pairs = spark.createDataFrame(
+            [(1, 2), (1, 4), (4, 5)], "id_a long, id_b long"
+        )
+        jac = ngram_jaccard(df, "text", "id", pairs=pairs).collect()
+        assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in jac] == [
+            (4, 5, 1.0)
+        ]
+        held = spark.createDataFrame(
+            [("hello world",), ("the quick brown fox jumps",)], "text string"
+        )
+        clean = decontaminate_fuzzy(df, held, "text", "id")
+        assert sorted(r["id"] for r in clean.collect()) == [1, 2, 3]
+        cand = spark.createDataFrame(
+            [(1, 2, "hello world", "hello world"),
+             (4, 5, self.TEXTS[3][1], self.TEXTS[4][1])],
+            "id_a long, id_b long, __text_a string, __text_b string",
+        )
+        assert [r["id_a"] for r in _verified_ids(cand, 3, 0.5).collect()] == [4]

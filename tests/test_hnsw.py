@@ -135,7 +135,7 @@ class TestHnswRelationCache:
         """r15 (r14 VERDICT #1): `_dir_fingerprint` → None (URI /
         permission error) must bypass and evict the cache, never hit it
         — mirrored from TestRelationCache on IVFIndex."""
-        import lantern_spark.operators.hnsw as mod
+        import lantern_spark.operators.artifact as mod
 
         idx = self._build(spark, tmp_path, "rcn")
         first = idx._cached_read(spark, "graphs")

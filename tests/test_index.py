@@ -194,7 +194,7 @@ class TestRelationCache:
         None must mean NEVER-CACHE — the old code stored (None, df) and
         `None == None` then hit the stale handle forever, so a mutated
         artifact on a URI path would keep serving old data."""
-        import lantern_spark.operators.index as mod
+        import lantern_spark.operators.artifact as mod
 
         idx = IVFIndex.build(
             emb, "embedding", "vec_id", str(tmp_path / "u"),
@@ -214,7 +214,7 @@ class TestRelationCache:
         """scandir failures beyond FileNotFoundError (e.g. EACCES, or
         the ENOENT-ish errors local scandir raises on `s3://…` URIs)
         must also yield None, not crash the read path."""
-        from lantern_spark.operators.index import _dir_fingerprint
+        from lantern_spark.operators.artifact import _dir_fingerprint
 
         real_scandir = os.scandir
 
@@ -234,7 +234,7 @@ class TestRelationCache:
         shallow scandir of each child dir, so the part-file change
         itself flips the token even when every directory mtime is
         frozen."""
-        from lantern_spark.operators.index import _dir_fingerprint
+        from lantern_spark.operators.artifact import _dir_fingerprint
 
         idx = IVFIndex.build(
             emb, "embedding", "vec_id", str(tmp_path / "p"),
@@ -1391,3 +1391,57 @@ class TestHnswUpdateContract:
         rows = [r for r in re.search(spark, new_probe, k=3, ef=128).collect()
                 if r["vec_id"] == 7]
         assert len(rows) == 1 and rows[0]["dist"] < 1e-6  # update won
+
+
+class TestFoldJobCounts:
+    """Pin the Spark job count of both folds. Measured on this fixture
+    before the lifecycle moved into operators/artifact.py: IVF fold 14
+    jobs, HNSW fold 7, HNSW compacting fold 8. The journaled commit is
+    driver-side file moves, so it must add no job."""
+
+    @staticmethod
+    def _jobs(spark, group, fn) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_ivf_fold_jobs(self, spark, emb, tmp_path):
+        idx = IVFIndex.build(
+            emb.filter("vec_id < 400"), "embedding", "vec_id",
+            str(tmp_path / "i"), nlist=8, seed=42,
+        )
+        idx.add_delta(emb.filter("vec_id >= 400 AND vec_id < 450"))
+        idx.add_delta(
+            emb.filter("vec_id >= 10 AND vec_id < 20").withColumn(
+                "embedding",
+                F.transform("embedding", lambda x: (x + 1.0).cast("float")),
+            )
+        )
+        idx.delete(emb.filter("vec_id >= 30 AND vec_id < 40").select("vec_id"))
+        n = self._jobs(spark, "pin-ivf-fold", lambda: idx.fold_delta(spark))
+        assert n <= 14, f"IVF fold ran {n} jobs"
+        assert idx.manifest.num_vectors == 440
+        assert idx.validate(spark, sample_queries=1)["problems"] == []
+
+    def test_hnsw_fold_and_compaction_jobs(self, spark, emb, tmp_path):
+        from lantern_spark.operators.hnsw import HNSWIndex
+
+        h = HNSWIndex.build(
+            emb.filter("vec_id < 400"), "embedding", "vec_id",
+            str(tmp_path / "h"), m=8, ef_construction=40, shards=2, seed=42,
+        )
+        h.add_delta(emb.filter("vec_id >= 400 AND vec_id < 450"))
+        n = self._jobs(spark, "pin-hnsw-fold", lambda: h.fold_delta(spark))
+        assert n <= 7, f"HNSW fold ran {n} jobs"
+        h.add_delta(emb.filter("vec_id >= 450 AND vec_id < 460"))
+        n = self._jobs(
+            spark, "pin-hnsw-compact",
+            lambda: h.fold_delta(spark, max_fold_shards=1),
+        )
+        assert n <= 8, f"HNSW compacting fold ran {n} jobs"
+        assert h.manifest["fold_epoch_base"] == 1
+        assert not h.validate(spark)["violations"]
