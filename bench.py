@@ -1,7 +1,17 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: runs a table of entries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
+ONE JSON line: {"metric", "value", "unit", "queries", "quality", ...}.
+
+An entry (:class:`Entry`) is a name, a callable, a repetition count and
+a flag: headline entries (the one-time artifact builds and the headline
+queries) are summed into ``value`` and reported under ``queries``;
+telemetry entries return ``quality`` keys. Every entry runs through
+:meth:`Bench.run`, which measures it with perfbench's ``Tracer.call``
+(one Spark job group per call, read back from Spark's status store).
+``BENCH_FULL.json`` gets the full payload plus a ``layers`` block: per
+entry jobs, tasks, executor CPU, driver gap and codegen compiles, and
+the host's steal time at start and end.
 
 The headline set covers every operator family: exact KNN + KNN join,
 weighted search, IVF ANN, PQ/SQ quantization, BM25, dedup (exact,
@@ -11,104 +21,180 @@ substrate (TPC-H-style agg, joins, sessionization).
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
 import sys
-import time
+import tempfile
+from dataclasses import dataclass
+from typing import Callable
 
 # module-level so pandas_udf type-hint inference (which resolves the
 # stringified hints against module globals under
 # `from __future__ import annotations`) can see it
-import pandas as pd  # noqa: E402
+import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+# perfbench's status-store reader, imported read-only; appended so its
+# module names never shadow an installed package
+sys.path.append(os.path.join(HERE, "perfbench"))
 
-HEADLINE = [
-    "knn_l2sq_top10",
-    "knn_cos_top10",
-    "knn_join_top3",
-    "weighted_search_exact",
-    "weighted_search_approx",
-    "sq_b1_hamming_top10",
-    "ivf_delta_tombstone_top10",
-    "maxsim_top10",
-    "ivf_pruned_top10",
-    "ivf_filtered_top5",
-    "pq_adc_topk",
-    "ivf_pq_adc_top10",
-    "sq_i8_roundtrip",
-    "pii_redact_docs",
-    "hnsw_top10",
-    "bm25_search_top20",
-    "bm25_consolidated_top20",
-    "bm25_approx_top20",
-    "bloom_term_postings",
-    "hybrid_rrf_top10",
-    "tokenize_docs",
-    "dedup_prefix_groups",
-    "url_dedup_docs",
-    "substr_dup_windows_docs",
-    "semdedup_survivors",
-    "lsh_candidate_pairs",
-    "dedup_components",
-    "embedding_near_pairs",
-    "simhash_near_pairs",
-    "domain_link_graph_edges",
-    "seed_expansion_hops",
-    "doc_domain_hop_prior",
-    "text_stats_all",
-    "token_counts",
-    "asof_purchase_attribution",
-    "events_rollup_type_hour",
-    "wet_documents_docs",
-    "packed_ids_export",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q10_returned_items",
-    "revenue_by_nation",
-    "events_sessionization",
-]
+import probe  # noqa: E402
+
+HEADLINE = """
+    knn_l2sq_top10 knn_cos_top10 knn_join_top3 weighted_search_exact
+    weighted_search_approx sq_b1_hamming_top10 ivf_delta_tombstone_top10
+    maxsim_top10 ivf_pruned_top10 ivf_filtered_top5 pq_adc_topk
+    ivf_pq_adc_top10 sq_i8_roundtrip pii_redact_docs hnsw_top10
+    bm25_search_top20 bm25_consolidated_top20 bm25_approx_top20
+    bloom_term_postings hybrid_rrf_top10 tokenize_docs dedup_prefix_groups
+    url_dedup_docs substr_dup_windows_docs semdedup_survivors
+    lsh_candidate_pairs dedup_components embedding_near_pairs
+    simhash_near_pairs domain_link_graph_edges seed_expansion_hops
+    doc_domain_hop_prior text_stats_all token_counts
+    asof_purchase_attribution events_rollup_type_hour wet_documents_docs
+    packed_ids_export tpch_q1_pricing_summary tpch_q3_shipping_priority
+    tpch_q10_returned_items revenue_by_nation events_sessionization
+""".split()
+
+# Queries retired from the oracle roster (the driver caps it at 50) stay
+# TIMED so the headline series remains comparable across rounds: name →
+# module. Swaps: r8 knn_cos_top10 / tpch_q10 out; r11
+# events_rollup_type_hour / pq_adc_topk out; r14 bloom_term_postings out
+# (bm25_approx_top20 hashes the same bloom kernels). ivf_fullprobe_top10
+# (r12) is timed OUTSIDE the total, as telemetry, so the total's
+# composition stays comparable to the r11 series. Cross-round totals
+# compare on the intersection of keys.
+RETIRED = {
+    "knn_cos_top10": "lantern_spark.queries.vector",
+    "tpch_q10_returned_items": "lantern_spark.queries.relational",
+    "events_rollup_type_hour": "lantern_spark.queries.relational",
+    "pq_adc_topk": "lantern_spark.queries.quantize",
+    "bloom_term_postings": "lantern_spark.queries.text",
+}
+
+#: per-entry fields kept from the tracer's record in the ``layers`` block
+LAYER_FIELDS = ("jobs", "tasks", "executor_cpu_ms", "driver_gap_ms",
+                "codegen_compiles")
 
 
-def _build_phases(spark, sf_dir):
-    """One-time artifact builds, timed as separate bench entries so
-    query timings measure SEARCH, not first-call build (round-1
-    methodology fix). Order matters: queries run after these hit warm
-    caches."""
+def headline_queries() -> dict:
+    """HEADLINE name → query callable ``(spark, sf_dir) -> DataFrame``:
+    the registry roster plus the retired-but-timed table."""
+    from lantern_spark import registry
 
-    def ivf_pq_index():
-        from lantern_spark.queries.ann import _index_for
-
-        _index_for(spark, sf_dir)
-
-    def lifecycle_index():
-        from lantern_spark.queries.lifecycle import _lifecycle_index_for
-
-        _lifecycle_index_for(spark, sf_dir)
-
-    def bm25_postings():
-        from lantern_spark.queries.text import _stats_for
-
-        _stats_for(spark, sf_dir, stem=False)
-
-    def hnsw_index():
-        from lantern_spark.queries.ann import _hnsw_for
-
-        _hnsw_for(spark, sf_dir)
-
-    return [
-        ("build:ivf_pq_index", ivf_pq_index),
-        ("build:lifecycle_index", lifecycle_index),
-        ("build:bm25_postings", bm25_postings),
-        ("build:hnsw_index", hnsw_index),
-    ]
+    qs = registry.queries()
+    for name, module in RETIRED.items():
+        qs.setdefault(name, getattr(importlib.import_module(module), name))
+    return {name: qs[name] for name in HEADLINE if name in qs}
 
 
+@dataclass(frozen=True)
+class Entry:
+    """One bench entry. ``fn(bench)`` returns a DataFrame (materialized
+    by hashing every column), a dict of ``quality`` keys (telemetry), or
+    anything else (ignored). ``reps`` runs back to back and the minimum
+    is reported; ``headline`` entries are summed into the total."""
+
+    name: str
+    fn: Callable
+    reps: int = 1
+    headline: bool = False
+
+
+def _materialize(value):
+    """Hash EVERY column of a DataFrame result: a bare count() lets
+    Catalyst prune the computed columns on map-only queries, timing a
+    parquet row count instead of the operator. bit_xor, not sum: ANSI
+    mode raises on int64 sum overflow."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    if isinstance(value, DataFrame):
+        value.select(
+            F.xxhash64(*[F.col(c) for c in value.columns]).alias("__h")
+        ).agg(F.expr("bit_xor(__h)")).collect()
+    return value
+
+
+class Bench:
+    """Runs entries and keeps what they measured. The one place that
+    times, sets job groups (through ``probe.Tracer``), takes the minimum
+    over repetitions, materializes results, isolates failures and
+    attributes codegen failures."""
+
+    def __init__(self, tracer, sf_dir: str, monitor):
+        # one tracer per SparkContext: its job groups are numbered from 1,
+        # so a second tracer would read the first one's jobs
+        self.tracer, self.spark = tracer, tracer.spark
+        self.sf_dir, self.monitor = sf_dir, monitor
+        self.timings, self.runs, self.quality = {}, {}, {}
+        self.layers, self.codegen_failures = {}, {}
+        self.total = 0.0
+
+    def _repeat(self, layer: str, fn, reps: int):
+        """``reps`` back-to-back calls; (last value, seconds per call,
+        the fastest call's tracer record)."""
+        value, samples, best = None, [], None
+        for _ in range(reps):
+            value, rec = self.tracer.call(layer, fn, _materialize)
+            samples.append(rec["ms"] / 1e3)
+            if best is None or rec["ms"] < best["ms"]:
+                best = rec
+        return value, samples, best
+
+    def time(self, fn, reps: int = 1):
+        """(value, min seconds over ``reps`` calls) of a step inside an
+        entry. The entry's job group stays set, so the step's jobs count
+        toward the entry's layer record."""
+        self.tracer.active = False
+        try:
+            value, samples, _ = self._repeat("", fn, reps)
+        finally:
+            self.tracer.active = True
+        return value, min(samples)
+
+    def run(self, entry: Entry) -> None:
+        """Measure one entry. A failure records -1 (and the error on
+        stderr); the run goes on."""
+        steal0 = probe.steal_seconds()
+        try:
+            value, samples, rec = self._repeat(
+                f"bench:{entry.name}", lambda: entry.fn(self), entry.reps
+            )
+        except Exception as e:
+            print(f"# bench {entry.name} FAILED: {e}", file=sys.stderr)
+            self.layers[entry.name] = {"s": -1.0}
+            if entry.headline:
+                self.timings[entry.name] = -1.0
+        else:
+            best = min(samples)
+            self.layers[entry.name] = {
+                "s": round(best, 3),
+                **{k: round(rec[k], 1) for k in LAYER_FIELDS},
+                "steal_s": round(probe.steal_seconds() - steal0, 2),
+            }
+            if entry.headline:
+                self.timings[entry.name] = round(best, 3)
+                self.runs[entry.name] = [round(s, 3) for s in samples]
+                self.total += best
+            if isinstance(value, dict):
+                self.quality.update(value)
+        hits = self.monitor.advance()
+        if hits:
+            self.codegen_failures[entry.name] = len(hits)
+            print(
+                f"# bench CODEGEN FAILURE under {entry.name}: {hits[0]}",
+                file=sys.stderr,
+            )
+
+
+# Load average + uptime at a point in time — the bench runs on a shared
+# VM whose load swings per-query wall times 2-3× with no plan change;
+# recording host conditions in the artifact makes noise
+# machine-adjudicable.
 def _host_snapshot() -> dict:
-    """Load average + uptime at a point in time — the bench runs on a
-    shared VM whose load swings per-query wall times 2-3× with no
-    plan change (r8/r9 adjudication kept re-deriving this); recording
-    host conditions in the artifact makes noise machine-adjudicable."""
     snap = {}
     try:
         snap["load_avg"] = [round(x, 2) for x in os.getloadavg()]
@@ -122,132 +208,40 @@ def _host_snapshot() -> dict:
     return snap
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    host_start = _host_snapshot()
+# -- entries ----------------------------------------------------------
 
-    # Janino-64KB tripwire (r13, review r12 item 3): tee fd 2 to a log
-    # BEFORE the JVM starts, then attribute "Failed to compile" /
-    # "grows beyond 64 KB" lines to the query that produced them — the
-    # r12 link-graph blowup cost ~13 s/job of doomed compilation
-    # invisibly (interpreted fallback is CORRECT, just slow) and no
-    # plan-pin test can see it. `codegen_failures` rides the artifact;
-    # non-empty means a hot path is silently interpreted.
-    import tempfile as _cgt
 
-    from lantern_spark.plans.codegen_guard import CodegenFailureMonitor
-
-    _cg_log = os.path.join(
-        _cgt.gettempdir(), f"bench_stderr_{os.getpid()}.log"
-    )
-    cg_mon = CodegenFailureMonitor.install(_cg_log)
-    codegen_failures = {}
-
-    def _cg_check(name: str) -> None:
-        hits = cg_mon.advance()
-        if hits:
-            codegen_failures[name] = len(hits)
-            print(
-                f"# bench CODEGEN FAILURE under {name}: {hits[0]}",
-                file=sys.stderr,
-            )
-
-    from pyspark.sql import SparkSession
+# Warm-up (warmup_version 4; in no total or quality key): initialize
+# codegen/Arrow and touch every table's footer so entry timings reflect
+# steady state, not first-JVM session costs.
+def _warmup(b: Bench) -> None:
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("lantern-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from lantern_spark import registry
-
-    qs = registry.queries()
-    # Queries retired from the 50-cap oracle roster stay TIMED here so
-    # the bench series remains comparable across rounds (the r8 swaps:
-    # knn_cos_top10 / tpch_q10 out, url_dedup_docs /
-    # substr_dup_windows_docs in).
-    from lantern_spark.queries.quantize import pq_adc_topk
-    from lantern_spark.queries.relational import (
-        events_rollup_type_hour,
-        tpch_q10_returned_items,
-    )
-    from lantern_spark.queries.vector import knn_cos_top10
-
-    qs.setdefault("knn_cos_top10", knn_cos_top10)
-    qs.setdefault("tpch_q10_returned_items", tpch_q10_returned_items)
-    # r11 swaps: events_rollup_type_hour / pq_adc_topk out,
-    # wet_documents_docs / packed_ids_export in
-    qs.setdefault("events_rollup_type_hour", events_rollup_type_hour)
-    qs.setdefault("pq_adc_topk", pq_adc_topk)
-    # r14 swap: bloom_term_postings retired from the oracle roster
-    # (bm25_approx_top20 hashes the same bloom kernels in a stricter
-    # ranked-search oracle); doc_domain_hop_prior in. Stays timed.
-    from lantern_spark.queries.text import bloom_term_postings
-
-    qs.setdefault("bloom_term_postings", bloom_term_postings)
-    # r12 swap: ivf_fullprobe_top10 out (exactness subsumed by
-    # knn_l2sq_top10, round-trip by ivf_pruned/lifecycle),
-    # domain_link_graph_edges in. r13 (advice): its timing moved OUT
-    # of the headline total into the telemetry block below — r12 kept
-    # it headline, which made the total a 43-query composition not
-    # directly comparable to the r11 series. The r13 composition is
-    # r11's 42 keys minus ivf_fullprobe_top10 plus
-    # domain_link_graph_edges plus seed_expansion_hops (the r13 roster
-    # row; dist_l1_inner_all retired in its favor was never a headline
-    # entry). r14 adds doc_domain_hop_prior headline;
-    # bloom_term_postings stays a headline key though roster-retired,
-    # so the r14 composition only GROWS the series. Cross-round totals
-    # compare on the intersection of keys, per BASELINE adjudication.
-
-    # Untimed warmup: initialize codegen/Arrow and touch every table's
-    # footer so per-query timings reflect steady state, not first-JVM
-    # session costs (identical methodology to any repeated-run bench).
-    spark.sparkContext.setJobDescription("bench:warmup")
+    spark = b.spark
     spark.range(8).select(F.sum("id")).collect()
     # first-use machinery that otherwise lands inside whatever entry
     # touches it first (measured ~5 s inside build:ivf_pq_index at r7):
     # Python-worker + Arrow-batch spin-up for pandas UDFs, and the
     # partitioned-write committer path
-    from pyspark.sql import types as _wT
-
-    @F.pandas_udf(_wT.DoubleType())
+    @F.pandas_udf(T.DoubleType())
     def _warm_udf(v: pd.Series) -> pd.Series:
         return v * 1.0
 
-    spark.range(64).select(
-        _warm_udf(F.col("id").cast("double"))
-    ).collect()
-    # v4 (r14, guide §1): first-use CODEGEN classes for the string/
-    # regex/higher-order-function/explode/aggregate family cost a
-    # measured ~1-3 s of one-time janino/class-load work and otherwise
-    # land inside whichever TIMED entry happens to run one first
-    # (build:bm25_postings absorbed the string+explode families). One
-    # tiny untimed query touches them all — same steady-state
-    # rationale as the v3 pandas-UDF/committer warm-up above.
+    spark.range(64).select(_warm_udf(F.col("id").cast("double"))).collect()
+    # v4 (r14): first-use CODEGEN classes for the string/regex/
+    # higher-order-function/explode/aggregate family cost ~1-3 s of
+    # one-time janino/class-load work and otherwise land inside
+    # whichever timed entry runs one first
     (
         spark.range(4)
         .select(
-            F.concat(F.lit("a b,C "), F.col("id").cast("string")).alias(
-                "s"
-            )
+            F.concat(F.lit("a b,C "), F.col("id").cast("string")).alias("s")
         )
         .select(
             F.explode(
                 F.filter(
-                    F.split(F.lower("s"), "[^a-z0-9]+"),
-                    lambda t: t != "",
+                    F.split(F.lower("s"), "[^a-z0-9]+"), lambda t: t != ""
                 )
             ).alias("t"),
             F.md5("s").alias("m"),
@@ -266,1194 +260,1004 @@ def main() -> None:
         .agg(F.count("*").alias("c"), F.min("m"), F.min("x"))
         .collect()
     )
-    # Arrow list<double> UDF lane (vector columns cross here first)
-    from pyspark.sql import types as _waT
 
-    @F.pandas_udf(_waT.IntegerType())
+    # Arrow list<double> UDF lane (vector columns cross here first)
+    @F.pandas_udf(T.IntegerType())
     def _warm_vec_udf(v: pd.Series) -> pd.Series:
         return v.map(lambda a: 0 if a is None else len(a))
 
     spark.range(8).select(
-        _warm_vec_udf(
-            F.array(F.col("id").cast("double"), F.lit(1.0))
-        )
+        _warm_vec_udf(F.array(F.col("id").cast("double"), F.lit(1.0)))
     ).collect()
-    import shutil as _wsh
-    import tempfile as _wtmp
-
-    _wdir = _wtmp.mkdtemp(prefix="bench_warm_")
-    (
-        spark.range(8)
-        .withColumn("p", (F.col("id") % 2).cast("int"))
-        .repartition(F.col("p"))
-        .write.mode("overwrite")
-        .partitionBy("p")
-        .parquet(f"{_wdir}/t")
-    )
-    _wsh.rmtree(_wdir, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="bench_warm_") as wdir:
+        (
+            spark.range(8)
+            .withColumn("p", (F.col("id") % 2).cast("int"))
+            .repartition(F.col("p"))
+            .write.mode("overwrite")
+            .partitionBy("p")
+            .parquet(f"{wdir}/t")
+        )
     for t in (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings"
     ).split():
-        try:
-            spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(1).collect()
-        except Exception:
-            pass
+        path = f"{b.sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            spark.read.parquet(path).limit(1).collect()
 
-    timings = {}
-    raw_runs = {}  # per-query list of ALL raw run timings (r6 VERDICT
-    # item: the estimator changed mid-series without a flag — emit the
-    # estimator AND the raw samples so host noise is auditable instead
-    # of re-adjudicated every round)
-    total = 0.0
-    for name, build in _build_phases(spark, sf_dir):
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-        t0 = time.time()
-        try:
-            build()
-            dt = time.time() - t0
-            timings[name] = round(dt, 3)
-            raw_runs[name] = [round(dt, 3)]
-            total += dt
-        except Exception as e:
-            timings[name] = -1.0
-            print(f"# bench {name} FAILED: {e}", file=sys.stderr)
-        _cg_check(name)
 
-    for name in HEADLINE:
-        fn = qs.get(name)
-        if fn is None:
-            continue
-        spark.sparkContext.setJobDescription(f"bench:{name}")
-        try:
-            # min of 2 runs (round-6 methodology): host-level VM
-            # contention moves single-run totals by up to 3× on
-            # identical code (adjudicated machine noise since r4); the
-            # minimum is the standard estimator of intrinsic cost
-            # under additive noise, making round-over-round deltas
-            # reflect CODE, not the host. Builds above stay single-run
-            # (one-time costs; a repeat would hit caches anyway).
-            best = None
-            samples = []
-            for _rep in range(2):
-                t0 = time.time()
-                df = fn(spark, sf_dir)
-                # Materialize by hashing EVERY column: a bare count()
-                # lets Catalyst prune the computed columns on map-only
-                # queries, timing a parquet row-count instead of the
-                # operator (round-1 methodology fix). bit_xor, not
-                # sum: ANSI mode raises on int64 sum overflow.
-                df.select(
-                    F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h")
-                ).agg(F.expr("bit_xor(__h)")).collect()
-                dt = time.time() - t0
-                samples.append(round(dt, 3))
-                best = dt if best is None else min(best, dt)
-            timings[name] = round(best, 3)
-            raw_runs[name] = samples
-            total += best
-        except Exception as e:  # a failing query shows as -1, not a crash
-            timings[name] = -1.0
-            print(f"# bench {name} FAILED: {e}", file=sys.stderr)
-        _cg_check(name)
-    # ANN quality metrics (recall@10 + scan fraction), emitted alongside
-    # wall-times so a plan/quality regression is visible even when
-    # machine-load variance dominates the timings (round-4 advice).
-    #
-    # Methodology (r7, VERDICT r6 item 1): scan economics are a SCALE
-    # property, so quality is measured on the shared scale fixture
-    # (lantern_spark/fixtures.py — embeddings × 30 replicas perturbed
-    # at nearest-neighbor scale, ~60k rows at sf0.1) with probes HELD
-    # OUT of the index. The instrument can now fail: replicas are no
-    # longer a distance-0 clique in one k-means cell, probes are not
-    # index members, and `ivf_recall_at10_nprobe1` is reported so a
-    # reader can see that nprobe=1 measurably LOSES recall on this
-    # fixture (if it ever reads 1.0 again, the fixture regressed).
-    # IVF runs at its TUNED operating point: √n-scaled nlist + the
-    # smallest nprobe reaching 0.95 recall@10 (closed-form tune_nprobe
-    # — the reference's search-knob selection,
-    # index_autotune/mod.rs:161-186). Quality work is NOT counted in
-    # the headline total (it is telemetry, not a headline query).
-    quality = {}
-    # Retired-roster telemetry (r13 advice): ivf_fullprobe_top10 is
-    # timed OUTSIDE the headline total so the total's composition
-    # stays comparable to the r11 series (min-of-2, same estimator).
-    spark.sparkContext.setJobDescription("bench:retired_fullprobe")
-    try:
-        from lantern_spark.queries.ann import ivf_fullprobe_top10
+# One-time artifact builds, timed as separate entries so query timings
+# measure SEARCH, not first-call build. Order matters: the queries after
+# them hit warm caches.
+def _builds() -> list:
+    from lantern_spark.queries.ann import _hnsw_for, _index_for
+    from lantern_spark.queries.lifecycle import _lifecycle_index_for
+    from lantern_spark.queries.text import _stats_for
 
-        best = None
-        for _rep in range(2):
-            t0 = time.time()
-            df = ivf_fullprobe_top10(spark, sf_dir)
-            df.select(
-                F.xxhash64(*[F.col(c) for c in df.columns]).alias("__h")
-            ).agg(F.expr("bit_xor(__h)")).collect()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        quality["retired_ivf_fullprobe_top10_s"] = round(best, 3)
-    except Exception as e:
-        print(f"# bench retired fullprobe FAILED: {e}", file=sys.stderr)
-    _cg_check("retired_fullprobe")
-    spark.sparkContext.setJobDescription("bench:quality")
-    try:
-        import tempfile
+    return [
+        Entry("build:ivf_pq_index",
+              lambda b: _index_for(b.spark, b.sf_dir), headline=True),
+        Entry("build:lifecycle_index",
+              lambda b: _lifecycle_index_for(b.spark, b.sf_dir),
+              headline=True),
+        Entry("build:bm25_postings",
+              lambda b: _stats_for(b.spark, b.sf_dir, stem=False),
+              headline=True),
+        Entry("build:hnsw_index",
+              lambda b: _hnsw_for(b.spark, b.sf_dir), headline=True),
+    ]
 
-        from pyspark.sql import functions as SF
 
-        from lantern_spark.fixtures import held_out_probes, replicated_corpus
-        from lantern_spark.operators.autotune import tune_nprobe
-        from lantern_spark.operators.hnsw import (
-            HNSWIndex,
-            hnsw_recall_and_scan_fraction,
-        )
-        from lantern_spark.operators.index import IVFIndex, recall_at_k
-        from lantern_spark.queries.common import load_table
+def _retired_fullprobe(b: Bench) -> dict:
+    from lantern_spark.queries.ann import ivf_fullprobe_top10
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        all_rows = replicated_corpus(emb, reps=30)
-        big, probes = held_out_probes(all_rows, n_probes=8)
-        big = big.repartition(32).cache()
-        n_big = big.count()
-        quality["fixture_rows"] = n_big
-        qroot = tempfile.mkdtemp(prefix="bench_quality_")
+    _, s = b.time(lambda: ivf_fullprobe_top10(b.spark, b.sf_dir), reps=2)
+    return {"retired_ivf_fullprobe_top10_s": round(s, 3)}
+
+
+# ANN recall and scan fraction on the shared scale fixture
+# (lantern_spark/fixtures.py: embeddings × 30 replicas perturbed at
+# nearest-neighbor scale, ~60k rows at sf0.1) with probes HELD OUT of
+# the index. Scan economics are a scale property, and the instrument can
+# fail: ``ivf_recall_at10_nprobe1`` must LOSE recall here (if it ever
+# reads 1.0 again, the fixture regressed). IVF runs at its tuned
+# operating point: √n-scaled nlist + the smallest nprobe reaching 0.95
+# recall@10 (tune_nprobe). Then the router's decisions over the measured
+# indexes, and delta maintenance (fold vs rebuild).
+def _ann_quality(b: Bench) -> dict:
+    from pyspark.sql import functions as F
+
+    from lantern_spark.fixtures import held_out_probes, replicated_corpus
+    from lantern_spark.operators.autotune import tune_nprobe
+    from lantern_spark.operators.hnsw import (
+        HNSWIndex,
+        hnsw_recall_and_scan_fraction,
+    )
+    from lantern_spark.operators.index import IVFIndex, recall_at_k
+    from lantern_spark.operators.ivf_graph import (
+        IVFGraphIndex,
+        ivf_graph_recall_and_scan_fraction,
+    )
+    from lantern_spark.plans.router import IndexCatalog, route, route_batch
+    from lantern_spark.queries.common import load_table
+
+    spark, q = b.spark, {}
+    emb = load_table(spark, b.sf_dir, "embeddings")
+    big, probes = held_out_probes(replicated_corpus(emb, reps=30), n_probes=8)
+    big = big.repartition(32).cache()
+    n_big = big.count()
+    q["fixture_rows"] = n_big
+    with tempfile.TemporaryDirectory(prefix="bench_quality_") as root:
         ivf = IVFIndex.build(
-            big, "embedding", "vec_id", f"{qroot}/ivf",
+            big, "embedding", "vec_id", f"{root}/ivf",
             metric="l2sq", nlist=None, seed=42,
         )
         nprobe, _ = tune_nprobe(ivf, spark, probes, k=10, target_recall=0.95)
-        quality["ivf_nlist"] = ivf.manifest.nlist
-        quality["ivf_nprobe"] = nprobe
-        quality["ivf_recall_at10"] = round(
+        q["ivf_nlist"] = ivf.manifest.nlist
+        q["ivf_nprobe"] = nprobe
+        q["ivf_recall_at10"] = round(
             recall_at_k(ivf, spark, probes, k=10, nprobe=nprobe), 4
         )
-        quality["ivf_scan_fraction"] = round(nprobe / ivf.manifest.nlist, 4)
-        # the falsifiability witness: nprobe=1 must lose recall here
-        quality["ivf_recall_at10_nprobe1"] = round(
+        q["ivf_scan_fraction"] = round(nprobe / ivf.manifest.nlist, 4)
+        q["ivf_recall_at10_nprobe1"] = round(
             recall_at_k(ivf, spark, probes, k=10, nprobe=1), 4
         )
         hnsw = HNSWIndex.build(
-            big, "embedding", "vec_id", f"{qroot}/hnsw",
+            big, "embedding", "vec_id", f"{root}/hnsw",
             m=16, ef_construction=100, shards=8, seed=42,
         )
         r, frac = hnsw_recall_and_scan_fraction(
             hnsw, spark, big, "embedding", "vec_id", probes, k=10, ef=96
         )
-        quality["hnsw_recall_at10"] = round(r, 4)
-        quality["hnsw_scan_fraction"] = round(frac, 4)
-        # IVF×graph hybrid (per-cell HNSW, the SPANN-style scale
-        # layout), measured at ITS operating point — FEW large cells,
-        # not IVF's √n: per-cell graphs only pay off when cell size ≫
-        # ef (an ef-128 walk saturates a √n-sized cell and evaluates
-        # MORE than the flat scan — the tests/test_scale.py finding).
-        # eval fraction counts distance evaluations / corpus — directly
-        # comparable to hnsw_scan_fraction and to IVF's row-scan
-        # fraction (nprobe/nlist).
-        from lantern_spark.operators.ivf_graph import (
-            IVFGraphIndex,
-            ivf_graph_recall_and_scan_fraction,
-        )
-
+        q["hnsw_recall_at10"] = round(r, 4)
+        q["hnsw_scan_fraction"] = round(frac, 4)
+        # IVF×graph hybrid (per-cell HNSW, the SPANN-style layout) at
+        # ITS operating point — FEW large cells: per-cell graphs only pay
+        # off when cell size ≫ ef. The eval fraction (distance
+        # evaluations / corpus) compares directly with
+        # hnsw_scan_fraction and with IVF's nprobe/nlist.
         g_nlist = max(8, int(round(ivf.manifest.nlist / 8)))
         ivf_g = IVFIndex.build(
-            big, "embedding", "vec_id", f"{qroot}/ivf_coarse",
+            big, "embedding", "vec_id", f"{root}/ivf_coarse",
             metric="l2sq", nlist=g_nlist, seed=42,
         )
-        g_nprobe, _ = tune_nprobe(
-            ivf_g, spark, probes, k=10, target_recall=0.97
-        )
-        hyb = IVFGraphIndex.attach(
-            ivf_g, spark, m=16, ef_construction=100, seed=42
-        )
+        g_nprobe, _ = tune_nprobe(ivf_g, spark, probes, k=10, target_recall=0.97)
+        g_nprobe = int(max(g_nprobe, 2))
+        hyb = IVFGraphIndex.attach(ivf_g, spark, m=16, ef_construction=100, seed=42)
         gr, gfrac = ivf_graph_recall_and_scan_fraction(
-            hyb, spark, probes, k=10, nprobe=max(g_nprobe, 2), ef=128
+            hyb, spark, probes, k=10, nprobe=g_nprobe, ef=128
         )
-        quality["ivf_graph_nlist"] = g_nlist
-        quality["ivf_graph_nprobe"] = int(max(g_nprobe, 2))
-        quality["ivf_graph_recall_at10"] = round(gr, 4)
-        quality["ivf_graph_eval_fraction"] = round(gfrac, 4)
-        # the flat-scan fraction the SAME cell choice would pay — the
-        # hybrid's eval fraction must sit well under it
-        quality["ivf_graph_flat_fraction"] = round(
-            max(g_nprobe, 2) / g_nlist, 4
-        )
-        # cost-based router decision over the two measured indexes —
-        # the amcostestimate analog choosing the access path it would
-        # use at this operating point (plans/router.py)
-        from lantern_spark.plans.router import IndexCatalog, route
-
-        cat = IndexCatalog(f"{qroot}/catalog")
+        q["ivf_graph_nlist"] = g_nlist
+        q["ivf_graph_nprobe"] = g_nprobe
+        q["ivf_graph_recall_at10"] = round(gr, 4)
+        q["ivf_graph_eval_fraction"] = round(gfrac, 4)
+        # the flat-scan fraction the SAME cell choice would pay
+        q["ivf_graph_flat_fraction"] = round(g_nprobe / g_nlist, 4)
+        # cost-based access-path choice over the two measured indexes
+        # (the amcostestimate analog, plans/router.py), single probe and
+        # batched at B=32 (per-job reads amortize, per-probe evals don't)
+        cat = IndexCatalog(f"{root}/catalog")
         cat.register_ivf(
             ivf, "fixture", nprobe=nprobe,
-            recall_estimate=quality["ivf_recall_at10"],
+            recall_estimate=q["ivf_recall_at10"],
         )
         cat.register_hnsw(
             hnsw, "fixture", ef=96, num_vectors=n_big,
-            recall_estimate=quality["hnsw_recall_at10"],
+            recall_estimate=q["hnsw_recall_at10"],
         )
-        dec = route(
-            cat, "fixture", "embedding", "l2sq", n_big, recall_floor=0.95
-        )
-        quality["router_path"] = dec.access_path
-        quality["router_est_tuples"] = round(dec.est_tuples, 1)
-        # batched-workload decision (r6 item 6): per-probe pricing at
-        # B=32 — per-job reads amortize, per-probe evals don't
-        from lantern_spark.plans.router import route_batch
-
+        dec = route(cat, "fixture", "embedding", "l2sq", n_big, recall_floor=0.95)
+        q["router_path"] = dec.access_path
+        q["router_est_tuples"] = round(dec.est_tuples, 1)
         bdec = route_batch(
             cat, "fixture", "embedding", "l2sq", n_big,
             batch_size=32, recall_floor=0.95,
         )
-        quality["router_batch32_path"] = bdec.access_path
-        quality["router_batch32_est_tuples"] = round(bdec.est_tuples, 1)
-
-        # incremental maintenance (r7): fold a ~1% delta vs a full
-        # rebuild, on the fixture indexes (this mutates them — it runs
-        # after every recall/router measurement and before cleanup).
-        # Two honest delta shapes: SCATTERED (uniform over the corpus
-        # — the worst case for IVF's affected-partition fold; at bench
-        # scale per-partition fixed costs can make it SLOWER than a
-        # rebuild, which is why the affected fraction is reported
-        # alongside) and CLUSTERED (one locality, the
-        # time/tenant-ordered ingest shape, where the fold touches a
-        # handful of partitions). HNSW's fold is O(delta)
-        # unconditionally — one new shard.
-        import time as _mt
-
+        q["router_batch32_path"] = bdec.access_path
+        q["router_batch32_est_tuples"] = round(bdec.est_tuples, 1)
+        # Incremental maintenance: fold a ~1% delta vs a full rebuild
+        # (mutates the indexes, so it runs last). SCATTERED is uniform
+        # over the corpus — the worst case for IVF's affected-list fold,
+        # hence the affected fraction beside it; CLUSTERED is one
+        # locality, the time/tenant-ordered ingest shape. HNSW's fold is
+        # O(delta) unconditionally — one new shard.
         delta_n = max(64, int(n_big * 0.01))
         scattered = big.limit(delta_n).select(
             (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
         )
-        ivf.add_delta(scattered)
-        t0 = _mt.time()
-        ivf.fold_delta(spark)
-        quality["ivf_fold_scattered_s"] = round(_mt.time() - t0, 3)
-        quality["ivf_fold_scattered_affected"] = round(
-            len(ivf.manifest.params.get("last_fold_lists", []))
-            / ivf.manifest.nlist,
-            4,
-        )
         one = big.limit(1).first()
-        clustered = (
-            big.limit(delta_n)
-            .select(
-                (F.col("vec_id") + 20_000_000).alias("vec_id"),
-                F.array(
-                    *[
-                        F.lit(float(x)) + (F.col("vec_id") % 97)
-                        * F.lit(1e-6)
-                        for x in one["embedding"]
-                    ]
-                ).alias("embedding"),
+        clustered = big.limit(delta_n).select(
+            (F.col("vec_id") + 20_000_000).alias("vec_id"),
+            F.array(
+                *[
+                    F.lit(float(x)) + (F.col("vec_id") % 97) * F.lit(1e-6)
+                    for x in one["embedding"]
+                ]
+            ).alias("embedding"),
+        )
+        for shape, delta in (("scattered", scattered), ("clustered", clustered)):
+            ivf.add_delta(delta)
+            _, s = b.time(lambda: ivf.fold_delta(spark))
+            q[f"ivf_fold_{shape}_s"] = round(s, 3)
+            q[f"ivf_fold_{shape}_affected"] = round(
+                len(ivf.manifest.params.get("last_fold_lists", []))
+                / ivf.manifest.nlist,
+                4,
             )
-        )
-        ivf.add_delta(clustered)
-        t0 = _mt.time()
-        ivf.fold_delta(spark)
-        quality["ivf_fold_clustered_s"] = round(_mt.time() - t0, 3)
-        quality["ivf_fold_clustered_affected"] = round(
-            len(ivf.manifest.params.get("last_fold_lists", []))
-            / ivf.manifest.nlist,
-            4,
-        )
-        t0 = _mt.time()
-        ivf.rebuild(spark)
-        quality["ivf_rebuild_s"] = round(_mt.time() - t0, 3)
+        q["ivf_rebuild_s"] = round(b.time(lambda: ivf.rebuild(spark))[1], 3)
         hnsw.add_delta(scattered)
-        t0 = _mt.time()
-        hnsw.fold_delta(spark)
-        quality["hnsw_fold_s"] = round(_mt.time() - t0, 3)
-        t0 = _mt.time()
-        hnsw.rebuild(spark)
-        quality["hnsw_rebuild_s"] = round(_mt.time() - t0, 3)
-        big.unpersist()
-        import shutil
+        q["hnsw_fold_s"] = round(b.time(lambda: hnsw.fold_delta(spark))[1], 3)
+        q["hnsw_rebuild_s"] = round(b.time(lambda: hnsw.rebuild(spark))[1], 3)
+    big.unpersist()
+    return q
 
-        shutil.rmtree(qroot, ignore_errors=True)
 
-        # IVF-PQ ADC path on the NATURAL (near-uniform) embeddings —
-        # the corpus where row-pruning cannot hold recall because true
-        # neighbors spread across all cells. The 100 TB answer there is
-        # to scan COMPACT CODES for every row (full probe, column-
-        # pruned to 1 byte/subspace) and exactly re-rank a k·oversample
-        # pool; reported as BYTES read relative to a full raw-vector
-        # scan (the quantity a 100 TB cluster actually pays for).
-        from lantern_spark.functions.distances import l2sq_dist
-        from lantern_spark.functions.vectors import vec_lit
-        from lantern_spark.queries.ann import _index_for
+# IVF-PQ ADC on the NATURAL (near-uniform) embeddings, where row pruning
+# cannot hold recall because true neighbors spread across all cells. The
+# answer there is to scan COMPACT CODES for every row (full probe, 1
+# byte/subspace) and exactly re-rank a k·oversample pool; reported as
+# BYTES read relative to a full raw-vector scan. Then the router's
+# choice between the plain and ADC tiers of that artifact, and batched
+# vs per-probe search throughput.
+def _ivf_pq_quality(b: Bench) -> dict:
+    from pyspark.sql import functions as F
 
-        ivf_nat = _index_for(spark, sf_dir)  # PQ-enabled build (cached)
-        n_nat = emb.count()
-        nat_probes = [
-            [float(x) for x in r["embedding"]]
-            for r in emb.orderBy(SF.crc32(SF.col("vec_id").cast("string")))
-            .limit(6)
+    from lantern_spark.functions.distances import l2sq_dist
+    from lantern_spark.functions.vectors import vec_lit
+    from lantern_spark.plans.router import IndexCatalog, route
+    from lantern_spark.queries.ann import _index_for, _tuned_nprobe
+    from lantern_spark.queries.common import load_table
+
+    spark, q = b.spark, {}
+    emb = load_table(spark, b.sf_dir, "embeddings")
+    ivf_nat = _index_for(spark, b.sf_dir)  # PQ-enabled build (cached)
+    n_nat = emb.count()
+    nat_probes = [
+        [float(x) for x in r["embedding"]]
+        for r in emb.orderBy(F.crc32(F.col("vec_id").cast("string")))
+        .limit(6)
+        .collect()
+    ]
+    exact_sets = [
+        {
+            r["vec_id"]
+            for r in emb.withColumn("d", l2sq_dist("embedding", vec_lit(p)))
+            .orderBy("d", "vec_id")
+            .limit(10)
+            .select("vec_id")
             .collect()
-        ]
-        exact_sets = []
-        for q in nat_probes:
-            exact_sets.append(
-                {
-                    r["vec_id"]
-                    for r in emb.withColumn(
-                        "d", l2sq_dist("embedding", vec_lit(q))
-                    )
-                    .orderBy("d", "vec_id")
-                    .limit(10)
-                    .select("vec_id")
-                    .collect()
-                }
-            )
-        # oversample is the ADC knob (re-rank is exact, so recall is
-        # monotone in it): pick the smallest power-of-two pool meeting
-        # the 0.95 bar, the same selection discipline as tune_nprobe.
-        # At 100 TB the k·oversample re-rank is CONSTANT per query while
-        # the code scan stays ~code_bytes/vec_bytes of a raw scan.
-        for oversample in (8, 16, 32, 64, 128):
-            hits, n_checked = 0, 0  # NOT `total` — that is the
-            # headline wall-clock accumulator printed as `value`
-            for q, exact in zip(nat_probes, exact_sets):
-                got = {
-                    r["vec_id"]
-                    for r in ivf_nat.search_adc(
-                        spark, q, k=10,
-                        nprobe=ivf_nat.manifest.nlist, oversample=oversample,
-                    ).collect()
-                }
-                hits += len(exact & got)
-                n_checked += 10
-            rec = hits / max(n_checked, 1)
-            if rec >= 0.95 or 10 * oversample >= n_nat:
-                break
-        pq_params = ivf_nat.manifest.params["pq"]
-        code_bytes = pq_params["splits"]  # one uint8 code per subspace
-        vec_bytes = ivf_nat.manifest.dim * 8  # stored as double
-        byte_frac = (
-            n_nat * code_bytes + min(10 * oversample, n_nat) * vec_bytes
-        ) / (n_nat * vec_bytes)
-        quality["ivf_pq_recall_at10"] = round(rec, 4)
-        quality["ivf_pq_oversample"] = oversample
-        quality["ivf_pq_byte_scan_fraction"] = round(byte_frac, 4)
-        # decomposition: the CODE pass is the asymptotic cost (scales
-        # with n); the exact re-rank reads k·oversample rows — CONSTANT
-        # per query, so the combined fraction above is dominated by a
-        # small-n artifact at bench scale and converges to the code
-        # fraction at 100 TB
-        quality["ivf_pq_code_byte_fraction"] = round(
-            code_bytes / vec_bytes, 4
-        )
-        quality["ivf_pq_rerank_rows"] = int(min(10 * oversample, n_nat))
-        # ADC tier in the router (r6 item 6): register both tiers of
-        # the SAME artifact and show which the cost model picks for the
-        # natural corpus at its measured operating points
-        from lantern_spark.queries.ann import _tuned_nprobe
-
-        nat_nprobe = _tuned_nprobe(spark, sf_dir)
-        qroot2 = tempfile.mkdtemp(prefix="bench_router_")
-        cat2 = IndexCatalog(f"{qroot2}/catalog_nat")
-        cat2.register_ivf(
-            ivf_nat, "embeddings", nprobe=nat_nprobe,
+        }
+        for p in nat_probes
+    ]
+    # oversample is the ADC knob (re-rank is exact, so recall is
+    # monotone in it): the smallest power-of-two pool meeting 0.95
+    for oversample in (8, 16, 32, 64, 128):
+        hits = 0
+        for p, exact in zip(nat_probes, exact_sets):
+            got = ivf_nat.search_adc(
+                spark, p, k=10, nprobe=ivf_nat.manifest.nlist,
+                oversample=oversample,
+            ).collect()
+            hits += len(exact & {r["vec_id"] for r in got})
+        rec = hits / (10 * len(nat_probes))
+        if rec >= 0.95 or 10 * oversample >= n_nat:
+            break
+    code_bytes = ivf_nat.manifest.params["pq"]["splits"]  # 1 B/subspace
+    vec_bytes = ivf_nat.manifest.dim * 8  # stored as double
+    rerank_rows = min(10 * oversample, n_nat)
+    q["ivf_pq_recall_at10"] = round(rec, 4)
+    q["ivf_pq_oversample"] = oversample
+    q["ivf_pq_byte_scan_fraction"] = round(
+        (n_nat * code_bytes + rerank_rows * vec_bytes) / (n_nat * vec_bytes), 4
+    )
+    # the CODE pass scales with n; the re-rank reads k·oversample rows,
+    # constant per query — at scale the fraction converges to this
+    q["ivf_pq_code_byte_fraction"] = round(code_bytes / vec_bytes, 4)
+    q["ivf_pq_rerank_rows"] = int(rerank_rows)
+    with tempfile.TemporaryDirectory(prefix="bench_router_") as root:
+        cat = IndexCatalog(f"{root}/catalog_nat")
+        cat.register_ivf(
+            ivf_nat, "embeddings", nprobe=_tuned_nprobe(spark, b.sf_dir),
             recall_estimate=0.95,  # the tune_nprobe target it was tuned to
         )
-        cat2.register_ivf_pq(
+        cat.register_ivf_pq(
             ivf_nat, "embeddings", nprobe=ivf_nat.manifest.nlist,
             oversample=oversample, recall_estimate=rec,
         )
-        pqdec = route(
-            cat2, "embeddings", "embedding", "l2sq", n_nat,
-            recall_floor=0.9,
-        )
-        quality["router_nat_path"] = pqdec.access_path
-        quality["router_nat_est_tuples"] = round(pqdec.est_tuples, 1)
-        shutil.rmtree(qroot2, ignore_errors=True)
-
-        # batched-search amortization: one job answering B probes vs
-        # one job per probe (the 100 TB inference-workload shape;
-        # search_batch shares probe selection + scan + one window).
-        # Reported as queries/sec both ways — the ratio is the
-        # scheduler/scan amortization factor.
-        import time as _t
-
-        bprobes = [
-            [float(x) + 0.001 * j for x in nat_probes[j % len(nat_probes)]]
-            for j in range(32)
+        dec = route(cat, "embeddings", "embedding", "l2sq", n_nat, recall_floor=0.9)
+        q["router_nat_path"] = dec.access_path
+        q["router_nat_est_tuples"] = round(dec.est_tuples, 1)
+    # one job answering B probes vs one job per probe: the ratio is the
+    # scheduler/scan amortization factor of search_batch
+    bprobes = [
+        [float(x) + 0.001 * j for x in nat_probes[j % len(nat_probes)]]
+        for j in range(32)
+    ]
+    probes_df = spark.createDataFrame(
+        list(enumerate(bprobes)), "qid int, query array<double>"
+    )
+    _, batch_s = b.time(
+        lambda: ivf_nat.search_batch(spark, probes_df, k=10, nprobe=4).count()
+    )
+    _, seq_s = b.time(
+        lambda: [
+            ivf_nat.search(spark, p, k=10, nprobe=4).count()
+            for p in bprobes[:4]
         ]
-        probes_df = spark.createDataFrame(
-            [(j, q) for j, q in enumerate(bprobes)],
-            "qid int, query array<double>",
-        )
-        t0 = _t.time()
-        ivf_nat.search_batch(
-            spark, probes_df, k=10, nprobe=4
-        ).count()
-        batch_s = _t.time() - t0
-        t0 = _t.time()
-        for q in bprobes[:4]:
-            ivf_nat.search(spark, q, k=10, nprobe=4).count()
-        seq_per_query = (_t.time() - t0) / 4
-        quality["ivf_batch_qps"] = round(len(bprobes) / batch_s, 1)
-        quality["ivf_sequential_qps"] = round(1.0 / seq_per_query, 1)
+    )
+    q["ivf_batch_qps"] = round(len(bprobes) / batch_s, 1)
+    q["ivf_sequential_qps"] = round(4 / seq_s, 1)
+    return q
 
-        # two-stage MaxSim serving shape (r8 stretch, VERDICT r7 item
-        # 8): pooled-vector ANN candidates → exact MaxSim re-rank —
-        # the ColBERT architecture end-to-end. The approximation under
-        # test is the POOLING (candidate gen sees one mean vector per
-        # doc, the re-rank sees every token), so candidates come from
-        # a full-probe pooled IVF and the honest knobs reported are
-        # candidate-set recall vs brute-force MaxSim and the re-rank's
-        # share of the corpus. At 100 TB the pooled scan is 1/|bag| of
-        # the token data and the re-rank is O(candidates) — the brute
-        # MaxSim it replaces is a full token-matmul scan.
-        from lantern_spark.operators.maxsim import maxsim_search, pool_tokens
-        from lantern_spark.queries.common import Q64, Q64_B
 
-        bags = (
-            emb.groupBy(
-                (
-                    SF.col("label").cast("long") * 100
-                    + SF.col("vec_id") % 50
-                ).alias("doc_id")
-            )
-            .agg(
-                SF.array_sort(
-                    SF.collect_list(SF.struct("vec_id", "embedding"))
-                ).alias("s")
-            )
-            .select(
-                "doc_id",
-                SF.transform("s", lambda x: x["embedding"]).alias("tokens"),
-            )
-            .cache()
-        )
-        n_docs = bags.count()
-        qs_bag = [Q64, Q64_B]
-        brute_top = [
+# Two-stage MaxSim serving (the ColBERT architecture): ANN candidates →
+# exact MaxSim re-rank, reported as candidate-set recall vs brute-force
+# MaxSim and the re-rank's share of the corpus, for three candidate
+# generators: per-query-token ANN over the token embeddings, one
+# mean-pooled vector per doc, and PLAID's compressed centroid + residual
+# codes (arXiv:2205.09707).
+def _maxsim_quality(b: Bench) -> dict:
+    from pyspark.sql import functions as F
+
+    from lantern_spark.operators.index import IVFIndex
+    from lantern_spark.operators.maxsim import (
+        maxsim_search,
+        plaid_candidates,
+        plaid_doc_codes,
+        plaid_encode,
+        plaid_refine,
+        pool_tokens,
+    )
+    from lantern_spark.queries.common import Q64, Q64_B, load_table
+
+    spark, q = b.spark, {}
+    emb = load_table(spark, b.sf_dir, "embeddings")
+    doc_id = (F.col("label").cast("long") * 100 + F.col("vec_id") % 50).alias(
+        "doc_id"
+    )
+    bags = (
+        emb.groupBy(doc_id)
+        .agg(F.array_sort(F.collect_list(F.struct("vec_id", "embedding"))).alias("s"))
+        .select("doc_id", F.transform("s", lambda x: x["embedding"]).alias("tokens"))
+        .cache()
+    )
+    n_docs = bags.count()
+    qs_bag = [Q64, Q64_B]
+
+    def top10(candidates=None):
+        return {
             r["doc_id"]
             for r in maxsim_search(
                 bags, "tokens", "doc_id", qs_bag, k=10, metric="cos",
-                round_digits=6,
+                candidates=candidates, round_digits=6,
             ).collect()
-        ]
-        qroot3 = tempfile.mkdtemp(prefix="bench_maxsim_")
+        }
 
-        def _twostage_recall(cand_df, cand_count):
-            top = [
-                r["doc_id"]
-                for r in maxsim_search(
-                    bags, "tokens", "doc_id", qs_bag, k=10, metric="cos",
-                    candidates=cand_df, round_digits=6,
-                ).collect()
-            ]
-            return (
-                round(
-                    len(set(brute_top) & set(top)) / max(len(brute_top), 1),
-                    4,
-                ),
-                round(min(cand_count, n_docs) / max(n_docs, 1), 4),
-            )
+    brute = top10()
 
-        # (a) ColBERT's actual candidate generation: per-QUERY-TOKEN
-        # ANN over the token embeddings, doc ids unioned — MaxSim
-        # rewards a doc's single best token per query token, which is
-        # exactly what a token-level search surfaces (and what mean
-        # pooling averages away). The tiny candidate id set joins back
-        # broadcast; at 100 TB this is the standard ColBERT layout
-        # (token index ~|bag|× larger than a doc index, queries cost
-        # |Q| probes).
+    def twostage(cand_df, cand_count):
+        return (
+            round(len(brute & top10(cand_df)) / max(len(brute), 1), 4),
+            round(min(cand_count, n_docs) / max(n_docs, 1), 4),
+        )
+
+    with tempfile.TemporaryDirectory(prefix="bench_maxsim_") as root:
+        # (a) per-QUERY-TOKEN ANN over the token embeddings, doc ids
+        # unioned: MaxSim rewards a doc's single best token per query
+        # token, which a token-level search surfaces
         tok_idx = IVFIndex.build(
             emb.select("vec_id", "embedding", "label"),
-            "embedding", "vec_id", f"{qroot3}/tok",
+            "embedding", "vec_id", f"{root}/tok",
             metric="cos", nlist=8, seed=42,
         )
-        tok_k = 50
         tok_ids = None
-        for q in qs_bag:
+        for qv in qs_bag:
             hit = tok_idx.search(
-                spark, q, k=tok_k, nprobe=tok_idx.manifest.nlist
+                spark, qv, k=50, nprobe=tok_idx.manifest.nlist
             ).select("vec_id")
             tok_ids = hit if tok_ids is None else tok_ids.union(hit)
         tok_cand = (
-            emb.join(SF.broadcast(tok_ids.distinct()), "vec_id")
-            .select(
-                (
-                    SF.col("label").cast("long") * 100
-                    + SF.col("vec_id") % 50
-                ).alias("doc_id")
-            )
+            emb.join(F.broadcast(tok_ids.distinct()), "vec_id")
+            .select(doc_id)
             .distinct()
         )
-        n_tok_cand = tok_cand.count()
-        rec, frac = _twostage_recall(tok_cand, n_tok_cand)
-        quality["maxsim_docs"] = n_docs
-        quality["maxsim_twostage_recall_at10"] = rec
-        quality["maxsim_candidate_fraction"] = frac
-
-        # (b) the mean-pooled-doc-vector variant, reported for honest
-        # comparison: pooling averages away exactly the per-token
-        # matches MaxSim scores, so its candidate recall collapses on
-        # corpora whose relevance is token-peaked (measured 0.1 at
-        # sf0.1 vs token-level candidates above) — the reason ColBERT
-        # serves from a token index, evidenced end-to-end.
-        pooled = bags.select(
-            "doc_id", pool_tokens("tokens", "mean").alias("v")
-        )
+        rec, frac = twostage(tok_cand, tok_cand.count())
+        q["maxsim_docs"] = n_docs
+        q["maxsim_twostage_recall_at10"] = rec
+        q["maxsim_candidate_fraction"] = frac
+        # (b) mean-pooled doc vectors: pooling averages away exactly the
+        # per-token matches MaxSim scores, so candidate recall collapses
+        # on token-peaked corpora — the reason ColBERT serves from a
+        # token index
         ivf_pool = IVFIndex.build(
-            pooled, "v", "doc_id", f"{qroot3}/pool",
+            bags.select("doc_id", pool_tokens("tokens", "mean").alias("v")),
+            "v", "doc_id", f"{root}/pool",
             metric="cos", nlist=8, seed=42,
         )
-        qpool = [(a + b) / 2.0 for a, b in zip(Q64, Q64_B)]
-        cand_k = max(40, 4 * 10)
+        cand_k = 40
         pool_cand = ivf_pool.search(
-            spark, qpool, k=cand_k, nprobe=ivf_pool.manifest.nlist
+            spark, [(x + y) / 2.0 for x, y in zip(Q64, Q64_B)], k=cand_k,
+            nprobe=ivf_pool.manifest.nlist,
         ).select("doc_id")
-        rec_p, frac_p = _twostage_recall(pool_cand, cand_k)
-        quality["maxsim_pooled_recall_at10"] = rec_p
-        quality["maxsim_pooled_candidate_fraction"] = frac_p
-
-        # (c) PLAID tier (arXiv:2205.09707, r9): tokens quantize ONCE
-        # to IVF centroids + an m-byte PQ code of the residual
-        # (~(4+m) B/token vs 4·dim raw); the candidate stage scores
-        # approximate MaxSim entirely from the compressed codes (a
-        # |Q|×nlist centroid table + a |Q|×m×256 residual LUT, zero
-        # token reads) and the exact re-rank touches only the 10%
-        # shortlist. The centroid-ONLY proxy is also reported: on this
-        # fixture the true ranking is decided by WITHIN-cell geometry,
-        # so the pure centroid score plateaus (honest limit — the
-        # reason PLAID carries residuals at all).
-        from lantern_spark.operators.maxsim import (
-            plaid_candidates,
-            plaid_doc_codes,
-            plaid_encode,
-            plaid_refine,
-        )
-
+        rec, frac = twostage(pool_cand, cand_k)
+        q["maxsim_pooled_recall_at10"] = rec
+        q["maxsim_pooled_candidate_fraction"] = frac
+        # (c) PLAID: tokens quantize once to IVF centroids + an m-byte PQ
+        # code of the residual; candidates score from the codes alone and
+        # the exact re-rank touches a 10% shortlist. The centroid-ONLY
+        # proxy plateaus on this fixture (ranking is decided by
+        # within-cell geometry) — the reason PLAID carries residuals.
         plaid_idx = IVFIndex.build(
             emb.select("vec_id", "embedding"),
-            "embedding", "vec_id", f"{qroot3}/plaid_cents",
+            "embedding", "vec_id", f"{root}/plaid_cents",
             metric="cos", nlist=64, seed=42,
         )
-        n_plaid_cand = max(10, int(0.1 * n_docs))
-        t0 = time.time()
-        enc, rcb = plaid_encode(
-            bags, "tokens", "doc_id", plaid_idx, metric="cos", m=16
+        n_cand = max(10, int(0.1 * n_docs))
+
+        def encode():
+            enc, rcb = plaid_encode(
+                bags, "tokens", "doc_id", plaid_idx, metric="cos", m=16
+            )
+            enc = enc.cache()
+            enc.count()
+            return enc, rcb
+
+        (enc, rcb), s = b.time(encode)
+        q["maxsim_plaid_encode_s"] = round(s, 3)
+        (rec, frac), s = b.time(
+            lambda: twostage(
+                plaid_refine(
+                    enc, "doc_id", qs_bag, plaid_idx, rcb,
+                    n_candidates=n_cand, metric="cos",
+                ).select("doc_id"),
+                n_cand,
+            )
         )
-        enc = enc.cache()
-        enc.count()
-        quality["maxsim_plaid_encode_s"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        plaid_cand = plaid_refine(
-            enc, "doc_id", qs_bag, plaid_idx, rcb,
-            n_candidates=n_plaid_cand, metric="cos",
-        ).select("doc_id")
-        rec_c, frac_c = _twostage_recall(plaid_cand, n_plaid_cand)
-        quality["maxsim_plaid_stage_s"] = round(time.time() - t0, 3)
-        quality["maxsim_plaid_recall_at10"] = rec_c
-        quality["maxsim_plaid_candidate_fraction"] = frac_c
-        cent_codes = plaid_doc_codes(
-            bags, "tokens", "doc_id", plaid_idx, metric="cos"
-        )
+        q["maxsim_plaid_stage_s"] = round(s, 3)
+        q["maxsim_plaid_recall_at10"] = rec
+        q["maxsim_plaid_candidate_fraction"] = frac
         cent_cand = plaid_candidates(
-            cent_codes, "doc_id", qs_bag, plaid_idx,
-            n_candidates=n_plaid_cand, metric="cos",
+            plaid_doc_codes(bags, "tokens", "doc_id", plaid_idx, metric="cos"),
+            "doc_id", qs_bag, plaid_idx, n_candidates=n_cand, metric="cos",
         ).select("doc_id")
-        rec_c0, _ = _twostage_recall(cent_cand, n_plaid_cand)
-        quality["maxsim_plaid_centroid_only_recall_at10"] = rec_c0
+        q["maxsim_plaid_centroid_only_recall_at10"] = twostage(cent_cand, n_cand)[0]
         enc.unpersist()
+    bags.unpersist()
+    return q
 
-        bags.unpersist()
-        shutil.rmtree(qroot3, ignore_errors=True)
-    except Exception as e:
-        print(f"# bench quality FAILED: {e}", file=sys.stderr)
-    _cg_check("quality_block")
 
-    # r8 pipeline-op telemetry: the new span-level and sketch-based
-    # dedup tiers, timed on the documents table with correctness
-    # witnesses (removed-token count > 0 proves spans were actually
-    # found; member fraction 1.0 proves zero false negatives; the
-    # outsider fraction shows the sized FPR). Telemetry, not headline
-    # entries — the headline roster stays comparable across rounds.
-    spark.sparkContext.setJobDescription("bench:pipeline_ops")
-    try:
-        from pyspark.sql import functions as SF
+def _docs(b: Bench):
+    from lantern_spark.queries.common import load_table
 
-        from lantern_spark.operators.dedup import exact_substring_dedup
-        from lantern_spark.queries.common import load_table
+    return load_table(b.spark, b.sf_dir, "documents").select("doc_id", "text")
 
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
+
+# Span-level exact-substring dedup on the documents table (removed
+# tokens > 0 proves spans were found), and the driver-local window-hash
+# kernel's throughput on a 20k-token doc (the all-C mapInArrow kernel;
+# the r8 per-token md5 kernel measured ~0.9 Mtok/s and is pinned ≥10×
+# slower in pytest).
+def _substr_dedup(b: Bench) -> dict:
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from lantern_spark.operators.dedup import (
+        _batch_window_hashes,
+        _PowerCache,
+        exact_substring_dedup,
+    )
+
+    docs = _docs(b)
+    agg, s = b.time(
+        lambda: exact_substring_dedup(docs, "text", "doc_id", min_tokens=12)
+        .select(F.col("removed_tokens"), F.xxhash64("text").alias("__h"))
+        .agg(
+            F.sum("removed_tokens").alias("rt"),
+            F.expr("bit_xor(__h)").alias("h"),
         )
-        t0 = time.time()
-        scrub = exact_substring_dedup(docs, "text", "doc_id", min_tokens=12)
-        agg = scrub.select(
-            SF.col("removed_tokens"), SF.xxhash64("text").alias("__h")
-        ).agg(
-            SF.sum("removed_tokens").alias("rt"),
-            SF.expr("bit_xor(__h)").alias("h"),
-        ).collect()[0]
-        quality["substr_dedup_s"] = round(time.time() - t0, 3)
-        quality["substr_removed_tokens"] = int(agg["rt"] or 0)
-        # r9 kernel witness (VERDICT r8 item 1): driver-local window-
-        # hash throughput on a 20k-token doc — the all-C mapInArrow
-        # kernel (Arrow tokenize + dictionary encode + byte-polynomial
-        # hashes + O(tokens) prefix-sum rolling); the r8 kernel
-        # (per-token md5 + O(tokens·w) polynomial) measured ~0.9
-        # Mtok/s on this host, pinned >=10x slower in pytest
-        import numpy as _np
+        .collect()[0]
+    )
+    rng = np.random.default_rng(42)
+    text = " ".join(f"word{i}" for i in rng.zipf(1.3, size=20000) % 5000)
+    pows = _PowerCache()
+    _batch_window_hashes([text], 50, pows)  # warm the power cache
+    _, best = b.time(lambda: _batch_window_hashes([text], 50, pows), reps=5)
+    return {
+        "substr_dedup_s": round(s, 3),
+        "substr_removed_tokens": int(agg["rt"] or 0),
+        "substr_kernel_mtok_per_s": round(20000 / best / 1e6, 2),
+    }
 
-        from lantern_spark.operators.dedup import (
-            _batch_window_hashes,
-            _PowerCache,
-        )
 
-        _rng = _np.random.default_rng(42)
-        _toks = [f"word{i}" for i in (_rng.zipf(1.3, size=20000) % 5000)]
-        _text = " ".join(_toks)
-        _pows = _PowerCache()
-        _batch_window_hashes([_text], 50, _pows)  # warm power cache
-        _best = float("inf")
-        for _ in range(5):
-            _t0 = time.time()
-            _batch_window_hashes([_text], 50, _pows)
-            _best = min(_best, time.time() - _t0)
-        quality["substr_kernel_mtok_per_s"] = round(
-            20000 / _best / 1e6, 2
-        )
-    except Exception as e:
-        print(f"# bench substr_dedup FAILED: {e}", file=sys.stderr)
-    try:
-        from lantern_spark.operators.bloomset import (
-            bloom_fpr,
-            build_bloom_set,
-            probe_bloom_set,
-        )
+# Sharded Bloom set: build + probe time, member fraction (1.0 = zero
+# false negatives), outsider fraction vs the sized FPR, and the
+# per-shard fill ratio (probe_bloom_set refuses past 0.95).
+def _bloomset(b: Bench) -> dict:
+    from pyspark.sql import functions as F
 
-        bparams = dict(n_shards=32, m_bits=32 * 4096 * 8, k=7)
-        t0 = time.time()
-        bloom = build_bloom_set(docs, "text", **bparams).cache()
+    from lantern_spark.operators.bloomset import (
+        bloom_fill_stats,
+        bloom_fpr,
+        build_bloom_set,
+        probe_bloom_set,
+    )
+
+    docs, q = _docs(b), {}
+    params = dict(n_shards=32, m_bits=32 * 4096 * 8, k=7)
+
+    def build_and_probe():
+        bloom = build_bloom_set(docs, "text", **params).cache()
         bloom.count()
         members = (
-            probe_bloom_set(docs, bloom, "text", **bparams)
+            probe_bloom_set(docs, bloom, "text", **params)
             .filter("probable_member")
             .count()
         )
-        quality["bloom_build_probe_s"] = round(time.time() - t0, 3)
-        n_docs_b = docs.count()
-        quality["bloom_member_fraction"] = round(
-            members / max(n_docs_b, 1), 4
-        )
-        outsiders = spark.range(n_docs_b).select(
-            SF.concat(SF.lit("bench-outsider-"), SF.col("id")).alias("text")
-        )
-        fp = (
-            probe_bloom_set(outsiders, bloom, "text", **bparams)
-            .filter("probable_member")
-            .count()
-        )
-        quality["bloom_fp_fraction"] = round(fp / max(n_docs_b, 1), 4)
-        quality["bloom_fp_theoretical"] = round(
-            bloom_fpr(n_docs_b, bparams["m_bits"], bparams["k"]), 4
-        )
-        # saturation diagnostics (r9): fill ratio per shard — the
-        # guard in probe_bloom_set refuses past 0.95; this row shows
-        # the headroom at bench scale
-        from lantern_spark.operators.bloomset import bloom_fill_stats
+        return bloom, members
 
-        fills = bloom_fill_stats(bloom, k=bparams["k"]).agg(
-            SF.avg("fill_ratio").alias("avg"),
-            SF.max("fill_ratio").alias("mx"),
-        ).first()
-        quality["bloom_fill_ratio_avg"] = round(float(fills["avg"]), 6)
-        quality["bloom_fill_ratio_max"] = round(float(fills["mx"]), 6)
-        bloom.unpersist()
-    except Exception as e:
-        print(f"# bench bloomset FAILED: {e}", file=sys.stderr)
-    try:
-        # r9 stretch (VERDICT r8 item 8): the north-star pipeline
-        # COMPOSED — curate (URL dedup + heuristics) → substring/
-        # exact/LSH dedup → 13-gram decontamination vs a held-out
-        # sample → token-budget mixture → sequence packing, one
-        # staged-checkpoint run over the sf corpus with per-stage
-        # drop accounting. This is a cross-stage contract check as
-        # much as a timing row: every stage consumes the previous
-        # stage's real output.
-        from lantern_spark.operators.assemble import (
-            assemble_pretraining_corpus,
-        )
-        from lantern_spark.operators.curate import CurationConfig
+    (bloom, members), s = b.time(build_and_probe)
+    q["bloom_build_probe_s"] = round(s, 3)
+    n = docs.count()
+    q["bloom_member_fraction"] = round(members / max(n, 1), 4)
+    outsiders = b.spark.range(n).select(
+        F.concat(F.lit("bench-outsider-"), F.col("id")).alias("text")
+    )
+    fp = (
+        probe_bloom_set(outsiders, bloom, "text", **params)
+        .filter("probable_member")
+        .count()
+    )
+    q["bloom_fp_fraction"] = round(fp / max(n, 1), 4)
+    q["bloom_fp_theoretical"] = round(bloom_fpr(n, params["m_bits"], params["k"]), 4)
+    fills = bloom_fill_stats(bloom, k=params["k"]).agg(
+        F.avg("fill_ratio").alias("avg"), F.max("fill_ratio").alias("mx")
+    ).first()
+    q["bloom_fill_ratio_avg"] = round(float(fills["avg"]), 6)
+    q["bloom_fill_ratio_max"] = round(float(fills["mx"]), 6)
+    bloom.unpersist()
+    return q
 
-        aroot = tempfile.mkdtemp(prefix="bench_assemble_")
-        from lantern_spark.queries.common import load_table as _alt
 
-        docs = _alt(spark, sf_dir, "documents")  # FULL schema (source!)
-        d = SF.xxhash64("doc_id")
-        with_url = docs.withColumn(
-            "url",
-            SF.concat(
-                SF.lit("https://www.dom"),
-                SF.pmod(d, SF.lit(97)).cast("string"),
-                SF.lit(".com/p/"),
-                SF.pmod(d, SF.lit(1000)).cast("string"),
-                SF.when(d % 3 == 0, SF.lit("?utm_source=x")).otherwise(
-                    SF.lit("")
+# The north-star pipeline COMPOSED — curate (URL dedup + heuristics) →
+# substring/exact/LSH dedup → 13-gram decontamination vs a held-out
+# sample → token-budget mixture → sequence packing, one
+# staged-checkpoint run with per-stage drop accounting. A cross-stage contract
+# check as much as a timing row.
+def _assemble(b: Bench) -> dict:
+    from pyspark.sql import functions as F
+
+    from lantern_spark.operators.assemble import assemble_pretraining_corpus
+    from lantern_spark.operators.curate import CurationConfig
+    from lantern_spark.queries.common import load_table
+
+    docs = load_table(b.spark, b.sf_dir, "documents")  # FULL schema (source)
+    d = F.xxhash64("doc_id")
+    with_url = docs.withColumn(
+        "url",
+        F.concat(
+            F.lit("https://www.dom"),
+            F.pmod(d, F.lit(97)).cast("string"),
+            F.lit(".com/p/"),
+            F.pmod(d, F.lit(1000)).cast("string"),
+            F.when(d % 3 == 0, F.lit("?utm_source=x")).otherwise(F.lit("")),
+        ),
+    )
+    heldout = docs.filter(F.pmod(d, F.lit(100)) == 7)
+    with tempfile.TemporaryDirectory(prefix="bench_assemble_") as root:
+
+        def assemble():
+            res = assemble_pretraining_corpus(
+                b.spark, with_url, "text", "doc_id", f"{root}/ckpt",
+                curation=CurationConfig(
+                    min_tokens=5, min_quality=0.0,
+                    url_col="url", url_dedup=True,
+                    blocked_domains=["dom13.com"],
+                    substr_dedup_min_tokens=25, substr_dedup_salt=4,
+                    exact_dedup=True, near_dedup=True, near_threshold=0.8,
                 ),
+                heldout=heldout,
+                source_col="source",
+                token_budgets={f"src{i}": 8_000.0 for i in range(10)},
+                seq_tokens=512,
+            )
+            res.df.count()
+            return res
+
+        res, s = b.time(assemble)
+    return {
+        "assemble_pipeline_s": round(s, 3),
+        "assemble_stage_rows": res.stage_rows,
+        "assemble_tokens_in": res.tokens_in,
+        "assemble_tokens_out": res.tokens_out,
+        "assemble_n_packs": res.n_packs,
+    }
+
+
+# Anisotropic PQ (ScaNN) vs plain PQ on the held-out 60k fixture at the
+# same code size: the score-aware loss promises lower inner-product
+# score error on the true top-k, so the witness is top-10 score RMSE,
+# plus the two-stage number (truth top-10 found in a 10× ADC shortlist).
+# ADC-only recall is noise-bound at 8 bytes/vector.
+def _apq_quality(b: Bench) -> dict:
+    import numpy as np
+
+    from lantern_spark.fixtures import held_out_probes, replicated_corpus
+    from lantern_spark.operators.anisotropic import (
+        APQModel,
+        apq_codes_local,
+        apq_encode,
+        default_eta,
+        train_apq_local,
+    )
+    from lantern_spark.operators.pq import train_codebook_local
+    from lantern_spark.queries.common import load_table
+    from lantern_spark.types import PQSpec
+
+    emb = load_table(b.spark, b.sf_dir, "embeddings").select("vec_id", "embedding")
+    fix, probes = held_out_probes(replicated_corpus(emb, 30), 20)
+    x = np.asarray([r["embedding"] for r in fix.collect()], dtype=np.float64)
+    queries = np.asarray(probes, dtype=np.float64)
+    spec = PQSpec(dim=x.shape[1], splits=8, clusters=64, seed=42)
+    eta = default_eta(x.shape[1])
+    apq, train_s = b.time(lambda: train_apq_local(x[:10000], spec, eta=eta, iters=5))
+    plain = APQModel(
+        spec=spec, eta=1.0,
+        codebook_rows=train_codebook_local(x[:10000], spec),
+        train_loss=0.0,
+    )
+
+    def metrics(model):
+        cb = model.codebook_array()
+        cbz = np.where(np.isfinite(cb), cb, 0.0)
+        codes = apq_codes_local(x, model)
+        dec = np.concatenate(
+            [cbz[s, codes[:, s]] for s in range(spec.splits)], axis=1
+        )
+        hits = short = 0
+        se = []
+        for qv in queries:
+            s_true, s_adc = x @ qv, dec @ qv
+            top = np.argsort(-s_true)[:10]
+            truth = set(top.tolist())
+            ranked = np.argsort(-s_adc)
+            hits += len(truth & set(ranked[:10].tolist()))
+            short += len(truth & set(ranked[:100].tolist()))
+            se.extend(((s_true[top] - s_adc[top]) ** 2).tolist())
+        n = 10 * len(queries)
+        return hits / n, short / n, float(np.sqrt(np.mean(se)))
+
+    r_a, sh_a, rmse_a = metrics(apq)
+    r_p, sh_p, rmse_p = metrics(plain)
+    _, encode_s = b.time(
+        lambda: apq_encode(emb, "embedding", apq).select("embedding_apq")
+    )
+    return {
+        "apq_train_s": round(train_s, 3),
+        "apq_topk_score_rmse": round(rmse_a, 4),
+        "pq_topk_score_rmse": round(rmse_p, 4),
+        "apq_shortlist100_recall_at10": round(sh_a, 4),
+        "pq_shortlist100_recall_at10": round(sh_p, 4),
+        "apq_ip_recall_at10": round(r_a, 4),
+        "pq_ip_recall_at10": round(r_p, 4),
+        "apq_eta": round(eta, 3),
+        "apq_encode_s": round(encode_s, 3),
+    }
+
+
+# The documents' texts (× ``reps``) joined into ~15 KB bodies. Real
+# WET/WARC records are 10-40 KB; the corpus's ~300 B docs would time
+# per-record header parsing instead of scan throughput.
+def _corpus_bodies(b: Bench, reps: int, sep: str, wrap: str = "{}") -> list:
+    texts = b.spark.read.parquet(f"{b.sf_dir}/documents.parquet").select("text")
+    bodies, buf, size = [], [], 0
+    for t in list(texts.toPandas().text) * reps:
+        buf.append(wrap.format(t))
+        size += len(t)
+        if size >= 15000:
+            bodies.append(sep.join(buf))
+            buf, size = [], 0
+    return bodies
+
+
+# ``recs`` as 8 WARC files (≈ the per-file parallelism Common Crawl
+# ships).
+def _write_shards(path: str, recs: list, suffix: str, **kw) -> None:
+    from lantern_spark.sources.warc import write_warc
+
+    shard = max(1, len(recs) // 8)
+    for i in range(0, len(recs), shard):
+        write_warc(os.path.join(path, f"part-{i:06d}{suffix}"), recs[i : i + shard], **kw)
+
+
+# WET ingestion throughput: the Common Crawl front door is a decompress
+# + regex scan — MB/s on a synthetic WET file built from the documents
+# table (min of 2: run 1 pays first-open/codec init).
+def _wet_ingest(b: Bench) -> dict:
+    from lantern_spark.sources.warc import read_wet
+
+    recs = [
+        {
+            "warc_type": "conversion",
+            "url": f"https://bench.example.com/{i}",
+            "payload": t,
+            "record_id": f"<urn:uuid:bench-{i}>",
+        }
+        for i, t in enumerate(_corpus_bodies(b, 16, "\n\n"))
+    ]
+    raw_mb = sum(len(r["payload"].encode("utf-8")) for r in recs) / 1e6
+    with tempfile.TemporaryDirectory(prefix="bench_wet_") as root:
+        _write_shards(root, recs, ".warc.wet.gz", gzip_per_record=False, gzip_file=True)
+        _, s = b.time(
+            lambda: read_wet(b.spark, root).select("record_id", "text"), reps=2
+        )
+    return {
+        "wet_ingest_s": round(s, 3),
+        "wet_ingest_docs": len(recs),
+        "wet_ingest_text_mb": round(raw_mb, 2),
+        "wet_ingest_mb_per_s": round(raw_mb / s, 2),
+    }
+
+
+# Raw-WARC strict path: per-record-gzip archive (Common Crawl's layout)
+# → streaming Content-Length parse → HTTP envelope split (half the
+# bodies gzip content-coded) → html_to_text. Beside it the Python-re
+# Arrow extractor (byte-identical by test) and the fused one-crossing
+# tier (parse + envelope + extraction in one mapInArrow stage;
+# row-identical by test), so each tradeoff is a number.
+def _warc_ingest(b: Bench) -> dict:
+    from lantern_spark.functions.html import regex_text_extractor
+    from lantern_spark.sources.warc import (
+        build_http_response,
+        read_warc,
+        warc_documents_fused,
+        warc_response_documents,
+    )
+
+    bodies = [
+        "<html><head><title>b</title></head><body>" + body + "</body></html>"
+        for body in _corpus_bodies(b, 8, "\n", wrap="<p>{}</p>")
+    ]
+    recs = [
+        {
+            "warc_type": "response",
+            "url": f"https://bench.example.com/{i}",
+            "payload": build_http_response(t, gzip_body=(i % 2 == 0)),
+            "content_type": "application/http; msgtype=response",
+            "record_id": f"<urn:uuid:warcbench-{i}>",
+        }
+        for i, t in enumerate(bodies)
+    ]
+    html_mb = sum(len(t.encode("utf-8")) for t in bodies) / 1e6
+    spark, q = b.spark, {}
+    with tempfile.TemporaryDirectory(prefix="bench_warc_") as root:
+        _write_shards(root, recs, ".warc.gz", gzip_per_record=True)
+        tiers = {
+            "": lambda: warc_response_documents(read_warc(spark, root)),
+            "_fast": lambda: warc_response_documents(
+                read_warc(spark, root), extractor=regex_text_extractor()
             ),
-        )
-        heldout = docs.filter(SF.pmod(SF.xxhash64("doc_id"), SF.lit(100)) == 7)
-        budgets = {f"src{i}": 8_000.0 for i in range(0, 10)}
-        t0 = time.time()
-        res = assemble_pretraining_corpus(
-            spark, with_url, "text", "doc_id", f"{aroot}/ckpt",
-            curation=CurationConfig(
-                min_tokens=5, min_quality=0.0,
-                url_col="url", url_dedup=True,
-                blocked_domains=["dom13.com"],
-                substr_dedup_min_tokens=25, substr_dedup_salt=4,
-                exact_dedup=True, near_dedup=True, near_threshold=0.8,
+            "_fused": lambda: warc_documents_fused(
+                spark, root, extractor=regex_text_extractor()
             ),
-            heldout=heldout,
-            source_col="source",
-            token_budgets=budgets,
-            seq_tokens=512,
+        }
+        for tier, docs in tiers.items():
+            _, s = b.time(lambda: docs().select("url", "text"), reps=2)
+            q[f"warc_ingest{tier}_s"] = round(s, 3)
+            if tier == "":
+                q["warc_ingest_pages"] = len(recs)
+                q["warc_ingest_html_mb"] = round(html_mb, 2)
+            q[f"warc_ingest{tier}_mb_per_s"] = round(html_mb / s, 2)
+    return q
+
+
+# Full-PSL registered-domain JOIN form vs the curated expression form on
+# the url_dedup corpus: the join's shuffle is the price of full-PSL
+# coverage.
+def _registered_domain(b: Bench) -> dict:
+    from pyspark.sql import functions as F
+
+    from lantern_spark.operators.weburl import (
+        registered_domain,
+        registered_domain_df,
+    )
+    from lantern_spark.queries.dedup import synth_url_expr
+
+    docs = b.spark.read.parquet(f"{b.sf_dir}/documents.parquet").select(
+        "doc_id", synth_url_expr().alias("url")
+    )
+    _, expr_s = b.time(
+        lambda: docs.select(registered_domain("url").alias("d"))
+        .groupBy()
+        .agg(F.countDistinct("d"))
+        .collect()
+    )
+    _, join_s = b.time(
+        lambda: registered_domain_df(docs, "url")
+        .groupBy()
+        .agg(F.countDistinct("registered_domain"))
+        .collect()
+    )
+    return {"rd_expr_form_s": round(expr_s, 3), "rd_join_form_s": round(join_s, 3)}
+
+
+# Graph layer: PageRank, seed expansion, HyperBall harmonic centrality
+# and PageRank under storage-mode lineage cuts (the durability premium
+# SCALE.md cites), over an edge list synthesized from doc_id arithmetic
+# (sf0.1: ~100k weighted edges over 2k domains — enough iterations ×
+# joins to expose a lineage blowup if the checkpoint cadence regresses).
+def _graph(b: Bench) -> dict:
+    from pyspark.sql import functions as F
+
+    from lantern_spark.operators.weburl import (
+        domain_harmonic_centrality,
+        domain_pagerank,
+        expand_seed_domains,
+    )
+    from lantern_spark.plans.lineage import checkpoint_mode
+
+    ndom, q = 2000, {}
+
+    def domain(expr):
+        return F.concat(F.lit("d"), (expr % ndom).cast("string"))
+
+    doc, j = F.col("doc_id"), F.col("j")
+    ge = (
+        b.spark.read.parquet(f"{b.sf_dir}/documents.parquet")
+        .select(F.explode(F.sequence(F.lit(0), F.lit(19))).alias("j"), "doc_id")
+        .select(
+            domain(doc * 20 + j).alias("src_domain"),
+            domain(doc * 7 + j * 13 + 3).alias("dst_domain"),
+            ((doc % 5) + 1).cast("double").alias("n_links"),
         )
-        res.df.count()
-        quality["assemble_pipeline_s"] = round(time.time() - t0, 3)
-        quality["assemble_stage_rows"] = res.stage_rows
-        quality["assemble_tokens_in"] = res.tokens_in
-        quality["assemble_tokens_out"] = res.tokens_out
-        quality["assemble_n_packs"] = res.n_packs
-        shutil.rmtree(aroot, ignore_errors=True)
-    except Exception as e:
-        print(f"# bench assemble FAILED: {e}", file=sys.stderr)
-    _cg_check("assemble_block")
-    # Anisotropic PQ (ScaNN, r8) on the HONEST 60k fixture: the
-    # score-aware loss promises lower inner-product score error on the
-    # pairs that matter (the true top-k) at the same code size — so the
-    # headline witness is top-10 score RMSE, APQ vs plain PQ, plus the
-    # two-stage serving number (truth top-10 found in a 10× ADC
-    # shortlist, the oversample-re-rank shape). Raw ADC-only recall is
-    # reported too; at 8 bytes/vector it is noise-bound for both.
-    spark.sparkContext.setJobDescription("bench:apq_quality")
-    try:
-        import numpy as _np
+        .where(F.col("src_domain") != F.col("dst_domain"))
+        .cache()
+    )
+    q["graph_edges"] = ge.count()
 
-        from lantern_spark.fixtures import held_out_probes, replicated_corpus
-        from lantern_spark.operators.anisotropic import (
-            APQModel,
-            apq_codes_local,
-            apq_encode,
-            default_eta,
-            train_apq_local,
-        )
-        from lantern_spark.operators.pq import train_codebook_local
-        from lantern_spark.queries.common import load_table
-        from lantern_spark.types import PQSpec
-
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        fix = replicated_corpus(emb, 30)
-        fix, probes = held_out_probes(fix, 20)
-        x = _np.asarray(
-            [r["embedding"] for r in fix.collect()], dtype=_np.float64
-        )
-        queries = _np.asarray(probes, dtype=_np.float64)
-        dim = x.shape[1]
-        spec = PQSpec(dim=dim, splits=8, clusters=64, seed=42)
-        eta = default_eta(dim)
-        t0 = time.time()
-        apq = train_apq_local(x[:10000], spec, eta=eta, iters=5)
-        quality["apq_train_s"] = round(time.time() - t0, 3)
-        plain = APQModel(
-            spec=spec, eta=1.0,
-            codebook_rows=train_codebook_local(x[:10000], spec),
-            train_loss=0.0,
-        )
-
-        def _metrics(model):
-            cb = model.codebook_array()
-            cbz = _np.where(_np.isfinite(cb), cb, 0.0)
-            codes = apq_codes_local(x, model)
-            dec = _np.concatenate(
-                [cbz[s, codes[:, s]] for s in range(spec.splits)], axis=1
-            )
-            hits = short = 0
-            se = []
-            for q in queries:
-                s_true, s_adc = x @ q, dec @ q
-                top = _np.argsort(-s_true)[:10]
-                truth = set(top.tolist())
-                hits += len(truth & set(_np.argsort(-s_adc)[:10].tolist()))
-                short += len(
-                    truth & set(_np.argsort(-s_adc)[:100].tolist())
-                )
-                se.extend(((s_true[top] - s_adc[top]) ** 2).tolist())
-            nq = len(queries)
-            return (
-                hits / (10 * nq),
-                short / (10 * nq),
-                float(_np.sqrt(_np.mean(se))),
-            )
-
-        r_a, sh_a, rmse_a = _metrics(apq)
-        r_p, sh_p, rmse_p = _metrics(plain)
-        quality["apq_topk_score_rmse"] = round(rmse_a, 4)
-        quality["pq_topk_score_rmse"] = round(rmse_p, 4)
-        quality["apq_shortlist100_recall_at10"] = round(sh_a, 4)
-        quality["pq_shortlist100_recall_at10"] = round(sh_p, 4)
-        quality["apq_ip_recall_at10"] = round(r_a, 4)
-        quality["pq_ip_recall_at10"] = round(r_p, 4)
-        quality["apq_eta"] = round(eta, 3)
-        t0 = time.time()
-        apq_encode(emb, "embedding", apq).select(
-            SF.xxhash64("embedding_apq").alias("h")
-        ).agg(SF.expr("bit_xor(h)")).collect()
-        quality["apq_encode_s"] = round(time.time() - t0, 3)
-    except Exception as e:
-        print(f"# bench apq FAILED: {e}", file=sys.stderr)
-
-    # WET ingestion throughput (r10): the Common Crawl front door is a
-    # decompress+regex scan — publish MB/s on a synthetic WET file
-    # built from the documents table so the all-JVM fast path's cost
-    # claim is measured, not asserted. Telemetry only (not headline).
-    try:
-        import shutil as _sh
-        import tempfile as _wtf
-
-        from pyspark.sql import functions as _WF
-
-        from lantern_spark.sources.warc import read_wet, write_warc
-
-        docs_pd = (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id", "text")
-            .toPandas()
-        )
-        wet_dir = _wtf.mkdtemp(prefix="bench_wet_")
-        try:
-            # Real WET conversion records are 10-40 KB; the corpus's
-            # ~300 B docs would make the number measure per-record
-            # header-regex overhead instead of scan throughput, so
-            # texts concatenate into ~15 KB payloads (×16 replicas →
-            # ~24 MB raw, Common Crawl's record shape at toy scale).
-            bodies, _buf, _sz = [], [], 0
-            for t in list(docs_pd.text) * 16:
-                _buf.append(t)
-                _sz += len(t)
-                if _sz >= 15000:
-                    bodies.append("\n\n".join(_buf))
-                    _buf, _sz = [], 0
-            recs = [
-                {
-                    "warc_type": "conversion",
-                    "url": f"https://bench.example.com/{i}",
-                    "payload": t,
-                    "record_id": f"<urn:uuid:bench-{i}>",
-                }
-                for i, t in enumerate(bodies)
-            ]
-            # 8 shards ≈ the per-file parallelism Common Crawl ships
-            shard = max(1, len(recs) // 8)
-            paths = []
-            for i in range(0, len(recs), shard):
-                p = os.path.join(wet_dir, f"part-{i:06d}.warc.wet.gz")
-                write_warc(p, recs[i : i + shard], gzip_per_record=False,
-                           gzip_file=True)
-                paths.append(p)
-            raw_mb = sum(
-                len(r["payload"].encode("utf-8")) for r in recs
-            ) / 1e6
-            spark.sparkContext.setJobDescription("bench:wet_ingest")
-            dt = None
-            for _ in range(2):  # min-of-2, the bench's own estimator:
-                # run 1 pays first-open/codec init, run 2 is the scan
-                t0 = time.time()
-                read_wet(spark, wet_dir).select(
-                    _WF.xxhash64("record_id", "text").alias("h")
-                ).agg(_WF.expr("bit_xor(h)")).collect()
-                d = time.time() - t0
-                dt = d if dt is None else min(dt, d)
-            quality["wet_ingest_s"] = round(dt, 3)
-            quality["wet_ingest_docs"] = len(recs)
-            quality["wet_ingest_text_mb"] = round(raw_mb, 2)
-            quality["wet_ingest_mb_per_s"] = round(raw_mb / dt, 2)
-        finally:
-            _sh.rmtree(wet_dir, ignore_errors=True)
-    except Exception as e:
-        print(f"# bench wet FAILED: {e}", file=sys.stderr)
-
-    # Raw-WARC strict-path throughput (r11, review r10 item 6): the
-    # full response pipeline — per-record-gzip archive (Common Crawl's
-    # layout) → streaming Content-Length parse → HTTP envelope split
-    # (half the bodies gzip content-coded) → html_to_text → documents.
-    # Confirms the r11 streaming-decompress rewrite and HTTP layer
-    # didn't cost the strict path its throughput. Telemetry only.
-    try:
-        import shutil as _sh
-        import tempfile as _wtf
-
-        from pyspark.sql import functions as _WF
-
-        from lantern_spark.sources.warc import (
-            build_http_response,
-            read_warc,
-            warc_response_documents,
-            write_warc,
-        )
-
-        docs_pd = (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("text")
-            .toPandas()
-        )
-        warc_dir = _wtf.mkdtemp(prefix="bench_warc_")
-        try:
-            # ~15 KB HTML pages from the corpus text (same shaping
-            # rationale as the WET witness), ×8 replicas
-            bodies, _buf, _sz = [], [], 0
-            for t in list(docs_pd.text) * 8:
-                _buf.append(f"<p>{t}</p>")
-                _sz += len(t)
-                if _sz >= 15000:
-                    bodies.append(
-                        "<html><head><title>b</title></head><body>"
-                        + "\n".join(_buf)
-                        + "</body></html>"
-                    )
-                    _buf, _sz = [], 0
-            recs = [
-                {
-                    "warc_type": "response",
-                    "url": f"https://bench.example.com/{i}",
-                    "payload": build_http_response(
-                        t, gzip_body=(i % 2 == 0)
-                    ),
-                    "content_type": "application/http; msgtype=response",
-                    "record_id": f"<urn:uuid:warcbench-{i}>",
-                }
-                for i, t in enumerate(bodies)
-            ]
-            shard = max(1, len(recs) // 8)
-            for i in range(0, len(recs), shard):
-                write_warc(
-                    os.path.join(warc_dir, f"part-{i:06d}.warc.gz"),
-                    recs[i : i + shard],
-                    gzip_per_record=True,
-                )
-            html_mb = sum(len(b.encode("utf-8")) for b in bodies) / 1e6
-            spark.sparkContext.setJobDescription("bench:warc_ingest")
-            dt = None
-            for _ in range(2):
-                t0 = time.time()
-                warc_response_documents(read_warc(spark, warc_dir)).select(
-                    _WF.xxhash64("url", "text").alias("h")
-                ).agg(_WF.expr("bit_xor(h)")).collect()
-                d = time.time() - t0
-                dt = d if dt is None else min(dt, d)
-            quality["warc_ingest_s"] = round(dt, 3)
-            quality["warc_ingest_pages"] = len(recs)
-            quality["warc_ingest_html_mb"] = round(html_mb, 2)
-            quality["warc_ingest_mb_per_s"] = round(html_mb / dt, 2)
-            # r12: the Python-re Arrow fast path for the extraction
-            # tier (byte-identical by test; ~3×/core on this corpus
-            # shape) — measured side by side so the default-vs-fast
-            # tradeoff is a number, not a claim
-            from lantern_spark.functions.html import regex_text_extractor
-
-            spark.sparkContext.setJobDescription("bench:warc_ingest_fast")
-            dtf = None
-            for _ in range(2):
-                t0 = time.time()
-                warc_response_documents(
-                    read_warc(spark, warc_dir),
-                    extractor=regex_text_extractor(),
-                ).select(
-                    _WF.xxhash64("url", "text").alias("h")
-                ).agg(_WF.expr("bit_xor(h)")).collect()
-                d = time.time() - t0
-                dtf = d if dtf is None else min(dtf, d)
-            quality["warc_ingest_fast_s"] = round(dtf, 3)
-            quality["warc_ingest_fast_mb_per_s"] = round(html_mb / dtf, 2)
-            # r14: the ONE-Python-crossing fused tier (parse + HTTP
-            # envelope + extraction in a single mapInArrow stage —
-            # payload bytes never round-trip the Arrow boundary);
-            # row-identical to the staged path by test
-            from lantern_spark.sources.warc import warc_documents_fused
-
-            spark.sparkContext.setJobDescription("bench:warc_ingest_fused")
-            dtz = None
-            for _ in range(2):
-                t0 = time.time()
-                warc_documents_fused(
-                    spark, warc_dir, extractor=regex_text_extractor()
-                ).select(
-                    _WF.xxhash64("url", "text").alias("h")
-                ).agg(_WF.expr("bit_xor(h)")).collect()
-                d = time.time() - t0
-                dtz = d if dtz is None else min(dtz, d)
-            quality["warc_ingest_fused_s"] = round(dtz, 3)
-            quality["warc_ingest_fused_mb_per_s"] = round(html_mb / dtz, 2)
-        finally:
-            _sh.rmtree(warc_dir, ignore_errors=True)
-    except Exception as e:
-        print(f"# bench warc FAILED: {e}", file=sys.stderr)
-
-    # Full-PSL registered-domain JOIN form vs the curated expression
-    # form on the url_dedup corpus (r11, review r10 item 3): the join
-    # form's shuffle cost is the price of full-PSL coverage — publish
-    # both so the tradeoff is measured. Telemetry only.
-    try:
-        from lantern_spark.operators.weburl import (
-            registered_domain,
-            registered_domain_df,
-        )
-        from lantern_spark.queries.dedup import synth_url_expr
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", synth_url_expr().alias("url")
-        )
-        spark.sparkContext.setJobDescription("bench:registered_domain")
-        t0 = time.time()
-        docs.select(
-            registered_domain("url").alias("d")
-        ).groupBy().agg(SF.countDistinct("d")).collect()
-        quality["rd_expr_form_s"] = round(time.time() - t0, 3)
-        t0 = time.time()
-        registered_domain_df(docs, "url").groupBy().agg(
-            SF.countDistinct("registered_domain")
-        ).collect()
-        quality["rd_join_form_s"] = round(time.time() - t0, 3)
-    except Exception as e:
-        print(f"# bench registered_domain FAILED: {e}", file=sys.stderr)
-
-    # Graph-layer witnesses (r12, review r11 item 7): PageRank and
-    # seed expansion were unbenched, so the localCheckpoint cadence
-    # had no measured anchor. Edge list synthesized at corpus scale
-    # from doc_id arithmetic (sf0.1: ~100k weighted edges over 2k
-    # domains — enough iterations×joins to expose a lineage blowup if
-    # the checkpoint cadence ever regresses). Telemetry only.
-    try:
-        from lantern_spark.operators.weburl import (
-            domain_pagerank,
-            expand_seed_domains,
-        )
-
-        ndom = 2000
-        ge = (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id")
-            .select(
-                SF.explode(
-                    SF.sequence(SF.lit(0), SF.lit(19))
-                ).alias("j"),
-                "doc_id",
-            )
-            .select(
-                SF.concat(
-                    SF.lit("d"),
-                    ((SF.col("doc_id") * 20 + SF.col("j")) % ndom)
-                    .cast("string"),
-                ).alias("src_domain"),
-                SF.concat(
-                    SF.lit("d"),
-                    ((SF.col("doc_id") * 7 + SF.col("j") * 13 + 3) % ndom)
-                    .cast("string"),
-                ).alias("dst_domain"),
-                ((SF.col("doc_id") % 5) + 1)
-                .cast("double")
-                .alias("n_links"),
-            )
-            .where(SF.col("src_domain") != SF.col("dst_domain"))
-            .cache()
-        )
-        quality["graph_edges"] = ge.count()
-        spark.sparkContext.setJobDescription("bench:pagerank")
-        t0 = time.time()
+    def rank_mass():
         ranks = domain_pagerank(ge, iterations=10)
-        total_rank = ranks.agg(SF.sum("rank").alias("s")).first()["s"]
-        quality["pagerank_s"] = round(time.time() - t0, 3)
-        # the distribution invariant: total rank ≈ 1 (dangling mass
-        # redistributed, not dropped) — a free correctness witness
-        quality["pagerank_mass"] = round(float(total_rank), 4)
-        spark.sparkContext.setJobDescription("bench:seed_expand")
-        t0 = time.time()
-        expand_seed_domains(
-            ge, ["d0", "d7", "d42"], hops=2
-        ).agg(SF.count("*").alias("c")).collect()
-        quality["seed_expand_s"] = round(time.time() - t0, 3)
-        # r13: HyperBall harmonic centrality — the quality prior
-        # Common Crawl publishes. Witnesses: wall time and the mean
-        # reachable-ball estimate (a collapsing ball estimate would
-        # mean the sketch merge regressed).
-        from lantern_spark.operators.weburl import (
-            domain_harmonic_centrality,
+        return ranks.agg(F.sum("rank").alias("s")).first()["s"]
+
+    mass, s = b.time(rank_mass)
+    q["pagerank_s"] = round(s, 3)
+    # total rank ≈ 1: dangling mass is redistributed, not dropped
+    q["pagerank_mass"] = round(float(mass), 4)
+    _, s = b.time(
+        lambda: expand_seed_domains(ge, ["d0", "d7", "d42"], hops=2)
+        .agg(F.count("*").alias("c"))
+        .collect()
+    )
+    q["seed_expand_s"] = round(s, 3)
+    # a collapsing ball estimate would mean the sketch merge regressed
+    hstats, s = b.time(
+        lambda: domain_harmonic_centrality(ge, max_hops=4, log2m=8)
+        .agg(
+            F.avg("harmonic").alias("h"),
+            F.avg("reachable_estimate").alias("b"),
         )
+        .first()
+    )
+    q["harmonic_s"] = round(s, 3)
+    q["harmonic_mean"] = round(float(hstats["h"]), 3)
+    q["harmonic_mean_ball"] = round(float(hstats["b"]), 1)
+    with tempfile.TemporaryDirectory(prefix="bench_ckpt_") as ckdir:
 
-        spark.sparkContext.setJobDescription("bench:harmonic")
-        t0 = time.time()
-        hstats = domain_harmonic_centrality(
-            ge, max_hops=4, log2m=8
-        ).agg(
-            SF.avg("harmonic").alias("h"),
-            SF.avg("reachable_estimate").alias("b"),
-        ).first()
-        quality["harmonic_s"] = round(time.time() - t0, 3)
-        quality["harmonic_mean"] = round(float(hstats["h"]), 3)
-        quality["harmonic_mean_ball"] = round(float(hstats["b"]), 1)
-        # r13: the durability premium, measured — the same PageRank
-        # under storage-mode lineage cuts (staged parquet write+read
-        # per cut; the reliable/HDFS mode sits between the two). The
-        # SCALE.md checkpoint table cites these numbers.
-        import tempfile as _ckt
+        def durable():
+            with checkpoint_mode("storage", dir=ckdir):
+                rank_mass()
 
-        from lantern_spark.plans.lineage import checkpoint_mode
+        q["pagerank_storage_ckpt_s"] = round(b.time(durable)[1], 3)
+    ge.unpersist()
+    return q
 
-        _ckdir = _ckt.mkdtemp(prefix="bench_ckpt_")
-        spark.sparkContext.setJobDescription("bench:pagerank_durable")
-        t0 = time.time()
-        with checkpoint_mode("storage", dir=_ckdir):
-            domain_pagerank(ge, iterations=10).agg(
-                SF.sum("rank").alias("s")
-            ).collect()
-        quality["pagerank_storage_ckpt_s"] = round(time.time() - t0, 3)
-        import shutil as _cks
 
-        _cks.rmtree(_ckdir, ignore_errors=True)
-        ge.unpersist()
-    except Exception as e:
-        print(f"# bench graph layer FAILED: {e}", file=sys.stderr)
-    _cg_check("graph_block")
+TELEMETRY = [
+    Entry("retired_fullprobe", _retired_fullprobe),
+    Entry("ann_quality", _ann_quality),
+    Entry("ivf_pq_quality", _ivf_pq_quality),
+    Entry("maxsim_quality", _maxsim_quality),
+    Entry("substr_dedup", _substr_dedup),
+    Entry("bloomset", _bloomset),
+    Entry("assemble", _assemble),
+    Entry("apq_quality", _apq_quality),
+    Entry("wet_ingest", _wet_ingest),
+    Entry("warc_ingest", _warc_ingest),
+    Entry("registered_domain", _registered_domain),
+    Entry("graph", _graph),
+]
 
-    _cg_check("telemetry_blocks")  # quality/pipeline telemetry above
+
+def table() -> list:
+    """Every entry, in run order: warm-up, builds, headline queries (min
+    of 2), telemetry."""
+    return (
+        [Entry("warmup", _warmup)]
+        + _builds()
+        + [
+            Entry(name, lambda b, fn=fn: fn(b.spark, b.sf_dir), reps=2, headline=True)
+            for name, fn in headline_queries().items()
+        ]
+        + TELEMETRY
+    )
+
+
+# -- output -----------------------------------------------------------
+
+# quality keys kept on the stdout line when the whole block does not fit
+QUALITY_KEEP = (
+    "fixture_rows ivf_nlist ivf_nprobe ivf_recall_at10 "
+    "ivf_scan_fraction ivf_recall_at10_nprobe1 hnsw_recall_at10 "
+    "hnsw_scan_fraction ivf_pq_recall_at10 "
+    "ivf_pq_byte_scan_fraction router_path router_nat_path "
+    "ivf_fold_clustered_s ivf_fold_scattered_s ivf_rebuild_s "
+    "hnsw_fold_s hnsw_rebuild_s "
+    "maxsim_twostage_recall_at10 maxsim_candidate_fraction "
+    "substr_dedup_s substr_removed_tokens bloom_build_probe_s "
+    "bloom_member_fraction bloom_fp_fraction "
+    "apq_topk_score_rmse pq_topk_score_rmse "
+    "apq_shortlist100_recall_at10 pq_shortlist100_recall_at10 "
+    "wet_ingest_mb_per_s warc_ingest_mb_per_s "
+    "rd_expr_form_s rd_join_form_s "
+    "pagerank_s pagerank_mass seed_expand_s harmonic_s "
+    "harmonic_mean_ball pagerank_storage_ckpt_s "
+    "warc_ingest_fast_mb_per_s warc_ingest_fused_mb_per_s"
+).split()
+
+
+def short_line(payload: dict, budget: int = 1950) -> str:
+    """The stdout line: the payload without the file-only fields,
+    trimmed progressively until it fits ``budget`` characters (the
+    driver records only the last ~2000 chars of stdout, and r7's line
+    outgrew that). Nothing is lost: BENCH_FULL.json keeps every field."""
+
+    def dump(d):
+        return json.dumps(d, separators=(",", ":"))
+
+    line = {
+        k: v for k, v in payload.items()
+        if k not in ("runs", "run_spread", "layers")
+    }
+    line["full"] = "BENCH_FULL.json"
+    s = dump(line)
+    if len(s) > budget:  # timings to 2 decimals (noise floor is ~0.1s)
+        line["queries"] = {k: round(v, 2) for k, v in line["queries"].items()}
+        line["quality"] = {
+            k: (round(v, 3) if isinstance(v, float) else v)
+            for k, v in line["quality"].items()
+        }
+        s = dump(line)
+    if len(s) > budget:
+        # "queries" is the driver contract — quality detail yields first
+        line["quality"] = {
+            k: v for k, v in line["quality"].items() if k in QUALITY_KEEP
+        }
+        line["quality_full"] = "BENCH_FULL.json"
+        s = dump(line)
+    if len(s) > budget:  # still over: quality entirely in the file
+        line.pop("quality", None)
+        s = dump(line)
+    if len(s) > budget:  # pathological; never expected
+        line.pop("queries", None)
+        line["queries_file"] = "BENCH_FULL.json"
+        s = dump(line)
+    return s
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    host_start = _host_snapshot()
+    steal_start = probe.steal_seconds()
+
+    # Janino-64KB tripwire: tee fd 2 to a log BEFORE the JVM starts, so
+    # "Failed to compile" / "grows beyond 64 KB" lines can be attributed
+    # to the entry that produced them (interpreted fallback is correct,
+    # just slow, and no plan-pin test can see it)
+    from lantern_spark.plans.codegen_guard import CodegenFailureMonitor
+
+    monitor = CodegenFailureMonitor.install(
+        os.path.join(tempfile.gettempdir(), f"bench_stderr_{os.getpid()}.log")
+    )
+
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("lantern-spark-bench")
+        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+
+    b = Bench(probe.Tracer(spark, enabled=True), sf_dir, monitor)
+    for entry in table():
+        b.run(entry)
     payload = {
         "metric": "headline_queries_total_wall",
-        "value": round(total, 3),
+        "value": round(b.total, 3),
         "unit": "sec",
-        "queries": timings,
-        # janino tripwire (r13): per-entry count of generated-code
-        # compile failures seen on driver stderr — non-empty means a
-        # stage silently runs interpreted (2-5x slower at scale).
-        # MUST stay {} on a healthy tree.
-        "codegen_failures": codegen_failures,
-        # estimator provenance (r6 VERDICT item 4): per-query value =
-        # min over `runs_per_query` runs; `runs` holds every raw
-        # sample so the spread is auditable. Builds are single-run
-        # (one-time costs; repeats hit caches).
+        "queries": b.timings,
+        # per-entry count of generated-code compile failures seen on
+        # driver stderr — MUST stay {} on a healthy tree
+        "codegen_failures": b.codegen_failures,
+        # headline queries: min over runs_per_query back-to-back runs;
+        # `runs` holds every raw sample. Builds are single-run (one-time
+        # costs; repeats hit caches).
         "runs_per_query": 2,
         "estimator": "min_of_runs",
-        # methodology provenance (r7 VERDICT item 3/6): estimator or
-        # warmup changes shift cross-round comparability, so they bump
-        # this and are machine-visible. History: v1 = r1-r5 (single
-        # run, session-only warmup); v2 = r6 (min-of-2 estimator);
-        # v3 = r7 (untimed pandas-UDF + partitioned-write-committer
-        # warmup absorbing ~5 s of first-use cost that previously
-        # landed inside build:ivf_pq_index).
+        # bumped whenever the estimator or warm-up changes. v1 = r1-r5
+        # (single run, session-only warm-up); v2 = r6 (min-of-2);
+        # v3 = r7 (pandas-UDF + partitioned-write warm-up); v4 = r14
+        # (first-use codegen families warm-up)
         "warmup_version": 4,
-        "runs": raw_runs,
-        # host-condition provenance (r10, review r9 item 7): per-query
-        # swings of ±30% at sub-second times with no plan change are
-        # VM noise — load averages bracket the run, and run_spread
-        # summarizes max−min over the raw samples so the reviewer can
-        # discount noisy queries without re-deriving it from `runs`.
+        "runs": b.runs,
         "host": {
             "start": host_start,
             "end": _host_snapshot(),
@@ -1461,84 +1265,28 @@ def main() -> None:
         },
         "run_spread": {
             name: round(max(s) - min(s), 3)
-            for name, s in raw_runs.items()
+            for name, s in b.runs.items()
             if len(s) > 1
         },
-        "quality": quality,
+        "quality": b.quality,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # file-only: per-entry status-store counts of the fastest
+        # repetition plus host steal, to tell host noise from a code
+        # change without re-running
+        "layers": {
+            "steal_s": {
+                "start": round(steal_start, 2),
+                "end": round(probe.steal_seconds(), 2),
+            },
+            "entries": b.layers,
+        },
     }
-    # Full payload (raw samples included) → BENCH_FULL.json next to
-    # this script. The stdout line must stay SHORT: the driver records
-    # only the last ~2000 chars of stdout, and r7's line outgrew that
-    # (the headline total became unrecoverable from BENCH_r07.json —
-    # VERDICT r7 item 6). Progressive trimming below guarantees the
-    # printed line parses; nothing is lost — the full file keeps every
-    # field at full precision.
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
     try:
-        with open(full_path, "w") as f:
+        with open(os.path.join(HERE, "BENCH_FULL.json"), "w") as f:
             json.dump(payload, f, indent=1)
     except OSError as e:
         print(f"# bench could not write BENCH_FULL.json: {e}", file=sys.stderr)
-    # run_spread stays file-only (derivable from `runs`, both in the
-    # full payload); host conditions ride the short line — they are
-    # the first thing a reviewer needs against a noisy round
-    line = {
-        k: v for k, v in payload.items() if k not in ("runs", "run_spread")
-    }
-    line["full"] = "BENCH_FULL.json"
-    budget = 1950
-
-    def _dump(d):
-        return json.dumps(d, separators=(",", ":"))
-
-    s = _dump(line)
-    if len(s) > budget:  # timings to 2 decimals (noise floor is ~0.1s)
-        line["queries"] = {
-            k: round(v, 2) for k, v in line["queries"].items()
-        }
-        line["quality"] = {
-            k: (round(v, 3) if isinstance(v, float) else v)
-            for k, v in line["quality"].items()
-        }
-        s = _dump(line)
-    if len(s) > budget:
-        # "queries" is the driver contract — quality detail yields
-        # first: keep the headline quality numbers, point at the full
-        # file for the rest
-        keep = (
-            "fixture_rows ivf_nlist ivf_nprobe ivf_recall_at10 "
-            "ivf_scan_fraction ivf_recall_at10_nprobe1 hnsw_recall_at10 "
-            "hnsw_scan_fraction ivf_pq_recall_at10 "
-            "ivf_pq_byte_scan_fraction router_path router_nat_path "
-            "ivf_fold_clustered_s ivf_fold_scattered_s ivf_rebuild_s "
-            "hnsw_fold_s hnsw_rebuild_s "
-            "maxsim_twostage_recall_at10 maxsim_candidate_fraction "
-            "substr_dedup_s substr_removed_tokens bloom_build_probe_s "
-            "bloom_member_fraction bloom_fp_fraction "
-            "apq_topk_score_rmse pq_topk_score_rmse "
-            "apq_shortlist100_recall_at10 pq_shortlist100_recall_at10 "
-            "wet_ingest_mb_per_s warc_ingest_mb_per_s "
-            "rd_expr_form_s rd_join_form_s "
-            "pagerank_s pagerank_mass seed_expand_s harmonic_s "
-            "harmonic_mean_ball pagerank_storage_ckpt_s "
-            "warc_ingest_fast_mb_per_s warc_ingest_fused_mb_per_s"
-        ).split()
-        line["quality"] = {
-            k: v for k, v in line["quality"].items() if k in keep
-        }
-        line["quality_full"] = "BENCH_FULL.json"
-        s = _dump(line)
-    if len(s) > budget:  # still over: quality entirely in the file
-        line.pop("quality", None)
-        s = _dump(line)
-    if len(s) > budget:  # pathological; never expected
-        line.pop("queries", None)
-        line["queries_file"] = "BENCH_FULL.json"
-        s = _dump(line)
-    print(s)
+    print(short_line(payload))
     spark.stop()
 
 

@@ -235,13 +235,15 @@ def _dir_fingerprint(path: str):
         return None
 
 
-def _path_has_parquet(path: str) -> bool:
+def first_parquet(path: str) -> Optional[str]:
+    """One ``*.parquet`` file under local directory ``path``, or None."""
     if not os.path.isdir(path):
-        return False
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+        return None
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                return os.path.join(root, f)
+    return None
 
 
 class IndexArtifact:
@@ -282,10 +284,16 @@ class IndexArtifact:
         return df
 
     def _has(self, sub: str) -> bool:
-        return _path_has_parquet(os.path.join(self.path, sub))
+        return first_parquet(os.path.join(self.path, sub)) is not None
 
     def _delta_keys(self) -> Tuple[str, str, int]:
         """(id column, vector column, folded_seq watermark)."""
+        raise NotImplementedError
+
+    def _stored_types(self, spark) -> dict:
+        """{column: Spark type} of the stored rows. Delta appends cast
+        to it, so every ``delta/`` file carries one physical type per
+        column whatever the caller passed."""
         raise NotImplementedError
 
     # -- writer side ----------------------------------------------------
@@ -313,6 +321,16 @@ class IndexArtifact:
 
         self._writer_entry()
         seq = int(FS.read_text(os.path.join(self.path, DELTA_SEQ)) or 0) + 1
+        # one footer type per column: a multi-file read of delta/ takes
+        # its schema from one footer and fails on any file that differs
+        # (array<double> batch after array<float>)
+        stored = self._stored_types(df.sparkSession)
+        df = df.select(
+            *[
+                F.col(c).cast(stored[c]).alias(c) if c in stored else F.col(c)
+                for c in df.columns
+            ]
+        )
         self._append(
             DELTA,
             df.withColumn("__delta_seq", F.lit(seq).cast("long")),

@@ -35,7 +35,7 @@ in streaming/dedup_stream.streaming_bloom_dedup.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Any, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -127,7 +127,7 @@ def build_bloom_set(
         ]
     )
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
         bits = np.zeros(m_shard // 8, dtype=np.uint8)
         pos = _positions_np(
             pdf["__h1"].to_numpy(np.int64),
@@ -241,7 +241,9 @@ def probe_bloom_set(
     out_cols = [f.name for f in df.schema.fields]
     key_name = key_col
 
-    def probe(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def probe(
+        key: Tuple[Any, ...], left: pd.DataFrame, right: pd.DataFrame
+    ) -> pd.DataFrame:
         res = left[out_cols].copy()
         if len(right) == 0 or int(key[0]) < 0:
             res[flag_col] = False

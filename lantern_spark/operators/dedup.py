@@ -21,7 +21,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Any, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -815,7 +815,7 @@ def semantic_dedup(
     thr = float(threshold)
     rd = round_digits
 
-    def prune_cluster(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def prune_cluster(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col, kind="stable")
         ids = pdf[id_col].to_numpy()
         v = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)

@@ -45,7 +45,7 @@ import heapq
 import math
 import os
 import pickle
-from typing import Iterator, Optional, Sequence
+from typing import Any, Iterator, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -488,6 +488,10 @@ class HNSWIndex(IndexArtifact):
     def _delta_keys(self) -> tuple:
         mf = self.manifest
         return mf["id_column"], mf["column"], int(mf.get("folded_seq", 0))
+
+    def _stored_types(self, spark: SparkSession) -> dict:
+        mf = self.manifest
+        return {mf["id_column"]: "long", mf["column"]: self._vec_sql()}
 
     @classmethod
     def build(
@@ -1316,7 +1320,7 @@ class HNSWIndex(IndexArtifact):
         kk, eff = int(k), int(ef)
         id_col = mf["id_column"]
 
-        def walk_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def walk_shard(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
             sid = int(key[0])
             import pyarrow.dataset as pads
 

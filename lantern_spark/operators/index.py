@@ -290,6 +290,20 @@ class IVFIndex(IndexArtifact):
             int((mf.params or {}).get("folded_seq", 0)),
         )
 
+    def _stored_types(self, spark: SparkSession) -> dict:
+        # one footer, read on the driver: a Spark schema read of lists/
+        # lists every list_id= dir (a Spark job past 32 of them) and
+        # reads the footer in another job
+        part = artifact.first_parquet(os.path.join(self.path, "lists"))
+        if part is None:  # not a local path
+            schema = self.lists(spark).schema
+        else:
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            schema = from_arrow_schema(pq.read_schema(part))
+        return {f.name: f.dataType for f in schema.fields}
+
     def _release_batch_artifacts(self) -> None:
         """Release the previous batch's cached assignment + broadcast.
         Safe even if that result is still held un-materialized: both
@@ -1046,11 +1060,9 @@ class IVFIndex(IndexArtifact):
                 # partitions makes the next multi-file read fail on a
                 # footer-type mismatch — fold preserves the index's
                 # declared storage types (a rebuild may widen them; a
-                # fold never does)
-                stored = {
-                    f.name: f.dataType
-                    for f in self.lists(spark).schema.fields
-                }
+                # fold never does). Appends cast as well, so this is a
+                # no-op on the deltas they wrote.
+                stored = self._stored_types(spark)
                 delta = live.select(
                     *[
                         F.col(c_).cast(stored[c_]).alias(c_)

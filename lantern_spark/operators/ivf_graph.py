@@ -42,7 +42,7 @@ tolerates them better at higher per-query cost.
 from __future__ import annotations
 
 import os
-from typing import Iterator, Optional, Sequence
+from typing import Any, Iterator, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -489,7 +489,7 @@ class IVFGraphIndex:
         kk, eff = int(k), int(ef)
         cell_path = os.path.join(ivf.path, _CELL_DIR)
 
-        def walk_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def walk_cell(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
             lid = int(key[0])
             import pyarrow.dataset as pads
 

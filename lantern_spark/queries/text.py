@@ -329,6 +329,8 @@ def bm25_consolidated_top20(spark, sf_dir):
     # would serialize the two halves' tokenize+groupBy stages.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     def built_half(parity: int):
         st = build_bm25_stats(
             docs.filter(F.col("doc_id") % 2 == parity),
@@ -341,8 +343,10 @@ def bm25_consolidated_top20(spark, sf_dir):
         )
         return st
 
+    # inheritable_thread_target: the halves' jobs run under the caller's
+    # job group (and a pooled py4j connection cannot hand them another)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        a, b = pool.map(built_half, (0, 1))
+        a, b = pool.map(inheritable_thread_target(spark)(built_half), (0, 1))
     sums = {
         int(r["h"]): r["s"]
         for r in a.postings.select(F.lit(0).alias("h"), "fq")

@@ -26,7 +26,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lantern_spark.operators.artifact import _path_has_parquet
+from lantern_spark.operators.artifact import first_parquet
 
 
 def incremental_index_job(
@@ -92,7 +92,7 @@ def incremental_index_job(
         state["ingested"] += batch_df.count()
         if fold_threshold_rows:
             delta_path = os.path.join(idx.path, "delta")
-            if _path_has_parquet(delta_path):
+            if first_parquet(delta_path) is not None:
                 n = spark.read.parquet(delta_path).count()
                 if n >= fold_threshold_rows:
                     if "max_fold_shards" in inspect.signature(

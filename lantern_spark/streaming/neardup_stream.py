@@ -55,8 +55,9 @@ scans that DO happen read compacted files.
 from __future__ import annotations
 
 import logging
-from typing import Optional
+from typing import Any, Optional, Tuple
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -392,7 +393,6 @@ def incremental_neardup_job(
         is idempotent, so a replayed epoch re-folding the same keys
         is a no-op; ``bootstrap_paths`` seeds the filter from a
         pre-existing store the first time the prefilter runs."""
-        import pandas as pd
 
         from lantern_spark._fsutil import vd_commit, vd_stage
         from lantern_spark.operators.bloomset import build_bloom_set
@@ -410,7 +410,7 @@ def incremental_neardup_job(
             delta = spark.read.parquet(_live("bloom")).unionByName(delta)
         out_schema = "shard int, bits binary"
 
-        def or_fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def or_fold(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
             import numpy as np
 
             acc = None

@@ -3,7 +3,11 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# perfbench's probe (the status-store reader bench.py uses too);
+# appended, so its module names never shadow an installed package
+sys.path.append(os.path.join(REPO, "perfbench"))
 
 
 def pytest_addoption(parser):
@@ -21,6 +25,12 @@ def pytest_configure(config):
         "slow: long e2e tail excluded from the default run so the "
         "suite fits the verification window; include with --runslow "
         "or LANTERN_RUN_SLOW=1",
+    )
+    # a grouped-map function with an untyped ``key`` makes pyspark
+    # guess its eval type; every site types it as Tuple[Any, ...]
+    config.addinivalue_line(
+        "filterwarnings",
+        "error:Cannot infer the eval type from type hints:UserWarning",
     )
 
 
@@ -58,6 +68,28 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session")
+def tracer(spark):
+    """The session's one perfbench ``Tracer``: it numbers its job groups
+    from 1, so two tracers on one SparkContext read each other's jobs."""
+    from probe import Tracer
+
+    return Tracer(spark, enabled=True)
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(tracer):
+    """``spark_jobs(fn)`` → ``(fn(), jobs)``: the Spark jobs ``fn`` ran,
+    read from the status store by ``tracer.call`` (one job group per
+    call)."""
+
+    def run(fn):
+        value, rec = tracer.call("test", fn)
+        return value, rec["jobs"]
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -68,6 +68,18 @@ class TestNewQueriesOracleParity:
         assert sorted(scols) == sorted(ocols)
         assert _rowset(srows, scols) == _rowset(orows, ocols)
 
+    @pytest.mark.parametrize(
+        "name,bound",
+        # every job the call submits (construction + collect) at sf0.001
+        # when first pinned; bm25_consolidated_top20 counts its two
+        # construction threads' jobs too
+        [("bm25_consolidated_top20", 16), ("packed_ids_export", 11)],
+    )
+    def test_job_count(self, spark, spark_jobs, name, bound):
+        query = registry.queries()[name]
+        _, jobs = spark_jobs(lambda: query(spark, SF).collect())
+        assert jobs <= bound, f"{name} ran {jobs} jobs"
+
     def test_packed_export_token_conservation(self, spark):
         """Every non-empty document's ids (+eos) appear exactly once
         across packs (truncated tails excepted — bounded by one doc

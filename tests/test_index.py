@@ -1399,17 +1399,7 @@ class TestFoldJobCounts:
     jobs, HNSW fold 7, HNSW compacting fold 8. The journaled commit is
     driver-side file moves, so it must add no job."""
 
-    @staticmethod
-    def _jobs(spark, group, fn) -> int:
-        sc = spark.sparkContext
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setJobGroup(None, None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    def test_ivf_fold_jobs(self, spark, emb, tmp_path):
+    def test_ivf_fold_jobs(self, spark, spark_jobs, emb, tmp_path):
         idx = IVFIndex.build(
             emb.filter("vec_id < 400"), "embedding", "vec_id",
             str(tmp_path / "i"), nlist=8, seed=42,
@@ -1422,12 +1412,14 @@ class TestFoldJobCounts:
             )
         )
         idx.delete(emb.filter("vec_id >= 30 AND vec_id < 40").select("vec_id"))
-        n = self._jobs(spark, "pin-ivf-fold", lambda: idx.fold_delta(spark))
+        _, n = spark_jobs(lambda: idx.fold_delta(spark))
         assert n <= 14, f"IVF fold ran {n} jobs"
         assert idx.manifest.num_vectors == 440
         assert idx.validate(spark, sample_queries=1)["problems"] == []
 
-    def test_hnsw_fold_and_compaction_jobs(self, spark, emb, tmp_path):
+    def test_hnsw_fold_and_compaction_jobs(
+        self, spark, spark_jobs, emb, tmp_path
+    ):
         from lantern_spark.operators.hnsw import HNSWIndex
 
         h = HNSWIndex.build(
@@ -1435,13 +1427,79 @@ class TestFoldJobCounts:
             str(tmp_path / "h"), m=8, ef_construction=40, shards=2, seed=42,
         )
         h.add_delta(emb.filter("vec_id >= 400 AND vec_id < 450"))
-        n = self._jobs(spark, "pin-hnsw-fold", lambda: h.fold_delta(spark))
+        _, n = spark_jobs(lambda: h.fold_delta(spark))
         assert n <= 7, f"HNSW fold ran {n} jobs"
         h.add_delta(emb.filter("vec_id >= 450 AND vec_id < 460"))
-        n = self._jobs(
-            spark, "pin-hnsw-compact",
-            lambda: h.fold_delta(spark, max_fold_shards=1),
-        )
+        _, n = spark_jobs(lambda: h.fold_delta(spark, max_fold_shards=1))
         assert n <= 8, f"HNSW compacting fold ran {n} jobs"
         assert h.manifest["fold_epoch_base"] == 1
         assert not h.validate(spark)["violations"]
+
+
+class TestDeltaStoredTypes:
+    """add_delta casts each batch to the stored column types. Without
+    the cast an array<double> batch beside an array<float> one leaves
+    delta/ with two footer types, and reads of delta/ (raw, search,
+    fold) fail on whichever footer Spark did not take the schema from."""
+
+    @pytest.fixture(scope="class")
+    def built(self, spark, emb, tmp_path_factory):
+        from lantern_spark.operators.hnsw import HNSWIndex
+
+        root = tmp_path_factory.mktemp("delta_types")
+        base = emb.filter("vec_id < 200").select("vec_id", "embedding")
+        return {
+            "ivf": IVFIndex.build(
+                base, "embedding", "vec_id", str(root / "ivf"), nlist=4,
+                seed=42,
+            ),
+            "hnsw": HNSWIndex.build(
+                base, "embedding", "vec_id", str(root / "hnsw"), m=8,
+                ef_construction=40, shards=1, seed=42,
+            ),
+        }
+
+    @pytest.mark.parametrize("family", ["ivf", "hnsw"])
+    @pytest.mark.parametrize("double_first", [False, True])
+    def test_mixed_batches_store_one_type(
+        self, spark, spark_jobs, emb, built, tmp_path, family, double_first
+    ):
+        import glob
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        src = built[family]
+        shutil.copytree(src.path, str(tmp_path / "a"))
+        idx = type(src).load(str(tmp_path / "a"))
+        floats = emb.filter("vec_id >= 200 AND vec_id < 210").select(
+            "vec_id", "embedding"
+        )
+        doubles = emb.filter("vec_id >= 210 AND vec_id < 220").select(
+            "vec_id",
+            F.transform("embedding", lambda x: x + 1.0).alias("embedding"),
+        )
+        assert doubles.schema["embedding"].dataType.simpleString() == (
+            "array<double>"
+        )
+        for batch in [doubles, floats] if double_first else [floats, doubles]:
+            # the cast reads the stored types without a Spark job
+            assert spark_jobs(lambda: idx.add_delta(batch))[1] == 1
+        files = glob.glob(
+            os.path.join(idx.path, "delta", "**", "*.parquet"), recursive=True
+        )
+        assert len(files) == 2
+        assert {
+            str(pq.read_schema(f).field("embedding").type.value_type)
+            for f in files
+        } == {"float"}
+        probe = [
+            float(x) + 1.0
+            for x in emb.filter("vec_id = 215").first()["embedding"]
+        ]
+        kw = {"nprobe": 4} if family == "ivf" else {"ef": 64}
+        top = idx.search(spark, probe, k=1, **kw).first()
+        assert top["vec_id"] == 215 and top["dist"] < 1e-6
+        idx.fold_delta(spark)
+        top = idx.search(spark, probe, k=1, **kw).first()
+        assert top["vec_id"] == 215 and top["dist"] < 1e-6

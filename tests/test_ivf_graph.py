@@ -91,7 +91,9 @@ class TestIvfGraph:
         assert all(r["n_dist"] > 0 for r in rows)
 
     def test_delta_and_tombstone_visible(self, spark, hybrid):
-        probe = [float(v) + 9.0 for v in Q]  # far corner: unique best
+        # far corner: unique best. float32-exact, because add_delta
+        # stores rows at the index's array<float> type
+        probe = [float(np.float32(v + 9.0)) for v in Q]
         hybrid.ivf.add_delta(
             spark.createDataFrame(
                 [(777001, probe)], "vec_id long, embedding array<double>"

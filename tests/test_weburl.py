@@ -1287,16 +1287,19 @@ class TestDomainPagerank:
             }
         return rank
 
-    def test_matches_python_oracle(self, spark):
+    def test_matches_python_oracle(self, spark, spark_jobs):
+        """Also pins the job count: 94 on these edges (10 iterations,
+        collect included) when first pinned; bound it from above."""
         from lantern_spark.operators.weburl import domain_pagerank
 
         df = spark.createDataFrame(
             self.EDGES, "src_domain string, dst_domain string, n_links long"
         )
-        got = {
-            r.domain: r.rank
-            for r in domain_pagerank(df, iterations=10).collect()
-        }
+        rows, jobs = spark_jobs(
+            lambda: domain_pagerank(df, iterations=10).collect()
+        )
+        assert jobs <= 94, f"PageRank ran {jobs} jobs"
+        got = {r.domain: r.rank for r in rows}
         want = self._oracle(self.EDGES)
         assert set(got) == set(want)
         for v in want:
@@ -1411,7 +1414,7 @@ class TestPslCoverageReport:
         )
         assert rep["n_hosts"] == 2 and rep["n_diff"] == 1
 
-    def test_one_pass_job_count(self, spark):
+    def test_one_pass_job_count(self, spark, spark_jobs):
         """r14 (review r13 advice): the pre-flight's distinct-host
         shuffle + double PSL keying must run ONCE — `keyed` is
         persisted across the two bounded actions. Job-count spy:
@@ -1423,17 +1426,13 @@ class TestPslCoverageReport:
             psl_coverage_report,
         )
 
-        sc = spark.sparkContext
-        sc.setJobGroup("psl-cov-spy", "one-pass coverage report")
-        try:
-            rep = psl_coverage_report(
+        rep, jobs = spark_jobs(
+            lambda: psl_coverage_report(
                 self._df(spark), "url", parse_psl(self.FULLER)
             )
-        finally:
-            sc.setJobGroup(None, None)
+        )
         assert rep["n_hosts"] == 5
-        jobs = sc.statusTracker().getJobIdsForGroup("psl-cov-spy")
-        assert len(jobs) <= 9, f"two-pass regression: {len(jobs)} jobs"
+        assert jobs <= 9, f"two-pass regression: {jobs} jobs"
 
     def test_null_key_counts_as_diff(self, spark, monkeypatch):
         """A NULL on one side with a non-NULL other side IS a diff
