@@ -33,6 +33,17 @@ def vec_lit(values: Sequence[float], dtype: str = "double") -> Column:
     return F.array(*[F.lit(v).cast(dtype) for v in vals])
 
 
+def query_lit(values: Sequence[float], metric: str) -> Column:
+    """Query-vector literal to score stored vectors under ``metric``:
+    packed-bit (hamming) vectors are integer[] — a double literal would
+    coerce the stored column and lose int semantics in the comparison's
+    type resolution."""
+    from lantern_spark.types import Metric
+
+    hamming = Metric.resolve(metric) is Metric.HAMMING
+    return vec_lit(values, "int" if hamming else "double")
+
+
 def vec_dot(a, b) -> Column:
     a, b = _c(a), _c(b)
     return F.aggregate(

@@ -28,12 +28,18 @@ attach/refresh, delta and tombstone appends — runs in three steps:
 Crash recovery is the same replay: :func:`recover` runs at every writer
 entry point (build, add_delta, delete, fold_delta, rebuild, attach,
 refresh) and finishes a journal left by a killed process, or drops the
-stage of a commit that never reached its journal. Readers (``load``,
-searches) never replay — a reader's renames could race a live writer's
-(the single-writer contract). The replay order keeps a reader's view
-correct at every step for the folds: moves land before the manifest,
-and the delta and tombstone dirs (whose rows the moved-in relations now
-hold) are removed only after the manifest's watermark hides them.
+stage of a commit that never reached its journal. Readers never replay
+— a reader's renames could race a live writer's (the single-writer
+contract). ``load`` succeeds over a pending journal, so that the writer
+entry can recover it; a search refuses to read while the journal exists
+(:meth:`IndexArtifact._live_view`), because a half-replayed artifact
+has its old relations in ``_trash/`` and its new ones not yet in place.
+
+Read side: every index search answers through
+:meth:`IndexArtifact._live_view` — the family supplies its stored
+candidates (a list probe, a graph walk or an ADC shortlist) and a
+scorer for the unfolded delta; the artifact applies newest-wins
+suppression, the delta union, the tombstone anti-join and the top-k.
 
 ``FS`` is the module's filesystem object; tests patch it to kill a
 child process at a chosen operation.
@@ -187,6 +193,51 @@ def newest_per_id(df, id_col: str):
     )
 
 
+def _suppress_stale(out, ids, id_col: str):
+    """Rows of ``out`` whose id is not in ``ids``: the stale stored
+    copies of unfolded delta ids (newest wins — the delta copy is
+    authoritative and merges separately, so the stored one must neither
+    duplicate nor outrank it) and tombstoned ids. Both id sets are
+    small by the fold contract: one broadcast anti-join. The ids take
+    ``out``'s id type when the two differ (graph walks emit long ids; a
+    delta keeps the type its rows were stored with)."""
+    from pyspark.sql import functions as F
+
+    want = out.schema[id_col].dataType
+    key = F.col(id_col)
+    if ids.schema[id_col].dataType != want:
+        key = key.cast(want).alias(id_col)
+    return out.join(F.broadcast(ids.select(key)), on=id_col, how="left_anti")
+
+
+class BatchSnapshot:
+    """The one-behind persisted probe snapshot of a handle's batched
+    search. One materialization feeds every consumer of the probes (the
+    list or shard pairs and the delta scan), so a probes DataFrame with
+    nondeterministic lineage cannot be ranked for one vector and scored
+    for another. The previous call's snapshot and broadcasts are
+    released at the next call, so repeated inference batches on a
+    long-lived handle hold at most one; releasing is safe even while
+    that result is still held un-materialized (unpersist only drops
+    cached copies — Spark recomputes or re-fetches on a later use)."""
+
+    def __init__(self):
+        self._held = ()
+
+    def replace(self, df, *broadcasts, materialize: bool = False):
+        """Release the held snapshot, persist ``df`` in its place (with
+        ``broadcasts`` released alongside it next time) and return it.
+        ``materialize`` runs one count job now: a lazy persist pins
+        nothing if its consumers race before the cache fills."""
+        for h in self._held:
+            h.unpersist()
+        df = df.persist()
+        if materialize:
+            df.count()
+        self._held = (df,) + broadcasts
+        return df
+
+
 # ---------------------------------------------------------------------------
 # Read side
 # ---------------------------------------------------------------------------
@@ -262,6 +313,7 @@ class IndexArtifact:
         # another instance on the same path — is seen before the next
         # read.
         self._rel_cache: dict = {}
+        self._batch = BatchSnapshot()
 
     def _cached_read(self, spark, sub: str):
         """`spark.read.parquet(self.path/sub)`, memoized while the
@@ -282,6 +334,71 @@ class IndexArtifact:
         df = spark.read.parquet(os.path.join(self.path, sub))
         self._rel_cache[sub] = (tok, df, spark)
         return df
+
+    def _live_view(
+        self,
+        spark,
+        stored,
+        score_delta,
+        k: int,
+        id_col: str,
+        dist_col: str = "dist",
+        score_stored=None,
+        qid_col: Optional[str] = None,
+        columns: Optional[Sequence[str]] = None,
+        limit_result: bool = True,
+    ):
+        """The read contract of every index search (Lantern's one scan
+        path, scan.c ``amgettuple``, which also skips deleted labels):
+
+        1. stored candidates whose id has an unfolded delta row are
+           dropped (newest wins); ``score_stored``, when given, scores
+           the stored rows after that, so a family that scores below
+           the anti-join keeps its plan;
+        2. the unfolded delta, scored by ``score_delta``, is unioned in;
+        3. tombstoned ids are anti-joined;
+        4. top-k under (``dist_col`` nulls last, id): per ``qid_col``
+           through ``topk_per_group`` for a batch, else ``columns`` are
+           projected and one ordered limit taken (no limit when
+           ``limit_result`` is False).
+
+        Raises while a killed writer's journal is pending: the artifact
+        is then half-replayed."""
+        from pyspark.sql import functions as F
+
+        journal = os.path.join(self.path, JOURNAL)
+        if FS.exists(journal):
+            raise RuntimeError(
+                f"index artifact {self.path} has a pending commit "
+                f"journal {journal} (a writer was killed mid-commit); "
+                "the next writer call (add_delta, delete, fold_delta, "
+                f"rebuild) or artifact.recover({self.path!r}) finishes "
+                "it — refusing to search a half-replayed artifact"
+            )
+        out = stored
+        delta = self._unfolded_delta(spark)
+        if delta is not None:
+            out = _suppress_stale(out, delta, id_col)
+        if score_stored is not None:
+            out = score_stored(out)
+        if delta is not None:
+            out = out.unionByName(score_delta(delta))
+        if self._has(TOMBSTONES):
+            out = _suppress_stale(
+                out, self._cached_read(spark, TOMBSTONES), id_col
+            )
+        if qid_col is not None:
+            from lantern_spark.operators.topk import topk_per_group
+
+            return topk_per_group(
+                out, [qid_col], dist_col, k, tie_break=id_col
+            )
+        if columns is not None:
+            out = out.select(*columns)
+        out = out.orderBy(
+            F.col(dist_col).asc_nulls_last(), F.col(id_col).asc()
+        )
+        return out.limit(k) if limit_result else out
 
     def _has(self, sub: str) -> bool:
         return first_parquet(os.path.join(self.path, sub)) is not None

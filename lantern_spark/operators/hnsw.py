@@ -474,16 +474,123 @@ def _build_graph_row(
     )
 
 
+def _walk_graph(payload, probes, k: int, ef: int) -> pd.DataFrame:
+    """The graph-walk kernel of every graph-backed search: deserialize
+    one shard payload and walk it for each ``(qid, vector)`` of
+    ``probes``. Returns rows (qid, id, dist, n_dist), ascending per
+    qid; ``n_dist`` is that probe's distance evaluations."""
+    g = HnswGraph.from_payload(bytes(payload))
+    rows = []
+    for qid, q in probes:
+        res, nd = g.search([float(x) for x in q], k=k, ef=ef)
+        rows += [(qid, rid, rd, nd) for rid, rd in res]
+    return pd.DataFrame(rows, columns=["qid", "id", "dist", "n_dist"])
+
+
+def _read_shard_payload(dirs: Sequence[str], shard_id: int):
+    """Executor-side pyarrow read of one shard's payload from graph-row
+    directories (flat, or hive-partitioned by ``shard_id``), pruned on
+    ``shard_id``; None when no directory holds the shard. Works on any
+    pyarrow-reachable filesystem, and never transits the driver."""
+    import pyarrow.dataset as pads
+
+    tbl = pads.dataset(
+        [pads.dataset(p, format="parquet", partitioning="hive") for p in dirs]
+    ).to_table(columns=["payload"], filter=pads.field("shard_id") == shard_id)
+    return tbl["payload"][0].as_py() if tbl.num_rows else None
+
+
+def _walk_each(graphs, q, k, ef, id_col, dist_col, tag_col) -> DataFrame:
+    """Single-probe search: every graph row (shard_id, payload) walks
+    ``q`` (map-only). Rows (id, dist, ``tag_col`` = the row's shard_id,
+    n_dist)."""
+    schema = T.StructType(
+        [
+            T.StructField(id_col, T.LongType()),
+            T.StructField(dist_col, T.DoubleType()),
+            T.StructField(tag_col, T.IntegerType()),
+            T.StructField("n_dist", T.LongType()),
+        ]
+    )
+    names = {"qid": tag_col, "id": id_col, "dist": dist_col}
+
+    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
+                f = _walk_graph(payload, [(int(sid), q)], k, ef)
+                if len(f):
+                    yield f.rename(columns=names)[schema.names]
+
+    return graphs.mapInPandas(walk, schema)
+
+
+def _walk_groups(
+    pairs, dirs, qid_col, query_col, id_col, dist_col, k, ef
+) -> DataFrame:
+    """Batched search: ``pairs`` (qid, query, shard_id) grouped per
+    shard, each group reading and deserializing ITS graph once and
+    walking every probe of the group. Rows (qid, id, dist)."""
+    schema = T.StructType(
+        [
+            T.StructField(qid_col, pairs.schema[qid_col].dataType),
+            T.StructField(id_col, T.LongType()),
+            T.StructField(dist_col, T.DoubleType()),
+        ]
+    )
+    names = {"qid": qid_col, "id": id_col, "dist": dist_col}
+
+    def walk(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
+        payload = _read_shard_payload(dirs, int(key[0]))
+        if payload is None:
+            return pd.DataFrame(columns=schema.names)
+        probes = zip(pdf[qid_col], pdf[query_col])
+        f = _walk_graph(payload, probes, k, ef)
+        return f.rename(columns=names)[schema.names]
+
+    return pairs.groupBy("shard_id").applyInPandas(walk, schema)
+
+
+def _score_probe(q, id_col, col, metric, dist_col, tag_col):
+    """Delta scorer of a single-probe graph search: exact distances
+    (metric parity with the walks — l2sq graphs emit squared L2, cos
+    graphs 1−cos, as ``distance`` does), tagged ``tag_col`` = -1 with
+    n_dist 0 so scan-fraction accounting stays the graphs'."""
+    from lantern_spark.functions.distances import distance
+    from lantern_spark.functions.vectors import query_lit
+
+    dist = distance(F.col(col), query_lit(q, metric), metric)
+    return lambda d: d.select(
+        F.col(id_col).cast("long").alias(id_col),
+        dist.cast("double").alias(dist_col),
+    ).withColumn(tag_col, F.lit(-1)).withColumn(
+        "n_dist", F.lit(0).cast("long")
+    )
+
+
+def _score_probes(snap, qid_col, query_col, id_col, col, metric, dist_col):
+    """Delta scorer of a batched graph search: every delta row against
+    every probe of ``snap`` (the SMALL delta side broadcasts)."""
+    from lantern_spark.functions.distances import distance
+
+    return lambda d: snap.crossJoin(
+        F.broadcast(
+            d.select(F.col(id_col).cast("long").alias(id_col), F.col(col))
+        )
+    ).select(
+        qid_col,
+        id_col,
+        distance(F.col(col), F.col(query_col), metric)
+        .cast("double")
+        .alias(dist_col),
+    )
+
+
 class HNSWIndex(IndexArtifact):
     """Persisted per-partition HNSW index (one graph row per shard)."""
 
     def __init__(self, path: str, manifest: dict):
         super().__init__(path)
         self.manifest = manifest
-        # one-behind probe snapshot from the last DataFrame-path
-        # search_batch — released at the next call (unpersist is
-        # lazy-safe: a held result recomputes)
-        self._batch_snap = None
 
     def _delta_keys(self) -> tuple:
         mf = self.manifest
@@ -1074,79 +1181,25 @@ class HNSWIndex(IndexArtifact):
                 F.col(mf["id_column"]).asc(),
             )
             return out.limit(int(k)) if limit_result else out
-        q = list(float(x) for x in query)
-        id_field = T.LongType()
-        schema = T.StructType(
-            [
-                T.StructField(mf["id_column"], id_field),
-                T.StructField("dist", T.DoubleType()),
-                T.StructField("shard_id", T.IntegerType()),
-                T.StructField("n_dist", T.LongType()),
-            ]
+        id_col, q = mf["id_column"], [float(x) for x in query]
+        return self._live_view(
+            spark,
+            _walk_each(
+                self._graphs(spark), q, k, ef, id_col, "dist", "shard_id"
+            ),
+            _score_probe(
+                q, id_col, mf["column"], mf["metric"], "dist", "shard_id"
+            ),
+            k,
+            id_col,
+            columns=[id_col, "dist"]
+            + (["shard_id", "n_dist"] if with_stats else []),
+            limit_result=limit_result,
         )
 
-        def search_shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                    g = HnswGraph.from_payload(bytes(payload))
-                    res, nd = g.search(q, k=k, ef=ef)
-                    if not res:
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            mf["id_column"]: [r[0] for r in res],
-                            "dist": [r[1] for r in res],
-                            "shard_id": [int(sid)] * len(res),
-                            "n_dist": [nd] * len(res),
-                        }
-                    )
-
-        out = self._graphs(spark).mapInPandas(search_shard, schema)
-        delta_df = self._unfolded_delta(spark)
-        if delta_df is not None:
-            from lantern_spark.operators.index import _suppress_stale
-
-            # newest wins: a stale stored copy must not shadow the
-            # update (pre-fold read-your-writes)
-            out = _suppress_stale(
-                out, delta_df, mf["id_column"], cast_long=True
-            )
-            # delta rows are exact-scanned and merge as shard -1 (same
-            # contract as IVF's delta: exact until a fold/rebuild).
-            # n_dist=0 so graph scan-fraction accounting is undistorted.
-            from lantern_spark.functions.distances import distance
-            from lantern_spark.functions.vectors import vec_lit
-
-            # metric parity with graph-local dists: l2sq graphs emit
-            # squared L2, cos graphs emit 1−cos — same as distance()
-            dist_expr = distance(
-                F.col(mf["column"]),
-                vec_lit(
-                    q, "int" if mf["metric"] == "hamming" else "double"
-                ),
-                mf["metric"],
-            )
-            delta = (
-                delta_df
-                .select(
-                    F.col(mf["id_column"]).cast("long").alias(mf["id_column"]),
-                    dist_expr.cast("double").alias("dist"),
-                )
-                .withColumn("shard_id", F.lit(-1))
-                .withColumn("n_dist", F.lit(0).cast("long"))
-            )
-            out = out.unionByName(delta)
-        cols = [mf["id_column"], "dist"] + (
-            ["shard_id", "n_dist"] if with_stats else []
-        )
-        out = out.select(*cols).orderBy(
-            F.col("dist").asc_nulls_last(), F.col(mf["id_column"]).asc()
-        )
-        return out.limit(k) if limit_result else out
-
-    #: sequence-path ceiling: probes beyond this must come as a
-    #: DataFrame (closure shipping is |Q|·dim floats per task — fine at
-    #: 10k, a driver/task OOM at inference scale)
+    #: sequence-input ceiling: a longer probe list must come as a
+    #: DataFrame (the sequence becomes a driver-side local relation —
+    #: fine at 10k, a driver OOM at inference scale)
     MAX_SEQUENCE_PROBES = 10_000
 
     def search_batch(
@@ -1159,132 +1212,43 @@ class HNSWIndex(IndexArtifact):
         query_col: str = "query",
     ) -> DataFrame:
         """Batched graph search: every shard graph deserializes ONCE
-        and answers the whole probe set — the inference-workload shape.
+        per batch and answers all the probes routed to it — the
+        inference-workload shape. Per-query :meth:`search` pays the
+        dominant cost (payload → ``HnswGraph.from_payload``) once per
+        shard PER QUERY; here it is amortized across all |Q| probes.
 
-        Per-query :meth:`search` pays the dominant cost (payload →
-        ``HnswGraph.from_payload``) once per shard PER QUERY; here it
-        is amortized across all |Q| probes (|Q|× fewer deserializes
-        and Spark jobs).
+        ``queries`` is a probes **DataFrame** (``qid_col``,
+        ``query_col``) or a small **sequence** of vectors, which
+        becomes a local probes frame (qids 0…n-1) capped at
+        ``MAX_SEQUENCE_PROBES`` — pass a DataFrame beyond the cap.
+        Either way the probes are the handle's one-behind
+        ``BatchSnapshot``, cross-joined with the shard ids and grouped
+        per shard; each group reads ITS graph executor-side (pyarrow,
+        row-group-pruned on shard_id) and walks its probes. The probe
+        set never ships via a task closure.
 
-        ``queries`` is either a probes **DataFrame** (``qid_col``,
-        ``query_col``) — the scale path: probes are exploded across
-        shard ids and grouped per shard, each group deserializing ITS
-        graph once (executor-side pyarrow read, row-group-pruned on
-        shard_id); the probe set never snapshots to the driver and
-        never ships via a task closure — or a small **sequence** of
-        vectors, which ships via the closure and is capped at
-        ``MAX_SEQUENCE_PROBES`` (VERDICT r6 item 2: the uncapped
-        closure was a driver/task OOM at inference scale; pass a
-        DataFrame beyond the cap).
-
-        Delta rows are exact-scanned once per probe (the SMALL delta
-        side broadcasts); the global per-qid top-k merge is one window
-        over ≤ shards·|Q|·k candidate rows. Returns (qid, id, dist),
-        k rows per probe, (dist, id) tie-broken.
+        The live view (:meth:`IndexArtifact._live_view`) scores the
+        unfolded delta against every probe (the SMALL delta side
+        broadcasts) and takes the top-k per ``qid`` through
+        ``topk_per_group``. Returns (qid, id, dist), k rows per probe,
+        (dist nulls last, id) tie-broken.
         """
+        from lantern_spark.types import local_df
+
         mf = self.manifest
-        if isinstance(queries, DataFrame):
-            return self._search_batch_df(
-                spark, queries, k=k, ef=ef,
-                qid_col=qid_col, query_col=query_col,
-            )
-        qs = [list(float(x) for x in q) for q in queries]
-        if len(qs) > self.MAX_SEQUENCE_PROBES:
-            raise ValueError(
-                f"{len(qs)} probes exceeds the sequence-path cap "
-                f"({self.MAX_SEQUENCE_PROBES}); pass the probes as a "
-                "DataFrame for the distributed batch path"
-            )
-        schema = T.StructType(
-            [
-                T.StructField(qid_col, T.IntegerType()),
-                T.StructField(mf["id_column"], T.LongType()),
-                T.StructField("dist", T.DoubleType()),
-            ]
-        )
-
-        def search_shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for payload in pdf["payload"]:
-                    g = HnswGraph.from_payload(bytes(payload))
-                    qids: list = []
-                    ids: list = []
-                    dists: list = []
-                    for j, q in enumerate(qs):
-                        res, _nd = g.search(q, k=k, ef=ef)
-                        for rid, rd in res:
-                            qids.append(j)
-                            ids.append(rid)
-                            dists.append(rd)
-                    if qids:
-                        yield pd.DataFrame(
-                            {
-                                qid_col: qids,
-                                mf["id_column"]: ids,
-                                "dist": dists,
-                            }
-                        )
-
-        out = self._graphs(spark).mapInPandas(search_shard, schema)
-        delta_df = self._unfolded_delta(spark)
-        if delta_df is not None:
-            from lantern_spark.functions.distances import distance
-
-            from lantern_spark.operators.index import _suppress_stale
-
-            out = _suppress_stale(
-                out, delta_df, mf["id_column"], cast_long=True
-            )
-            from lantern_spark.types import local_df
-
-            probes = local_df(
+        if not isinstance(queries, DataFrame):
+            qs = [[float(x) for x in q] for q in queries]
+            if len(qs) > self.MAX_SEQUENCE_PROBES:
+                raise ValueError(
+                    f"{len(qs)} probes exceeds the sequence-input cap "
+                    f"({self.MAX_SEQUENCE_PROBES}); pass the probes as a "
+                    "DataFrame for the distributed batch path"
+                )
+            queries = local_df(
                 spark,
-                [(j, q) for j, q in enumerate(qs)],
-                f"{qid_col} int, __q array<double>",
+                list(enumerate(qs)),
+                f"{qid_col} int, {query_col} array<double>",
             )
-            delta = (
-                delta_df
-                .select(
-                    F.col(mf["id_column"]).cast("long").alias(mf["id_column"]),
-                    F.col(mf["column"]).alias(mf["column"]),
-                )
-                .crossJoin(F.broadcast(probes))
-                .select(
-                    qid_col,
-                    mf["id_column"],
-                    distance(F.col(mf["column"]), F.col("__q"), mf["metric"])
-                    .cast("double")
-                    .alias("dist"),
-                )
-            )
-            out = out.unionByName(delta)
-        from pyspark.sql import Window
-
-        # nulls LAST: a NULL delta distance must never displace real
-        # neighbors (knn_search's mitigation)
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("dist").asc_nulls_last(), F.col(mf["id_column"]).asc()
-        )
-        return (
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-
-    def _search_batch_df(
-        self,
-        spark: SparkSession,
-        probes: DataFrame,
-        k: int,
-        ef: int,
-        qid_col: str,
-        query_col: str,
-    ) -> DataFrame:
-        """Distributed batch path (see :meth:`search_batch`): probes ×
-        shard ids shuffle once, one group per shard walks all probes
-        against a graph deserialized exactly once per group."""
-        mf = self.manifest
-        graph_dirs = self._graph_dirs()
         shard_ids = [
             int(r["shard_id"])
             for r in self._graphs(spark)
@@ -1292,105 +1256,26 @@ class HNSWIndex(IndexArtifact):
             .distinct()
             .collect()  # ≤ shards rows — bounded by construction
         ]
-        from lantern_spark.types import local_df
-
         shards_df = F.broadcast(
             local_df(spark, [(s,) for s in shard_ids], "shard_id int")
         )
-        # ONE persisted probe snapshot feeds both the shard pairs and
-        # the delta scan, so nondeterministic probe lineage cannot
-        # walk graphs for one vector and score the delta against
-        # another (the IVFIndex.search_batch contract)
-        if self._batch_snap is not None:
-            self._batch_snap.unpersist()
-        probe_snap = probes.select(qid_col, query_col).persist()
-        # materialize NOW — a lazy persist pins nothing against
-        # nondeterministic lineage (review r7b #2); one bounded job
-        probe_snap.count()
-        self._batch_snap = probe_snap
-        pairs = probe_snap.crossJoin(shards_df)
-        qid_type = probes.schema[qid_col].dataType
-        schema = T.StructType(
-            [
-                T.StructField(qid_col, qid_type),
-                T.StructField(mf["id_column"], T.LongType()),
-                T.StructField("dist", T.DoubleType()),
-            ]
+        snap = self._batch.replace(
+            queries.select(qid_col, query_col), materialize=True
         )
-        kk, eff = int(k), int(ef)
         id_col = mf["id_column"]
-
-        def walk_shard(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(key[0])
-            import pyarrow.dataset as pads
-
-            # base graphs + fold-shard dirs; the hive flag exposes the
-            # fold_epoch partition column harmlessly (never selected)
-            ds = pads.dataset(
-                [
-                    pads.dataset(p, format="parquet", partitioning="hive")
-                    for p in graph_dirs
-                ]
-            )
-            tbl = ds.to_table(
-                columns=["payload"],
-                filter=pads.field("shard_id") == sid,
-            )
-            empty = pd.DataFrame({qid_col: [], id_col: [], "dist": []})
-            if tbl.num_rows == 0:
-                return empty
-            g = HnswGraph.from_payload(bytes(tbl["payload"][0].as_py()))
-            qids: list = []
-            ids: list = []
-            dists: list = []
-            for qid, q in zip(pdf[qid_col], pdf[query_col]):
-                res, _nd = g.search([float(x) for x in q], k=kk, ef=eff)
-                for rid, rd in res:
-                    qids.append(qid)
-                    ids.append(rid)
-                    dists.append(rd)
-            if not qids:
-                return empty
-            return pd.DataFrame({qid_col: qids, id_col: ids, "dist": dists})
-
-        out = pairs.groupBy("shard_id").applyInPandas(walk_shard, schema)
-        delta_df = self._unfolded_delta(spark)
-        if delta_df is not None:
-            from lantern_spark.functions.distances import distance
-
-            from lantern_spark.operators.index import _suppress_stale
-
-            out = _suppress_stale(out, delta_df, id_col, cast_long=True)
-            delta = (
-                probe_snap
-                .crossJoin(
-                    F.broadcast(
-                        delta_df.select(
-                            F.col(id_col).cast("long").alias(id_col),
-                            F.col(mf["column"]).alias(mf["column"]),
-                        )
-                    )
-                )
-                .select(
-                    qid_col,
-                    id_col,
-                    distance(
-                        F.col(mf["column"]), F.col(query_col), mf["metric"]
-                    )
-                    .cast("double")
-                    .alias("dist"),
-                )
-            )
-            out = out.unionByName(delta)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("dist").asc_nulls_last(), F.col(id_col).asc()
-        )
-        return (
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
+        return self._live_view(
+            spark,
+            _walk_groups(
+                snap.crossJoin(shards_df), self._graph_dirs(),
+                qid_col, query_col, id_col, "dist", int(k), int(ef),
+            ),
+            _score_probes(
+                snap, qid_col, query_col, id_col, mf["column"],
+                mf["metric"], "dist",
+            ),
+            k,
+            id_col,
+            qid_col=qid_col,
         )
 
     def validate(self, spark: SparkSession, strict: bool = True) -> dict:

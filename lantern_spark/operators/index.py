@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lantern_spark.functions.distances import distance
-from lantern_spark.functions.vectors import vec_lit
+from lantern_spark.functions.vectors import query_lit, vec_lit
 from lantern_spark.operators import artifact
 from lantern_spark.operators.artifact import (
     DELTA,
@@ -202,23 +202,6 @@ def _assign_expr(column: str, cents: np.ndarray, metric: Metric):
     return _assign(F.col(column))
 
 
-def _suppress_stale(
-    out: DataFrame, delta_df: DataFrame, id_col: str, cast_long: bool = False
-) -> DataFrame:
-    """Newest-wins read-your-writes: drop results whose id has a
-    pending (unfolded) delta update — the delta copy is authoritative
-    and merges separately, so the stale stored copy must neither
-    duplicate nor outrank it. The delta id set is small by the fold
-    contract: one broadcast anti-join. Shared by every search path of
-    every index family (review r7c #6)."""
-    ids = delta_df.select(
-        F.col(id_col).cast("long").alias(id_col)
-        if cast_long
-        else F.col(id_col)
-    )
-    return out.join(F.broadcast(ids), on=id_col, how="left_anti")
-
-
 def _rank_lists(c: np.ndarray, ids, query, metric: str, nprobe: int) -> list:
     """Top-``nprobe`` list ids by centroid distance for ONE query — the
     probe-selection kernel shared by per-query search, batched search,
@@ -254,8 +237,7 @@ def _probe_lists_udf(spark: SparkSession, c: np.ndarray, ids, metric: str,
     snapshots to the driver; only the O(nlist·dim) centroids ship, via
     a Spark broadcast so large probe sets don't reserialize them per
     task). Returns (udf, broadcast) — the caller owns the broadcast's
-    lifecycle (``bc.unpersist()`` once the result is consumed; a
-    later use lazily re-fetches, so release is always safe)."""
+    lifecycle (released with its ``BatchSnapshot``)."""
     bc = spark.sparkContext.broadcast((np.ascontiguousarray(c),
                                        np.asarray(ids)))
     met, npb = str(metric), int(nprobe)
@@ -276,11 +258,6 @@ class IVFIndex(IndexArtifact):
     def __init__(self, path: str, manifest: IndexManifest):
         super().__init__(path)
         self.manifest = manifest
-        # one-behind batched-search cache: (persisted assignment DF,
-        # centroid broadcast) from the LAST search_batch call, released
-        # at the next call so repeated inference batches on a
-        # long-lived handle hold at most one snapshot (review r7 #8)
-        self._batch_artifacts = None
 
     def _delta_keys(self) -> tuple:
         mf = self.manifest
@@ -303,17 +280,6 @@ class IVFIndex(IndexArtifact):
 
             schema = from_arrow_schema(pq.read_schema(part))
         return {f.name: f.dataType for f in schema.fields}
-
-    def _release_batch_artifacts(self) -> None:
-        """Release the previous batch's cached assignment + broadcast.
-        Safe even if that result is still held un-materialized: both
-        unpersist calls only drop cached copies — Spark recomputes /
-        re-fetches lazily on a later use."""
-        if self._batch_artifacts is not None:
-            df, bc = self._batch_artifacts
-            df.unpersist()
-            bc.unpersist()
-            self._batch_artifacts = None
 
     # -- build ----------------------------------------------------------
 
@@ -561,7 +527,6 @@ class IVFIndex(IndexArtifact):
         query,
         k: int = 10,
         nprobe: int = 4,
-        include_delta: bool = True,
         dist_col: str = "dist",
         where=None,
         oversample: int = 1,
@@ -590,53 +555,36 @@ class IVFIndex(IndexArtifact):
         order/limit, so boundary ties at the k-th row break identically
         to a ``round(dist, n)``-ordered oracle (the repo-wide
         (rounded value, id) tie-break convention).
+
+        Unfolded delta rows are scored exactly and tombstones
+        anti-joined (:meth:`IndexArtifact._live_view`).
         """
         mf = self.manifest
         extras = list(select_columns or [])
-        # packed-bit (hamming) vectors are integer[] — a double literal
-        # would coerce the stored column and lose int semantics in the
-        # comparison's type resolution
-        lit_dtype = (
-            "int"
-            if Metric.resolve(mf.metric) is Metric.HAMMING
-            else "double"
-        )
         n_lists = nprobe * (oversample if where is not None else 1)
         probes = self._probe_lists(spark, query, n_lists)
-        base = self.lists(spark).filter(F.col("list_id").isin(probes))
-        scans = [base]
-        if include_delta:
-            d = self._unfolded_delta(spark)
-            if d is not None:
-                # newest wins: an id updated via add_delta must
-                # return its delta vector ONLY (matches fold/rebuild)
-                scans[0] = _suppress_stale(base, d, mf.id_column)
-                scans.append(d)
-        out = None
-        for s in scans:
+        dist = distance(
+            F.col(mf.column), query_lit(query, mf.metric), mf.metric
+        )
+        if round_digits is not None:
+            dist = F.round(dist, round_digits)
+
+        def score(s):
             if where is not None:
                 s = s.filter(where)
-            s = s.withColumn(
-                dist_col,
-                distance(
-                    F.col(mf.column),
-                    vec_lit(list(query), lit_dtype),
-                    mf.metric,
-                ),
-            ).select(mf.id_column, mf.column, *extras, dist_col)
-            out = s if out is None else out.unionByName(s)
-        if round_digits is not None:
-            out = out.withColumn(dist_col, F.round(dist_col, round_digits))
-        if self._has(TOMBSTONES):
-            tombs = self._cached_read(spark, TOMBSTONES)
-            out = out.join(
-                F.broadcast(tombs), on=mf.id_column, how="left_anti"
+            return s.select(
+                mf.id_column, mf.column, *extras, dist.alias(dist_col)
             )
-        # nulls LAST (zero-norm cos / NULL delta vectors): knn_search's
-        # mitigation, applied to the index path too
-        return out.orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(mf.id_column).asc()
-        ).limit(k)
+
+        return self._live_view(
+            spark,
+            self.lists(spark).filter(F.col("list_id").isin(probes)),
+            score,
+            k,
+            mf.id_column,
+            dist_col,
+            score_stored=score,
+        )
 
     def search_batch(
         self,
@@ -647,7 +595,6 @@ class IVFIndex(IndexArtifact):
         qid_col: str = "qid",
         query_col: str = "query",
         dist_col: str = "dist",
-        include_delta: bool = True,
     ) -> DataFrame:
         """Batched ANN top-k: ONE job answers a whole DataFrame of
         probe vectors — the shape a 100 TB inference workload needs,
@@ -664,36 +611,35 @@ class IVFIndex(IndexArtifact):
            tie-break, so batch ≡ per-query by construction. Only the
            O(nlist·dim) centroids ship (as a Spark broadcast); the
            probes DataFrame itself NEVER snapshots to the driver, so a
-           million-probe inference batch cannot OOM it;
+           million-probe inference batch cannot OOM it. The assignment
+           is the handle's one-behind ``BatchSnapshot``;
         2. the only collects are the DISTINCT probed list ids (≤ nlist
            rows — used for partition pruning of the stored lists) and
            the (qid, list_id) pair count (one long). When the pair set
            is small (≤ ``broadcast_pairs_limit`` rows) both joins
            broadcast it as before; beyond that Spark shuffle-joins and
            AQE picks the strategy from runtime sizes;
-        3. one window per ``qid`` takes the top-k under the repo's
-           (distance nulls-last, id) tie-break.
+        3. the live view (:meth:`IndexArtifact._live_view`) scores the
+           unfolded delta rows (unpruned by construction) against every
+           probe, anti-joins tombstones and takes the top-k per ``qid``
+           through ``topk_per_group`` under the repo's (distance
+           nulls-last, id) tie-break.
 
-        Delta rows (unpruned by construction) are scored against every
-        probe; tombstones anti-join as in :meth:`search`. Returns
-        (qid, id, dist) rows, k per probe.
+        Returns (qid, id, dist) rows, k per probe.
         """
         mf = self.manifest
         npb = int(min(max(1, nprobe), mf.nlist))
         c, cids = self._centroid_arrays(spark)
         rank_udf, cent_bc = _probe_lists_udf(spark, c, cids, mf.metric, npb)
         # persist the ASSIGNMENT snapshot (qid, vector, ranked lists):
-        # both the pair keys and the vector side below derive from this
-        # one materialization, so a probes DataFrame with
-        # nondeterministic lineage (sample/limit) cannot rank lists for
-        # one vector and score another. Released one-behind via
-        # _release_batch_artifacts (bounded executor storage across
-        # repeated inference batches).
-        self._release_batch_artifacts()
-        assigned = probes.select(qid_col, query_col).withColumn(
-            "__lists", rank_udf(F.col(query_col))
-        ).persist()
-        self._batch_artifacts = (assigned, cent_bc)
+        # both the pair keys and the vector side below derive from it;
+        # the pair-stats collect below materializes it
+        assigned = self._batch.replace(
+            probes.select(qid_col, query_col).withColumn(
+                "__lists", rank_udf(F.col(query_col))
+            ),
+            cent_bc,
+        )
         pair_keys = assigned.select(
             qid_col, F.explode("__lists").alias("list_id")
         )
@@ -720,42 +666,27 @@ class IVFIndex(IndexArtifact):
             .join(pair_side, "list_id")
             .join(vec_side, qid_col)
         )
-        scans = [base.select(qid_col, query_col, mf.id_column, mf.column)]
-        if include_delta:
-            d = self._unfolded_delta(spark)
-            if d is not None:
-                # newest wins: suppress stale stored copies
-                scans[0] = _suppress_stale(scans[0], d, mf.id_column)
-                scans.append(
-                    d.select(mf.id_column, mf.column)
-                    .crossJoin(vec_side)
-                    .select(qid_col, query_col, mf.id_column, mf.column)
-                )
-        out = None
-        for s in scans:
-            s = s.withColumn(
-                dist_col,
-                distance(F.col(mf.column), F.col(query_col), mf.metric),
-            ).select(qid_col, mf.id_column, dist_col)
-            out = s if out is None else out.unionByName(s)
-        if self._has(TOMBSTONES):
-            out = out.join(
-                F.broadcast(self._cached_read(spark, TOMBSTONES)),
-                on=mf.id_column,
-                how="left_anti",
-            )
-        from pyspark.sql import Window
 
-        # nulls LAST: a NULL distance (zero-norm cos via try_divide,
-        # NULL vector in the delta) must never displace real
-        # neighbors — same mitigation as knn_search
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(mf.id_column).asc()
-        )
-        return (
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
+        def score(s):
+            return s.select(
+                qid_col,
+                mf.id_column,
+                distance(
+                    F.col(mf.column), F.col(query_col), mf.metric
+                ).alias(dist_col),
+            )
+
+        return self._live_view(
+            spark,
+            base.select(qid_col, query_col, mf.id_column, mf.column),
+            lambda d: score(
+                d.select(mf.id_column, mf.column).crossJoin(vec_side)
+            ),
+            k,
+            mf.id_column,
+            dist_col,
+            score_stored=score,
+            qid_col=qid_col,
         )
 
     def search_adc(
@@ -777,7 +708,9 @@ class IVFIndex(IndexArtifact):
         vectors for k·oversample rows only (a semi-join against the
         candidate ids). Reference analog: PQ-aware scan (scan.c:75-81)
         + Lantern's unrechecked-distance contract — except we DO
-        recheck, because the re-rank is cheap on Spark.
+        recheck, because the re-rank is cheap on Spark. Un-folded delta
+        rows have no codes yet: the live view exact-scans and merges
+        them, the same insert-visibility contract as :meth:`search`.
 
         Caveat: near-duplicate rows share PQ codes, so the candidate
         top-(k·oversample) can fill up with copies of few distinct
@@ -829,43 +762,22 @@ class IVFIndex(IndexArtifact):
             .limit(k * oversample)
             .select(mf.id_column)
         )
-        rerank = lists.join(F.broadcast(cand), mf.id_column).withColumn(
-            dist_col,
-            distance(F.col(mf.column), vec_lit(list(query)), mf.metric),
-        )
+        dist = distance(F.col(mf.column), vec_lit(list(query)), mf.metric)
         if round_digits is not None:
-            rerank = rerank.withColumn(
-                dist_col, F.round(dist_col, round_digits)
-            )
-        out = rerank.select(mf.id_column, mf.column, dist_col)
-        # un-folded delta rows have no codes yet — they are
-        # exact-scanned and merged, the same insert-visibility contract
-        # as search()/search_batch() (previously the ADC tier silently
-        # missed fresh inserts until a fold/rebuild). Newest wins: the
-        # stale stored copy of an updated id is suppressed.
-        d = self._unfolded_delta(spark)
-        if d is not None:
-            out = _suppress_stale(out, d, mf.id_column)
-            ddist = distance(
-                F.col(mf.column), vec_lit(list(query)), mf.metric
-            ).cast("double")
-            if round_digits is not None:
-                ddist = F.round(ddist, round_digits)
-            out = out.unionByName(
-                d.select(
-                    F.col(mf.id_column),
-                    F.col(mf.column),
-                    ddist.alias(dist_col),
-                )
-            )
-        if self._has(TOMBSTONES):
-            tombs = self._cached_read(spark, TOMBSTONES)
-            out = out.join(
-                F.broadcast(tombs), on=mf.id_column, how="left_anti"
-            )
-        return out.orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(mf.id_column).asc()
-        ).limit(k)
+            dist = F.round(dist, round_digits)
+
+        def score(s):
+            return s.select(mf.id_column, mf.column, dist.alias(dist_col))
+
+        # the exact re-rank is scored BEFORE the stale-copy anti-join
+        return self._live_view(
+            spark,
+            score(lists.join(F.broadcast(cand), mf.id_column)),
+            score,
+            k,
+            mf.id_column,
+            dist_col,
+        )
 
     # -- lifecycle (insert/delete/rebuild) ------------------------------
 

@@ -42,23 +42,26 @@ tolerates them better at higher per-query cost.
 from __future__ import annotations
 
 import os
-from typing import Any, Iterator, Optional, Sequence, Tuple
+from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lantern_spark.operators.hnsw import (
     MAX_PAYLOAD_BYTES,
     HnswGraph,
     _GRAPH_SCHEMA,
+    _score_probe,
+    _score_probes,
+    _walk_each,
+    _walk_groups,
 )
 from lantern_spark.operators import artifact
-from lantern_spark.operators.artifact import TOMBSTONES, commit, stage_path
-from lantern_spark.operators.index import IVFIndex
-from lantern_spark.types import Metric, check_format_version
+from lantern_spark.operators.artifact import BatchSnapshot, commit, stage_path
+from lantern_spark.operators.index import IVFIndex, _probe_lists_udf
+from lantern_spark.types import check_format_version
 
 _CELL_DIR = "cell_graphs"
 _META_FILE = "cell_graphs_meta.json"
@@ -101,11 +104,7 @@ class IVFGraphIndex:
     def __init__(self, ivf: IVFIndex, meta: dict):
         self.ivf = ivf
         self.meta = meta
-        # one-behind (probe snapshot, centroid broadcast) from the
-        # last search_batch — released at the next call (bounded
-        # driver/executor registries across repeated inference
-        # batches; unpersist is lazy-safe)
-        self._batch_bc = None
+        self._batch = BatchSnapshot()
 
     # -- build ----------------------------------------------------------
 
@@ -316,17 +315,17 @@ class IVFGraphIndex:
         k: int = 10,
         nprobe: int = 4,
         ef: int = 64,
-        include_delta: bool = True,
         dist_col: str = "dist",
         with_stats: bool = False,
         limit_result: bool = True,
     ) -> DataFrame:
         """Routed top-k: rank cells by centroid distance (driver-side,
         identical kernel to :meth:`IVFIndex.search`), walk only the
-        probed cells' graphs, merge nprobe·k candidates. Delta rows are
-        exact-scanned and tombstones anti-joined — the wrapped index's
-        lifecycle applies unchanged, so an aminsert between attach and
-        search is still visible (graphs only cover folded rows).
+        probed cells' graphs, merge nprobe·k candidates. The wrapped
+        index's live view applies unchanged (delta rows exact-scanned,
+        tombstones anti-joined — :meth:`IndexArtifact._live_view`), so
+        an aminsert between attach and search is still visible (graphs
+        only cover folded rows).
 
         ``with_stats`` adds (list_id, n_dist) per row — per-cell
         distance-evaluation counts, the scan-fraction instrument.
@@ -338,85 +337,24 @@ class IVFGraphIndex:
         ivf, mf = self.ivf, self.ivf.manifest
         probes = ivf._probe_lists(spark, query, nprobe)
         q = [float(x) for x in query]
-        id_type = T.LongType()
-        schema = T.StructType(
-            [
-                T.StructField(mf.id_column, id_type),
-                T.StructField(dist_col, T.DoubleType()),
-                T.StructField("list_id", T.IntegerType()),
-                T.StructField("n_dist", T.LongType()),
-            ]
-        )
-        kk, eff = int(k), int(ef)
-
-        def search_cell(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for lid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                    g = HnswGraph.from_payload(bytes(payload))
-                    res, nd = g.search(q, k=kk, ef=eff)
-                    if not res:
-                        continue
-                    yield pd.DataFrame(
-                        {
-                            mf.id_column: [r[0] for r in res],
-                            dist_col: [r[1] for r in res],
-                            "list_id": [int(lid)] * len(res),
-                            "n_dist": [nd] * len(res),
-                        }
-                    )
-
         graphs = spark.read.parquet(
             os.path.join(ivf.path, _CELL_DIR)
         ).filter(F.col("shard_id").isin(probes))
-        out = graphs.mapInPandas(search_cell, schema)
-        # watermark-filtered: folded rows already live in the lists
-        # (and their refreshed cell graphs) — a crash-lingering delta
-        # dir must not double-count (IVF folded_seq contract)
-        delta_df = ivf._unfolded_delta(spark) if include_delta else None
-        if delta_df is not None:
-            from lantern_spark.functions.distances import distance
-            from lantern_spark.functions.vectors import vec_lit
-
-            from lantern_spark.operators.index import _suppress_stale
-
-            # newest wins (the IVF search contract)
-            out = _suppress_stale(
-                out, delta_df, mf.id_column, cast_long=True
-            )
-            lit_dt = (
-                "int"
-                if Metric.resolve(mf.metric) is Metric.HAMMING
-                else "double"
-            )
-            delta = (
-                delta_df
-                .select(
-                    F.col(mf.id_column).cast("long").alias(mf.id_column),
-                    distance(
-                        F.col(mf.column), vec_lit(q, lit_dt), mf.metric
-                    )
-                    .cast("double")
-                    .alias(dist_col),
-                )
-                .withColumn("list_id", F.lit(-1))
-                .withColumn("n_dist", F.lit(0).cast("long"))
-            )
-            out = out.unionByName(delta)
-        if ivf._has(TOMBSTONES):
-            tombs = ivf._cached_read(spark, TOMBSTONES).select(
-                F.col(mf.id_column).cast("long").alias(mf.id_column)
-            )
-            out = out.join(
-                F.broadcast(tombs), on=mf.id_column, how="left_anti"
-            )
-        cols = [mf.id_column, dist_col] + (
-            ["list_id", "n_dist"] if with_stats else []
+        return ivf._live_view(
+            spark,
+            _walk_each(
+                graphs, q, int(k), int(ef), mf.id_column, dist_col, "list_id"
+            ),
+            _score_probe(
+                q, mf.id_column, mf.column, mf.metric, dist_col, "list_id"
+            ),
+            k,
+            mf.id_column,
+            dist_col,
+            columns=[mf.id_column, dist_col]
+            + (["list_id", "n_dist"] if with_stats else []),
+            limit_result=limit_result,
         )
-        out = out.select(*cols).orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(mf.id_column).asc()
-        )
-        return out.limit(k) if limit_result else out
-
 
     def search_batch(
         self,
@@ -428,7 +366,6 @@ class IVFGraphIndex:
         qid_col: str = "qid",
         query_col: str = "query",
         dist_col: str = "dist",
-        include_delta: bool = True,
     ) -> DataFrame:
         """Batched hybrid search: ONE job answers a whole probes
         DataFrame, with the probes never snapshotting to the driver
@@ -437,144 +374,47 @@ class IVFGraphIndex:
         - probe→cell assignment runs DISTRIBUTED through the same
           ``_rank_lists`` kernel per-query :meth:`search` uses (an
           Arrow-batched pandas UDF over broadcast centroids — batch ≡
-          per-query by construction, as in ``IVFIndex.search_batch``);
-        - the (qid, query, list_id) pairs shuffle ONCE, grouped by
+          per-query by construction, as in ``IVFIndex.search_batch``)
+          over the handle's one-behind ``BatchSnapshot`` of the probes;
+        - the (qid, query, cell) pairs shuffle ONCE, grouped by
           cell: each group deserializes ITS cell graph exactly once
           (executor-side pyarrow read of the cell_graphs artifact,
-          row-group-pruned on shard_id — works on any
-          pyarrow-reachable filesystem) and walks every probe that
+          row-group-pruned on shard_id) and walks every probe that
           probed it. Graph payloads are never replicated per probe and
           never transit the driver;
-        - delta rows are exact-scanned against every probe (the SMALL
-          delta side is broadcast, not the probes), tombstones
-          anti-joined, one window top-k per qid.
+        - the wrapped index's live view scores the delta rows against
+          every probe (the SMALL delta side is broadcast, not the
+          probes), anti-joins tombstones and takes the top-k per qid
+          through ``topk_per_group``.
 
         Returns (qid, id, dist), k rows per probe.
         """
         self._check_fresh()
         ivf, mf = self.ivf, self.ivf.manifest
         npb = int(min(max(1, nprobe), mf.nlist))
-        from lantern_spark.operators.index import (
-            _probe_lists_udf,
-        )
-
         c, cids = ivf._centroid_arrays(spark)
         rank_udf, cent_bc = _probe_lists_udf(spark, c, cids, mf.metric, npb)
-        # ONE persisted probe snapshot feeds both the cell pairs and
-        # the delta scan — a probes DataFrame with nondeterministic
-        # lineage cannot walk cells for one vector and score the delta
-        # against another (the IVFIndex.search_batch contract).
-        # Released one-behind with the centroid broadcast.
-        if self._batch_bc is not None:
-            for h in self._batch_bc:
-                h.unpersist()
-        probe_snap = probes.select(qid_col, query_col).persist()
-        # materialize NOW: a lazy persist pins nothing — concurrent
-        # consumers racing before the cache populates would each
-        # compute their own copy of a nondeterministic lineage
-        # (review r7b #1). One bounded job over B probe rows.
-        probe_snap.count()
-        self._batch_bc = (probe_snap, cent_bc)
-        pairs = probe_snap.withColumn(
-            "list_id", F.explode(rank_udf(F.col(query_col)))
+        snap = self._batch.replace(
+            probes.select(qid_col, query_col), cent_bc, materialize=True
         )
-        qid_type = probes.schema[qid_col].dataType
-        schema = T.StructType(
-            [
-                T.StructField(qid_col, qid_type),
-                T.StructField(mf.id_column, T.LongType()),
-                T.StructField(dist_col, T.DoubleType()),
-            ]
+        # cell graphs are stored keyed by shard_id = list_id
+        pairs = snap.withColumn(
+            "shard_id", F.explode(rank_udf(F.col(query_col)))
         )
-        kk, eff = int(k), int(ef)
-        cell_path = os.path.join(ivf.path, _CELL_DIR)
-
-        def walk_cell(key: Tuple[Any, ...], pdf: pd.DataFrame) -> pd.DataFrame:
-            lid = int(key[0])
-            import pyarrow.dataset as pads
-
-            tbl = (
-                # hive partitioning discovers shard_id= dirs (the r7
-                # layout); a flat pre-r7 artifact exposes shard_id as
-                # a data column and the same filter applies
-                pads.dataset(
-                    cell_path, format="parquet", partitioning="hive"
-                )
-                .to_table(
-                    columns=["payload"],
-                    filter=pads.field("shard_id") == lid,
-                )
-            )
-            empty = pd.DataFrame(
-                {qid_col: [], mf.id_column: [], dist_col: []}
-            )
-            if tbl.num_rows == 0:
-                return empty
-            g = HnswGraph.from_payload(bytes(tbl["payload"][0].as_py()))
-            qids: list = []
-            ids: list = []
-            dists: list = []
-            for qid, q in zip(pdf[qid_col], pdf[query_col]):
-                res, _nd = g.search([float(x) for x in q], k=kk, ef=eff)
-                for rid, rd in res:
-                    qids.append(qid)
-                    ids.append(rid)
-                    dists.append(rd)
-            if not qids:
-                return empty
-            return pd.DataFrame(
-                {qid_col: qids, mf.id_column: ids, dist_col: dists}
-            )
-
-        out = pairs.groupBy("list_id").applyInPandas(walk_cell, schema)
-        delta_df = ivf._unfolded_delta(spark) if include_delta else None
-        if delta_df is not None:
-            from lantern_spark.functions.distances import distance
-
-            from lantern_spark.operators.index import _suppress_stale
-
-            out = _suppress_stale(
-                out, delta_df, mf.id_column, cast_long=True
-            )
-            delta = (
-                probe_snap
-                .crossJoin(
-                    F.broadcast(
-                        delta_df.select(
-                            F.col(mf.id_column)
-                            .cast("long")
-                            .alias(mf.id_column),
-                            F.col(mf.column).alias(mf.column),
-                        )
-                    )
-                )
-                .select(
-                    qid_col,
-                    mf.id_column,
-                    distance(
-                        F.col(mf.column), F.col(query_col), mf.metric
-                    )
-                    .cast("double")
-                    .alias(dist_col),
-                )
-            )
-            out = out.unionByName(delta)
-        if ivf._has(TOMBSTONES):
-            tombs = ivf._cached_read(spark, TOMBSTONES).select(
-                F.col(mf.id_column).cast("long").alias(mf.id_column)
-            )
-            out = out.join(
-                F.broadcast(tombs), on=mf.id_column, how="left_anti"
-            )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col(dist_col).asc_nulls_last(), F.col(mf.id_column).asc()
-        )
-        return (
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
+        return ivf._live_view(
+            spark,
+            _walk_groups(
+                pairs, [os.path.join(ivf.path, _CELL_DIR)],
+                qid_col, query_col, mf.id_column, dist_col, int(k), int(ef),
+            ),
+            _score_probes(
+                snap, qid_col, query_col, mf.id_column, mf.column,
+                mf.metric, dist_col,
+            ),
+            k,
+            mf.id_column,
+            dist_col,
+            qid_col=qid_col,
         )
 
 

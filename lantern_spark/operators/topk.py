@@ -37,11 +37,19 @@ def topk_per_group(
 ) -> DataFrame:
     """Rows ranked ≤ k within each group by ``order_col``.
 
+    Ascending order puts NULLs last, so a NULL score (a zero-norm cos
+    distance, a NULL delta vector) never displaces a real one — the
+    order of every index's batched top-k, which runs through here.
+
     ``salt=N`` enables the skew-bounded two-phase plan; the result is
     identical to the plain form (top-k is associative), which the test
     suite asserts.
     """
-    order = [F.col(order_col).asc() if ascending else F.col(order_col).desc()]
+    order = [
+        F.col(order_col).asc_nulls_last()
+        if ascending
+        else F.col(order_col).desc()
+    ]
     if tie_break:
         order.append(F.col(tie_break).asc())
 

@@ -650,6 +650,58 @@ def route_batch(
     )
 
 
+def search_entry(
+    spark: SparkSession,
+    entry: CatalogEntry,
+    query: Sequence[float],
+    k: int,
+    where=None,
+    oversample: int = 4,
+):
+    """Load catalog ``entry``'s index and search it at the entry's
+    operating point: ``(DataFrame, id column)``. IVF pushes ``where``
+    into its filter-aware search (probing ``oversample``× more lists);
+    the graph and ADC paths have no filtered variant (neither does the
+    reference's walk), so they over-fetch ``k·oversample`` candidates
+    and post-filter — scarce matches may underfill k. Raises on an
+    unknown kind."""
+    from lantern_spark.operators.hnsw import HNSWIndex
+    from lantern_spark.operators.index import IVFIndex
+    from lantern_spark.operators.ivf_graph import IVFGraphIndex
+
+    p, path = entry.params, entry.index_path
+    fetch = k if where is None else k * oversample
+    if entry.kind == "ivf":
+        idx = IVFIndex.load(path)
+        out = idx.search(
+            spark, query, k=k, nprobe=p["nprobe"], where=where,
+            oversample=oversample,
+        )
+        return out, idx.manifest.id_column
+    if entry.kind == "hnsw":
+        idx = HNSWIndex.load(path)
+        out = idx.search(spark, query, k=fetch, ef=p["ef"])
+        id_col = idx.manifest["id_column"]
+    elif entry.kind == "ivf_pq":
+        idx = IVFIndex.load(path)
+        out = idx.search_adc(
+            spark, query, k=fetch, nprobe=p["nprobe"],
+            oversample=p.get("oversample", 4),
+        )
+        id_col = idx.manifest.id_column
+    elif entry.kind == "ivf_graph":
+        idx = IVFGraphIndex.load(path)
+        out = idx.search(
+            spark, query, k=fetch, nprobe=p["nprobe"], ef=p["ef"]
+        )
+        id_col = idx.manifest.id_column
+    else:
+        raise ValueError(f"unknown catalog entry kind {entry.kind!r}")
+    if where is not None:
+        out = out.filter(where).limit(k)
+    return out, id_col
+
+
 def ann_search(
     spark: SparkSession,
     df: DataFrame,
@@ -696,78 +748,16 @@ def ann_search(
     oversample = max(1, int(oversample))  # 0 would probe ZERO IVF lists
     n_rows = df.count()
     decision = route(catalog, table, column, metric, n_rows, recall_floor)
-    if decision.access_path == "ivf":
-        from lantern_spark.operators.index import IVFIndex
-
-        idx = IVFIndex.load(decision.entry.index_path)
-        out = idx.search(
-            spark, query, k=k, nprobe=decision.entry.params["nprobe"],
-            where=where, oversample=oversample,
-        )
-    elif decision.access_path == "hnsw":
-        from lantern_spark.operators.hnsw import HNSWIndex
-
-        idx = HNSWIndex.load(decision.entry.index_path)
-        if where is None:
-            out = idx.search(
-                spark, query, k=k, ef=decision.entry.params["ef"]
-            )
-        else:
-            out = (
-                idx.search(
-                    spark, query, k=k * oversample,
-                    ef=decision.entry.params["ef"],
-                )
-                .filter(where)
-                .limit(k)
-            )
-    elif decision.access_path == "ivf_pq":
-        from lantern_spark.operators.index import IVFIndex
-
-        idx = IVFIndex.load(decision.entry.index_path)
-        p = decision.entry.params
-        if where is None:
-            out = idx.search_adc(
-                spark, query, k=k, nprobe=p["nprobe"],
-                oversample=p["oversample"],
-            )
-        else:
-            # ADC has no filtered variant: over-fetch + post-filter —
-            # the same post-filter contract as the graph paths
-            out = (
-                idx.search_adc(
-                    spark, query, k=k * oversample, nprobe=p["nprobe"],
-                    oversample=p["oversample"],
-                )
-                .filter(where)
-                .limit(k)
-            )
-    elif decision.access_path == "ivf_graph":
-        from lantern_spark.operators.ivf_graph import IVFGraphIndex
-
-        hyb = IVFGraphIndex.load(decision.entry.index_path)
-        p = decision.entry.params
-        if where is None:
-            out = hyb.search(
-                spark, query, k=k, nprobe=p["nprobe"], ef=p["ef"]
-            )
-        else:
-            # graph walks have no filtered variant (same as hnsw):
-            # over-fetch candidates and post-filter — the reference's
-            # post-filter contract; scarce matches may underfill k
-            out = (
-                hyb.search(
-                    spark, query, k=k * oversample,
-                    nprobe=p["nprobe"], ef=p["ef"],
-                )
-                .filter(where)
-                .limit(k)
-            )
-    else:
+    if decision.access_path == "exact":
         from lantern_spark.operators.knn import knn_search
 
         out = knn_search(
             df, column, query, k=k, metric=metric, tie_break=id_column,
             where=where,
+        )
+    else:
+        out, _ = search_entry(
+            spark, decision.entry, query, k, where=where,
+            oversample=oversample,
         )
     return (out, decision) if explain else out

@@ -479,7 +479,7 @@ def routed_sql(
     SqlFallback)`` with ``explain=True`` — a ``SqlFallback`` carries
     the REASON the exact path ran (unparseable SQL, missing param, no
     catalog), so fallbacks are diagnosable rather than silent."""
-    from lantern_spark.plans.router import route
+    from lantern_spark.plans.router import route, search_entry
 
     def run_sql(q):
         return spark.sql(q, args=params) if params else spark.sql(q)
@@ -510,45 +510,7 @@ def routed_sql(
         return (out, decision) if explain else out
     # WHERE → over-fetch so the post-hoc filter can still fill k
     fetch_k = k * max(1, int(oversample)) if m["where"] else k
-    if e.kind == "ivf":
-        from lantern_spark.operators.index import IVFIndex
-
-        idx = IVFIndex.load(e.index_path)
-        cand = idx.search(
-            spark, query, k=fetch_k, nprobe=e.params["nprobe"]
-        )
-        id_col = idx.manifest.id_column
-    elif e.kind == "hnsw":
-        from lantern_spark.operators.hnsw import HNSWIndex
-
-        idx = HNSWIndex.load(e.index_path)
-        cand = idx.search(spark, query, k=fetch_k, ef=e.params["ef"])
-        id_col = idx.manifest["id_column"]
-    elif e.kind == "ivf_pq":
-        # the ADC tier routinely wins at scale (review r7 #2: this
-        # kind previously fell into the ivf_graph branch and crashed
-        # on a valid catalog)
-        from lantern_spark.operators.index import IVFIndex
-
-        idx = IVFIndex.load(e.index_path)
-        cand = idx.search_adc(
-            spark, query, k=fetch_k, nprobe=e.params["nprobe"],
-            oversample=e.params.get("oversample", 4),
-        )
-        id_col = idx.manifest.id_column
-    elif e.kind == "ivf_graph":
-        from lantern_spark.operators.ivf_graph import IVFGraphIndex
-
-        hyb = IVFGraphIndex.load(e.index_path)
-        cand = hyb.search(
-            spark, query, k=fetch_k, nprobe=e.params["nprobe"],
-            ef=e.params["ef"],
-        )
-        id_col = hyb.ivf.manifest.id_column
-    else:
-        raise ValueError(
-            f"routed_sql: unknown catalog entry kind {e.kind!r}"
-        )
+    cand, id_col = search_entry(spark, e, query, fetch_k)
     ids = [r[0] for r in cand.select(id_col).collect()]  # ≤ fetch_k rows
     view = f"{table}__ann_candidates"
     df.filter(df[id_col].isin(ids)).createOrReplaceTempView(view)

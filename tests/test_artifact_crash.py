@@ -455,6 +455,10 @@ class TestKilledSparkWriter:
         from lantern_spark.operators.index import IVFIndex
 
         path = _kill_spark_writer(tmp_path, "fold")
+        # load() succeeds so that a writer can recover, but a search
+        # refuses the half-replayed artifact (one list sits in _trash/)
+        with pytest.raises(RuntimeError, match=r"_journal\.json.*recover"):
+            IVFIndex.load(path).search(spark, [0.0] * 8, k=500, nprobe=8)
         IVFIndex.load(path).fold_delta(spark)  # the next writer call
         _assert_consistent(spark, IVFIndex.load(path))
 

@@ -54,3 +54,20 @@ def test_every_headline_name_resolves_to_a_callable():
     assert [e.name for e in table if e.headline and e.reps == 2] == (
         bench.HEADLINE
     )
+
+
+def test_stdout_line_keeps_a_quality_block():
+    """A full sf0.1 payload (the committed BENCH_FULL.json: every query
+    and quality key of a run) still prints the QUALITY_KEEP block
+    within the 1950-char budget."""
+    import json
+    import os
+
+    full = os.path.join(os.path.dirname(bench.__file__), "BENCH_FULL.json")
+    with open(full) as f:
+        payload = json.load(f)
+    assert len(payload["queries"]) >= 47 and len(payload["quality"]) >= 89
+    assert set(bench.QUALITY_KEEP) <= set(payload["quality"])
+    line = bench.short_line(payload)
+    assert len(line) <= 1950
+    assert set(json.loads(line)["quality"]) == set(bench.QUALITY_KEEP)

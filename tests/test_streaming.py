@@ -263,7 +263,7 @@ class TestIncrementalIndex:
         finally:
             q.stop()
         assert state["rebuilds"] == 0
-        # delta rows searchable without rebuild (include_delta path)
+        # delta rows searchable without rebuild (the live-view delta union)
         probe = emb.filter("vec_id = 490").first()["embedding"]
         top = state["index"].search(spark, list(probe), k=1, nprobe=4).first()
         assert top["vec_id"] == 490
