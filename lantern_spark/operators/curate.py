@@ -745,17 +745,19 @@ def decontaminate_fuzzy(
 
     Plan shape (100 TB-safe): signatures are fixed-width (n_hashes ×
     8 B), band keys are 32 B; the heldout side is eval-set-sized, so
-    both the band join and the verification join broadcast it — the
-    train corpus is never shuffled, only scanned.
+    the band join broadcasts it. The verify is ``dedup.candidate_jaccard``
+    over the (train id, heldout id) candidates: only candidate train
+    docs are shingled, once each. The candidates and the contaminated
+    ids are broadcast into the train-side joins — the train corpus is
+    never shuffled, only scanned.
     """
     if mode not in ("drop", "flag"):
         raise ValueError(f"mode must be drop|flag, got {mode!r}")
     from lantern_spark.operators.dedup import (
+        candidate_jaccard,
         lsh_band_keys,
         minhash_docs,
-        shingles,
     )
-    from lantern_spark.functions.text import tokenize
 
     h_text = heldout_text_col or text_col
     t_sigs = minhash_docs(train, text_col, id_col, n_hashes, shingle_k)
@@ -770,28 +772,15 @@ def decontaminate_fuzzy(
     h_bands = lsh_band_keys(h_sigs, "__h_id", bands, rows_per_band)
     cand = (
         t_bands.join(h_bands, ["band", "key"])
-        .select(id_col, "__h_id")
+        .select(F.col(id_col).alias("id_a"), F.col("__h_id").alias("id_b"))
         .distinct()
     )
-    if threshold is None:
-        contaminated = cand.select(id_col).distinct()
-    else:
-        t_sh = train.select(
-            F.col(id_col),
-            shingles(tokenize(text_col), shingle_k).alias("__sh_t"),
+    if threshold is not None:
+        cand = candidate_jaccard(
+            F.broadcast(cand),
+            train,
+            held.select(F.col("__h_id").alias(id_col), F.col("__h_text").alias(text_col)),
+            id_col, text_col, shingle_k, float(threshold),
         )
-        h_sh = held.select(
-            "__h_id", shingles(tokenize("__h_text"), shingle_k).alias("__sh_h")
-        )
-        jac = F.size(F.array_intersect("__sh_t", "__sh_h")) / F.size(
-            F.array_union("__sh_t", "__sh_h")
-        )
-        contaminated = (
-            cand.join(t_sh, id_col)
-            .join(h_sh, "__h_id")
-            .withColumn("__j", jac)
-            .filter(F.col("__j") >= float(threshold))
-            .select(id_col)
-            .distinct()
-        )
-    return _apply_contamination(train, contaminated, id_col, mode)
+    contaminated = cand.select(F.col("id_a").alias(id_col)).distinct()
+    return _apply_contamination(train, F.broadcast(contaminated), id_col, mode)

@@ -138,13 +138,8 @@ def minhash_docs(
     shingle_k: int = 3,
 ) -> DataFrame:
     """(id, sig) signatures; docs with < shingle_k tokens are dropped
-    (no shingle support — cannot participate in MinHash).
-
-    The support filter tests the CHEAP token count, not the shingle
-    array: a filter on the shingle expression would make Catalyst
-    evaluate the full shingle+hash pipeline twice per row (predicate
-    pushdown rewrites the filter in terms of the inlined expression).
-    """
+    (no shingle support — cannot participate in MinHash), by the same
+    token-count filter as :func:`candidate_jaccard`."""
     from lantern_spark.types import ensure_parallelism
 
     toks_df = ensure_parallelism(df).select(
@@ -163,9 +158,10 @@ def lsh_band_keys(
     rows_per_band: int = 4,
 ) -> DataFrame:
     """Explode (id, sig) signatures to (id, band, key) LSH bucket
-    rows — the shared banding kernel behind same-corpus candidate
-    pairs (:func:`lsh_candidate_pairs`) and cross-corpus probes
-    (``curate.decontaminate_fuzzy``): two tables banded with the SAME
+    rows — the one banding kernel behind same-corpus candidate pairs
+    (:func:`lsh_candidate_pairs`), cross-corpus probes
+    (``curate.decontaminate_fuzzy``) and the streaming gate's bucket
+    store (``streaming/neardup_stream``): two tables banded with the SAME
     (n_hashes, shingle_k, bands, rows_per_band) collide exactly when
     their signatures agree on a full band."""
     band_cols = []
@@ -187,7 +183,6 @@ def lsh_candidate_pairs(
     id_col: str,
     bands: int = 4,
     rows_per_band: int = 4,
-    persist_sigs: bool = False,
 ) -> DataFrame:
     """LSH banding: docs sharing any band of the signature become a
     candidate pair. Returns (id_a, id_b) with id_a < id_b, distinct.
@@ -200,14 +195,7 @@ def lsh_candidate_pairs(
     quadratic only within a bucket — the LSH contract already requires
     buckets to be small (hot buckets mean the banding params are wrong
     for the corpus).
-
-    ``persist_sigs=True`` caches the signature DataFrame first: the band
-    explode references ``sig`` once per band, and if ``sigs`` is an
-    unmaterialized expression pipeline Catalyst re-inlines it per band.
-    At scale, persist (or pre-write) signatures that feed LSH.
     """
-    if persist_sigs:
-        sigs = sigs.persist()
     exploded = lsh_band_keys(sigs, id_col, bands, rows_per_band)
 
     buckets = (
@@ -232,34 +220,44 @@ def lsh_candidate_pairs(
     return pairs.select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")).distinct()
 
 
-def ngram_jaccard(
-    df: DataFrame,
-    text_col: str,
+def candidate_jaccard(
+    pairs: DataFrame,
+    a_docs: DataFrame,
+    b_docs: DataFrame,
     id_col: str,
-    pairs: Optional[DataFrame] = None,
+    text_col: str,
     shingle_k: int = 3,
     threshold: float = 0.0,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for candidate pairs.
+    """Exact shingle Jaccard of candidate ``pairs`` (id_a, id_b) →
+    (id_a, id_b, jaccard): ``id_a`` names a doc of ``a_docs``, ``id_b``
+    one of ``b_docs`` (both keyed by ``id_col``, text in ``text_col``).
+    The one verify step behind every MinHash → LSH → Jaccard caller.
 
-    ``pairs`` defaults to LSH candidates; passing an explicit pair set
-    (e.g. same-source blocking) keeps the join bounded at scale.
-    Returns (id_a, id_b, jaccard).
+    Filter-and-refine: each side is semi-joined to its candidate ids,
+    so only candidate docs are shingled, once per side. Docs with
+    < ``shingle_k`` tokens have no shingle and yield no pair: they are
+    dropped on the cheap token count, not on the shingle array (a
+    filter on the shingle expression is pushed below the semi-join and
+    makes Catalyst shingle every doc twice). With ``threshold > 0``
+    only pairs with jaccard ≥ threshold remain.
     """
-    from lantern_spark.types import ensure_parallelism
+    # null ids never join; stating it up front gives all three uses of
+    # ``pairs`` one plan, so their exchanges are reused, not recomputed
+    pairs = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
 
-    sh = ensure_parallelism(df).select(
-        F.col(id_col),
-        shingles(tokenize(text_col), shingle_k).alias("sh"),
-    ).filter(F.size("sh") > 0)
-    if pairs is None:
-        sigs = minhash_docs(df, text_col, id_col)
-        pairs = lsh_candidate_pairs(sigs, id_col)
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    def side(docs: DataFrame, key: str) -> DataFrame:
+        ids = pairs.select(F.col(key).alias(id_col))
+        toks = (
+            docs.join(ids, id_col, "left_semi")
+            .select(F.col(id_col).alias(key), tokenize(text_col).alias("__t"))
+            .filter(F.size("__t") >= shingle_k)
+        )
+        return toks.select(key, shingles("__t", shingle_k).alias("sh" + key[2:]))
+
     out = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
+        pairs.join(side(a_docs, "id_a"), "id_a")
+        .join(side(b_docs, "id_b"), "id_b")
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("sh_a", "sh_b"))
@@ -270,6 +268,25 @@ def ngram_jaccard(
     if threshold > 0:
         out = out.filter(F.col("jaccard") >= threshold)
     return out
+
+
+def ngram_jaccard(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    pairs: DataFrame,
+    shingle_k: int = 3,
+    threshold: float = 0.0,
+) -> DataFrame:
+    """Exact n-gram Jaccard of same-corpus candidate ``pairs`` (LSH
+    candidates, or an explicit blocking such as same-source pairs):
+    :func:`candidate_jaccard` with ``df`` on both sides. Returns
+    (id_a, id_b, jaccard).
+    """
+    from lantern_spark.types import ensure_parallelism
+
+    df = ensure_parallelism(df)
+    return candidate_jaccard(pairs, df, df, id_col, text_col, shingle_k, threshold)
 
 
 def near_dedup_minhash(

@@ -16,7 +16,7 @@ micro-batches rewrite identical files — the at-least-once idempotence
 contract). Replay safety is structural: history reads list the
 committed ``batch_*`` directories explicitly, EXCLUDING the current
 epoch's own (a crashed attempt's leftover would otherwise self-pair
-every doc and erase the batch), a ``__new_id != __old_id`` guard
+every doc and erase the batch), an ``id_a != id_b`` guard
 backstops the join, and in-stream consolidation folds only epochs
 strictly older than the one being processed (committed, so they never
 replay).
@@ -61,7 +61,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lantern_spark.operators.dedup import minhash_docs
+from lantern_spark.operators.dedup import (
+    SEP,
+    candidate_jaccard,
+    lsh_band_keys,
+    minhash_docs,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -70,36 +75,6 @@ __all__ = [
     "load_neardup_survivors",
     "consolidate_neardup_store",
 ]
-
-
-def _band_keys(
-    df: DataFrame, text_col: str, id_col: str,
-    n_hashes: int, bands: int, shingle_k: int,
-) -> DataFrame:
-    """(band, key, id) LSH bucket rows — the same banding math as
-    ``lsh_candidate_pairs`` (md5 over signature slices), factored so
-    batch and store rows key identically."""
-    rows = bands
-    rpb = n_hashes // bands
-    sigs = minhash_docs(df, text_col, id_col, n_hashes, shingle_k)
-    band_cols = []
-    for b in range(rows):
-        chunk = F.slice(F.col("sig"), b * rpb + 1, rpb)
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws("\x1f", chunk.cast("array<string>"))
-                ).alias("key"),
-            )
-        )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(
-        F.col("bk.band").alias("band"),
-        F.col("bk.key").alias("key"),
-        F.col(id_col),
-    )
 
 
 def load_neardup_survivors(
@@ -274,7 +249,7 @@ def incremental_neardup_job(
     bloom_root = fs.join(store_path, "bloom")
     bloom_params_path = fs.join(store_path, "bloom_params.json")
     _bkey = F.concat_ws(
-        "\x1f", F.col("band").cast("string"), F.col("key")
+        SEP, F.col("band").cast("string"), F.col("key")
     ).alias("__bk")
 
     def _have_bloom() -> bool:
@@ -495,8 +470,9 @@ def incremental_neardup_job(
             return
         batch_df = batch_df.persist()
         try:
-            keys = _band_keys(
-                batch_df, text_col, id_col, n_hashes, bands, shingle_k
+            keys = lsh_band_keys(
+                minhash_docs(batch_df, text_col, id_col, n_hashes, shingle_k),
+                id_col, bands, n_hashes // bands,
             ).persist()
             # in-batch: min-id winner per bucket; a doc losing ANY
             # bucket to a smaller in-batch id is an in-batch near-dup
@@ -508,8 +484,7 @@ def incremental_neardup_job(
                 keys.withColumn("__first", F.first(id_col).over(w))
                 .filter(F.col("__first") != F.col(id_col))
                 .select(
-                    F.col(id_col).alias("__new_id"),
-                    F.col("__first").alias("__old_id"),
+                    F.col(id_col).alias("id_a"), F.col("__first").alias("id_b")
                 )
             )
             bucket_dir = _live("buckets")
@@ -527,67 +502,34 @@ def incremental_neardup_job(
                 store = spark.read.parquet(*bucket_paths)
                 hist = (
                     keys.join(
-                        store.withColumnRenamed(id_col, "__old_id"),
+                        store.withColumnRenamed(id_col, "id_b"),
                         ["band", "key"],
                     )
-                    .select(
-                        F.col(id_col).alias("__new_id"),
-                        F.col("__old_id"),
-                    )
+                    .select(F.col(id_col).alias("id_a"), "id_b")
                     # defense in depth against a replayed epoch's own
                     # rows reaching the store read: a doc is never a
                     # near-dup of itself
-                    .filter(F.col("__new_id") != F.col("__old_id"))
+                    .filter(F.col("id_a") != F.col("id_b"))
                 )
                 pairs = pairs.unionByName(hist)
             pairs = pairs.distinct()
             if verify_threshold is not None:
                 # exact Jaccard verify against the stored/in-batch
-                # survivor texts — LSH is a candidate generator
-                olds = batch_df.select(
-                    F.col(id_col).alias("__old_id"),
-                    F.col(text_col).alias("__old_text"),
-                )
-                # stored survivor texts are only candidate partners
+                # survivor texts — LSH is a candidate generator.
+                # Stored survivor texts are only candidate partners
                 # when the history join actually ran — in-batch pairs
                 # always verify against batch texts
+                olds = batch_df.select(id_col, text_col)
                 if doc_paths and hist_scan:
                     olds = olds.unionByName(
-                        spark.read.parquet(*doc_paths).select(
-                            F.col(id_col).alias("__old_id"),
-                            F.col(text_col).alias("__old_text"),
-                        )
+                        spark.read.parquet(*doc_paths).select(id_col, text_col)
                     )
-                both = (
-                    pairs.join(
-                        batch_df.select(
-                            F.col(id_col).alias("__new_id"),
-                            F.col(text_col).alias("__new_text"),
-                        ),
-                        "__new_id",
-                    )
-                    .join(olds, "__old_id")
+                pairs = candidate_jaccard(
+                    pairs, batch_df, olds, id_col, text_col,
+                    shingle_k, float(verify_threshold),
                 )
-                cand = both.select(
-                    F.col("__new_id").alias("id_a"),
-                    F.col("__old_id").alias("id_b"),
-                    F.col("__new_text").alias("__text_a"),
-                    F.col("__old_text").alias("__text_b"),
-                )
-                dropped = _verified_ids(
-                    cand, shingle_k, float(verify_threshold)
-                )
-            else:
-                dropped = pairs.select(
-                    F.col("__new_id").alias(id_col)
-                ).distinct()
-            survivors = batch_df.join(
-                dropped.withColumnRenamed("id_a", id_col)
-                if verify_threshold is not None
-                else dropped,
-                id_col,
-                "left_anti",
-            ).persist()
+            dropped = pairs.select(F.col("id_a").alias(id_col)).distinct()
+            survivors = batch_df.join(dropped, id_col, "left_anti").persist()
             # idempotent epoch writes (bm25_stream convention):
             # replayed batches overwrite their own directories
             survivors.write.mode("overwrite").parquet(
@@ -633,22 +575,3 @@ def incremental_neardup_job(
         writer = writer.trigger(**trigger)
     return writer.start()
 
-
-def _verified_ids(cand: DataFrame, shingle_k: int, threshold: float):
-    """ids (as ``id_a``) whose exact shingle Jaccard with any candidate
-    partner clears the floor — the same tokenize→shingle→overlap math
-    as ``dedup.ngram_jaccard``, inlined over the paired texts."""
-    from lantern_spark.functions.text import tokenize
-    from lantern_spark.operators.dedup import shingles
-
-    sa = shingles(tokenize(F.col("__text_a")), shingle_k)
-    sb = shingles(tokenize(F.col("__text_b")), shingle_k)
-    inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    uni = F.size(F.array_union(sa, sb)).cast("double")
-    jac = F.when(uni > 0, inter / uni).otherwise(F.lit(0.0))
-    return (
-        cand.withColumn("__j", jac)
-        .filter(F.col("__j") >= threshold)
-        .select("id_a")
-        .distinct()
-    )

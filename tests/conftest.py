@@ -144,3 +144,19 @@ def assert_matches_oracle(spark_df, duck_con, sql, ndigits=6):
     _, drows = _canon(ddata, dcols, ndigits)
     for i, (a, b) in enumerate(zip(srows, drows)):
         assert a == b, f"row {i} mismatch:\n spark={a}\n duck ={b}"
+
+
+def plan_nodes(node):
+    """Every node of a JVM logical or physical plan, depth first,
+    descending into adaptive query stages and reused exchanges."""
+    yield node
+    name = node.nodeName()
+    if name.endswith("QueryStage"):
+        kids = [node.plan()]
+    elif name == "ReusedExchange":
+        kids = [node.child()]
+    else:
+        ch = node.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    for k in kids:
+        yield from plan_nodes(k)

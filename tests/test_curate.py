@@ -841,3 +841,26 @@ class TestDecontaminateFuzzy:
             .toString()
         )
         assert "EvalPython" not in plan
+
+    def test_train_corpus_never_hash_shuffled(self, spark, sf_dir):
+        """The held-out side and the candidates are the small sides:
+        no hash exchange in the executed plan carries train rows."""
+        from lantern_spark.operators.curate import decontaminate_fuzzy
+        from tests.conftest import plan_nodes
+
+        train = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        heldout = spark.createDataFrame(
+            [(r.text,) for r in train.orderBy("doc_id").limit(3).collect()],
+            "text string",
+        )
+        out = decontaminate_fuzzy(train, heldout, "text", "doc_id")
+        assert len(out.collect()) <= train.count() - 3  # the 3 leaks at least
+        final = out._jdf.queryExecution().executedPlan().executedPlan()
+        for n in plan_nodes(final):
+            if n.nodeName() == "Exchange" and str(
+                n.outputPartitioning()
+            ).startswith("hashpartitioning"):
+                out_cols = [
+                    n.output().apply(i).name() for i in range(n.output().size())
+                ]
+                assert "text" not in out_cols, n.toString()

@@ -18,7 +18,7 @@ from lantern_spark.operators.dedup import (
     simhash_docs,
     simhash_near_pairs,
 )
-from tests.conftest import assert_matches_oracle
+from tests.conftest import assert_matches_oracle, plan_nodes
 
 
 @pytest.fixture(scope="module")
@@ -1155,8 +1155,7 @@ class TestShortDocuments:
     def test_short_docs_through_every_shingle_caller(self, spark):
         from lantern_spark.functions.text import tokenize
         from lantern_spark.operators.curate import decontaminate_fuzzy
-        from lantern_spark.operators.dedup import shingles
-        from lantern_spark.streaming.neardup_stream import _verified_ids
+        from lantern_spark.operators.dedup import candidate_jaccard, shingles
 
         df = spark.createDataFrame(self.TEXTS, "id long, text string")
         sh = {
@@ -1184,9 +1183,38 @@ class TestShortDocuments:
         )
         clean = decontaminate_fuzzy(df, held, "text", "id")
         assert sorted(r["id"] for r in clean.collect()) == [1, 2, 3]
-        cand = spark.createDataFrame(
-            [(1, 2, "hello world", "hello world"),
-             (4, 5, self.TEXTS[3][1], self.TEXTS[4][1])],
-            "id_a long, id_b long, __text_a string, __text_b string",
+        cand = spark.createDataFrame([(1, 2), (4, 5)], "id_a long, id_b long")
+        got = candidate_jaccard(cand, df, df, "id", "text", 3, 0.5)
+        assert [r["id_a"] for r in got.collect()] == [4]
+
+
+class TestCandidateOnlyVerify:
+    """The exact-Jaccard verify shingles only the candidate documents
+    (filter-and-refine), never the whole corpus."""
+
+    def test_each_side_shingles_behind_a_semi_join(self, spark, docs):
+        pairs = spark.createDataFrame(
+            [(1, 2), (1, 3), (5, 9)], "id_a long, id_b long"
         )
-        assert [r["id_a"] for r in _verified_ids(cand, 3, 0.5).collect()] == [4]
+        plan = ngram_jaccard(
+            docs, "text", "doc_id", pairs
+        )._jdf.queryExecution().optimizedPlan()
+        shingling = [
+            n for n in plan_nodes(plan)
+            if n.nodeName() == "Project"
+            and "array_distinct" in n.projectList().mkString(",")
+        ]
+        assert len(shingling) == 2  # one per join side
+        for proj in shingling:
+            assert any(
+                n.nodeName() == "Join" and n.joinType().toString() == "LeftSemi"
+                for n in plan_nodes(proj)
+            ), proj.toString()
+
+    def test_near_dedup_job_count(self, docs, spark_jobs):
+        # 11 jobs when the verify shingled the whole corpus; the
+        # candidate-id semi-joins add their own stages
+        _, jobs = spark_jobs(
+            lambda: near_dedup_minhash(docs, "text", "doc_id").count()
+        )
+        assert jobs <= 14

@@ -107,6 +107,24 @@ class TestStreamingNearDup:
         got = self._run(spark, tmp_path, [[1], [2], [4]])
         assert got == [1]
 
+    def test_bucket_fragments_match_batch_banding(self, spark, tmp_path):
+        """Stored buckets keep their (doc_id, band, key) layout and key
+        exactly as the batch operator's ``lsh_band_keys``."""
+        from lantern_spark.operators.dedup import lsh_band_keys, minhash_docs
+
+        got = self._run(spark, tmp_path, [[1, 3], [2, 4, 5]])
+        assert got == [1, 3, 5]
+        stored = spark.read.parquet(
+            str(tmp_path / "store" / "buckets" / "batch_0")
+        )
+        assert stored.columns == ["doc_id", "band", "key"]
+        docs = _docs()
+        batch = spark.createDataFrame(
+            [(d, docs[d]) for d in (1, 3)], "doc_id long, text string"
+        )
+        want = lsh_band_keys(minhash_docs(batch, "text", "doc_id"), "doc_id")
+        assert sorted(stored.collect()) == sorted(want.collect())
+
     def test_bloom_prefilter_skips_store_scan(
         self, spark, tmp_path, monkeypatch
     ):
