@@ -707,6 +707,12 @@ class HNSWIndex(IndexArtifact):
                 stage_path(path, "vectors")
             )
             staged.append("vectors")
+        import pyarrow.parquet as pq
+
+        # the staged graph rows' own counts, read on the driver (no job)
+        n_vectors = pq.read_table(
+            stage_path(path, "graphs"), columns=["n"]
+        ).column("n").to_numpy().sum()
         manifest = {
             "kind": "hnsw",
             "column": column,
@@ -716,6 +722,7 @@ class HNSWIndex(IndexArtifact):
             "m": m,
             "ef_construction": ef_construction,
             "shards": shards,
+            "num_vectors": int(n_vectors),
             "seed": seed,
             "quant": qval,
             "pq_splits": pq_splits,
@@ -867,8 +874,8 @@ class HNSWIndex(IndexArtifact):
         (operators/artifact.py): the move to ``graphs_delta/
         fold_epoch=N/`` (plus, for quantized builds, the heap part
         files), then the manifest (fold_epoch, fold_epoch_base,
-        folded_seq watermark, shards), then the removal of the
-        consumed delta and of the epochs a compaction superseded. A
+        folded_seq watermark, shards, num_vectors), then the removal of
+        the consumed delta and of the epochs a compaction superseded. A
         kill before the journal leaves the pre-fold artifact; a kill
         after it is finished by the next writer call, which replays the
         journal.
@@ -967,6 +974,8 @@ class HNSWIndex(IndexArtifact):
         mf["fold_epoch"] = epoch
         mf["folded_seq"] = max_seq
         mf["next_shard_id"] = sid + 1
+        if "num_vectors" in mf:  # absent from legacy manifests
+            mf["num_vectors"] = int(mf["num_vectors"]) + int(agg["n"])
         if compact:
             mf["fold_epoch_base"] = old_epoch
             mf["shards"] = int(mf["shards"]) - live_folds + 1

@@ -32,14 +32,6 @@ from lantern_spark.functions.vectors import vec_lit
 from lantern_spark.types import MAX_K
 
 
-def _query_col(query) -> Column:
-    if isinstance(query, Column):
-        return query
-    if isinstance(query, (list, tuple)):
-        return vec_lit(query)
-    return F.col(query)
-
-
 def knn_search(
     df: DataFrame,
     column: str,
@@ -80,8 +72,7 @@ def knn_search(
             dist_col, arrow_distance(F.col(column), list(query), metric)
         )
     else:
-        q = _query_col(query)
-        out = df.withColumn(dist_col, distance(F.col(column), q, metric))
+        out = df.withColumn(dist_col, distance(column, query, metric))
     if where is not None:
         out = out.filter(where)
     order = [F.col(dist_col).asc_nulls_last()]
@@ -186,7 +177,7 @@ def weighted_vector_search(
     def joint(frame: DataFrame) -> Column:
         expr = F.lit(0.0)
         for w_, col_, q_ in terms:
-            expr = expr + F.lit(float(w_)) * distance(F.col(col_), _query_col(q_), metric)
+            expr = expr + F.lit(float(w_)) * distance(col_, q_, metric)
         return expr
 
     if exact:

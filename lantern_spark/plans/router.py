@@ -46,6 +46,8 @@ from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lantern_spark.operators import artifact
+
 __all__ = [
     "CatalogEntry",
     "IndexCatalog",
@@ -195,6 +197,8 @@ class IndexCatalog:
     def __init__(self, root: str):
         self.root = root
         self._entries: List[CatalogEntry] = []
+        # (handle class, index path) -> (control-file texts, handle)
+        self._handles: dict = {}
         self._load()
 
     @property
@@ -254,14 +258,16 @@ class IndexCatalog:
         index,
         table: str,
         ef: int,
-        num_vectors: int,
+        num_vectors: Optional[int] = None,
         recall_estimate: float = 0.0,
         save: bool = True,
     ) -> CatalogEntry:
-        """Register an HNSWIndex. Its manifest stores no row count
-        (graphs are opaque per-shard payloads), so the caller passes
-        ``num_vectors`` — typically the build input's count."""
+        """Register an HNSWIndex. ``num_vectors`` defaults to the
+        manifest's count (build and fold keep it); a legacy manifest
+        without one needs it passed."""
         mf = index.manifest
+        if num_vectors is None:
+            num_vectors = mf["num_vectors"]
         e = CatalogEntry(
             table=table,
             column=mf["column"],
@@ -356,6 +362,42 @@ class IndexCatalog:
             for e in self._entries
             if e.table == table and e.column == column and e.metric == metric
         ]
+
+    def handle(self, entry: CatalogEntry):
+        """``entry``'s index handle, kept warm (its relation cache spares
+        routed searches a cold listing job) and reloaded when the
+        control files its ``load`` reads change — a fold or rebuild
+        through any handle rewrites the manifest."""
+        from lantern_spark.operators.hnsw import HNSWIndex
+        from lantern_spark.operators.index import IVFIndex
+        from lantern_spark.operators.ivf_graph import _META_FILE, IVFGraphIndex
+
+        cls, files = {
+            "ivf": (IVFIndex, ()),
+            "ivf_pq": (IVFIndex, ()),
+            "hnsw": (HNSWIndex, ()),
+            "ivf_graph": (IVFGraphIndex, (_META_FILE,)),
+        }[entry.kind]
+        token = tuple(
+            artifact.FS.read_text(os.path.join(entry.index_path, f))
+            for f in (artifact.MANIFEST,) + files
+        )
+        hit = self._handles.get((cls, entry.index_path))
+        if hit is None or hit[0] != token:
+            hit = (token, cls.load(entry.index_path))
+            self._handles[(cls, entry.index_path)] = hit
+        return hit[1]
+
+    def manifest_rows(self, entry: CatalogEntry) -> int:
+        """Rows in the entry's artifact per its current manifest (the
+        registered count for a legacy HNSW manifest without one, or for
+        an artifact that is gone — a route must not fail on it)."""
+        try:
+            mf = self.handle(entry).manifest
+        except FileNotFoundError:
+            return int(entry.num_vectors)
+        n = mf.get("num_vectors") if isinstance(mf, dict) else mf.num_vectors
+        return int(entry.num_vectors if n is None else n)
 
 
 # ----------------------------------------------------------------------
@@ -482,7 +524,7 @@ _ACCURACY_ORDER = {
 
 
 def _pick(
-    cands: list, n_rows: int, suffix: str = "", hints: list = None
+    cands: list, n_rows: int, source: str, suffix: str = "", hints: list = None
 ) -> RouteDecision:
     eligible = [c for c in cands if c[2]]
     best = min(
@@ -490,7 +532,8 @@ def _pick(
     )
     picked = best[4]
     reason = (
-        f"{best[0]}: est {best[1]:.0f} tuples vs exact {n_rows} "
+        f"{best[0]}: est {best[1]:.0f} tuples vs exact {n_rows} rows "
+        f"({source}) "
         f"({len(eligible)} eligible of {len(cands)} candidates){suffix}"
     )
     return RouteDecision(
@@ -503,12 +546,11 @@ def _pick(
     )
 
 
-def _delta_adjusted(e: CatalogEntry, base_est: float, hints: list) -> float:
-    """``base_est`` plus the live unfolded-delta brute-force term for
-    this entry's artifact; appends a "fold first" hint when the delta
+def _delta_adjusted(e: CatalogEntry, base_est: float, hints: list, dr: int) -> float:
+    """``base_est`` plus the brute-force term of the entry's ``dr``
+    unfolded delta rows; appends a "fold first" hint when the delta
     term dominates the path's own estimate (the point where running
     ``fold_delta`` pays for itself within ~one query's savings)."""
-    dr = unfolded_delta_rows(e.index_path)
     if dr <= 0:
         return base_est
     if dr > base_est:
@@ -526,7 +568,7 @@ def route(
     table: str,
     column: str,
     metric: str,
-    n_rows: int,
+    n_rows: Optional[int] = None,
     recall_floor: float = 0.9,
     k: int = 10,
 ) -> RouteDecision:
@@ -536,6 +578,11 @@ def route(
     the index against. ``k`` only affects the ADC tier (its exact
     re-rank reads k·oversample rows).
 
+    ``n_rows=None`` prices the exact scan from the catalog's live row
+    count without a Spark job: the largest manifest ``num_vectors``
+    plus unfolded delta rows over the matching entries (none: exact,
+    nothing counted). The reason names the count and its source.
+
     Delta-aware (review r7 item 4): every index path's estimate adds
     its artifact's LIVE unfolded-delta row count (both families
     brute-force scan the unfolded delta per query), so an index that
@@ -543,14 +590,33 @@ def route(
     decision carries a "fold first" hint once the delta term dominates
     (``RouteDecision.hints``)."""
     hints: list = []
+    entries = [
+        (e, unfolded_delta_rows(e.index_path))
+        for e in (catalog.lookup(table, column, metric) if catalog else [])
+    ]
+    source = "given"
+    if n_rows is None:
+        live = [
+            (catalog.manifest_rows(e), dr, e.kind)
+            for e, dr in entries
+            if e.kind in _ACCURACY_ORDER
+        ]
+        if not live:
+            return RouteDecision(
+                "exact", float("nan"), None,
+                f"exact: no index on {table}.{column} ({metric}); "
+                "rows not counted",
+            )
+        m, dr, kind = max(live, key=lambda t: t[0] + t[1])
+        n_rows, source = m + dr, f"{kind} manifest {m} + {dr} unfolded delta"
     cands = [("exact", estimate_exact_tuples(n_rows), True, "always eligible", None)]
-    for e in catalog.lookup(table, column, metric) if catalog else []:
+    for e, dr in entries:
         n = e.num_vectors or n_rows
         est = _entry_eval_tuples(e, n, k)
         if est == float("inf"):
             cands.append((e.kind, est, False, "unknown kind", e))
             continue
-        est = _delta_adjusted(e, est, hints)
+        est = _delta_adjusted(e, est, hints, dr)
         if e.recall_estimate < recall_floor:
             cands.append(
                 (
@@ -563,7 +629,7 @@ def route(
             )
         else:
             cands.append((e.kind, est, True, "eligible", e))
-    return _pick(cands, n_rows, hints=hints)
+    return _pick(cands, n_rows, source, hints=hints)
 
 
 def route_batch(
@@ -632,7 +698,9 @@ def route_batch(
         # unfolded delta: every probe in the batch brute-force scans
         # it (per-probe evals), and its read amortizes like the base
         # data — the eval term is what matters, same as route()
-        est = _delta_adjusted(e, evals + read, hints)
+        est = _delta_adjusted(
+            e, evals + read, hints, unfolded_delta_rows(e.index_path)
+        )
         if e.recall_estimate < recall_floor:
             cands.append(
                 (
@@ -646,57 +714,48 @@ def route_batch(
         else:
             cands.append((e.kind, est, True, "eligible", e))
     return _pick(
-        cands, n_rows, suffix=f" [batch={B}, per-probe]", hints=hints
+        cands, n_rows, "given", suffix=f" [batch={B}, per-probe]", hints=hints
     )
 
 
 def search_entry(
     spark: SparkSession,
+    catalog: IndexCatalog,
     entry: CatalogEntry,
     query: Sequence[float],
     k: int,
     where=None,
     oversample: int = 4,
 ):
-    """Load catalog ``entry``'s index and search it at the entry's
+    """Search the catalog's warm handle of ``entry`` at the entry's
     operating point: ``(DataFrame, id column)``. IVF pushes ``where``
     into its filter-aware search (probing ``oversample``× more lists);
     the graph and ADC paths have no filtered variant (neither does the
     reference's walk), so they over-fetch ``k·oversample`` candidates
-    and post-filter — scarce matches may underfill k. Raises on an
-    unknown kind."""
-    from lantern_spark.operators.hnsw import HNSWIndex
-    from lantern_spark.operators.index import IVFIndex
-    from lantern_spark.operators.ivf_graph import IVFGraphIndex
-
-    p, path = entry.params, entry.index_path
+    and post-filter — scarce matches may underfill k."""
+    p = entry.params
+    idx = catalog.handle(entry)
     fetch = k if where is None else k * oversample
     if entry.kind == "ivf":
-        idx = IVFIndex.load(path)
         out = idx.search(
             spark, query, k=k, nprobe=p["nprobe"], where=where,
             oversample=oversample,
         )
         return out, idx.manifest.id_column
     if entry.kind == "hnsw":
-        idx = HNSWIndex.load(path)
         out = idx.search(spark, query, k=fetch, ef=p["ef"])
         id_col = idx.manifest["id_column"]
     elif entry.kind == "ivf_pq":
-        idx = IVFIndex.load(path)
         out = idx.search_adc(
             spark, query, k=fetch, nprobe=p["nprobe"],
             oversample=p.get("oversample", 4),
         )
         id_col = idx.manifest.id_column
-    elif entry.kind == "ivf_graph":
-        idx = IVFGraphIndex.load(path)
+    else:  # ivf_graph
         out = idx.search(
             spark, query, k=fetch, nprobe=p["nprobe"], ef=p["ef"]
         )
         id_col = idx.manifest.id_column
-    else:
-        raise ValueError(f"unknown catalog entry kind {entry.kind!r}")
     if where is not None:
         out = out.filter(where).limit(k)
     return out, id_col
@@ -726,9 +785,10 @@ def ann_search(
     ``IVFIndex.search(where=…)``), not here: an index route would
     return rows the subset excludes.
 
-    The exact-scan candidate is priced from ``df.count()`` — the LIVE
-    row count (a metadata-only job on parquet) — not from build-time
-    catalog counts, which go stale as the table grows or shrinks.
+    Because ``df`` is the indexed table, the exact scan is priced from
+    the catalog's live row count (:func:`route`) and the index paths
+    search the catalog's warm handles: a routed call runs only the job
+    of the path it picks.
 
     ``where``: the reference's post-filter contract
     (test/sql/hnsw_select.sql:51 — WHERE + ORDER BY still uses the
@@ -746,8 +806,7 @@ def ann_search(
     with ``explain=True`` (the masked_explain convention: show the
     decision, never the vectors)."""
     oversample = max(1, int(oversample))  # 0 would probe ZERO IVF lists
-    n_rows = df.count()
-    decision = route(catalog, table, column, metric, n_rows, recall_floor)
+    decision = route(catalog, table, column, metric, recall_floor=recall_floor)
     if decision.access_path == "exact":
         from lantern_spark.operators.knn import knn_search
 
@@ -757,7 +816,7 @@ def ann_search(
         )
     else:
         out, _ = search_entry(
-            spark, decision.entry, query, k, where=where,
+            spark, catalog, decision.entry, query, k, where=where,
             oversample=oversample,
         )
     return (out, decision) if explain else out

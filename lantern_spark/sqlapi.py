@@ -22,12 +22,16 @@ surface on Spark so a reference user can keep writing SQL:
   (Catalyst turns it into the same TakeOrderedAndProject physical plan
   the Python ``knn_search`` produces).
 
-Parity contract: each SQL body is the *same expression* the Python
-builders in ``functions/distances.py`` / ``functions/vectors.py`` /
-``operators/pq.py`` construct (dim guard, NULL handling, try_divide
-zero-norm behavior, 32-bit-masked popcount). Drift is pinned by
-``tests/test_sqlapi.py``, which evaluates both surfaces on the same
-inputs and requires identical results.
+Parity contract: the distance kernels and the vector algebra have ONE
+body each — the SQL template in the ``KERNELS`` table of
+``functions/distances.py`` or ``functions/vectors.py``, which the Column
+functions render into a single ``F.expr`` and this module registers
+over its parameters (dim guard, NULL handling, per-element casts,
+try_divide zero-norm behavior, 32-bit-masked popcount). ``tests/test_sqlapi.py``
+pins both surfaces bit-equal. The remaining bodies (scalar
+quantization, tokenizer, BM25 term score) mirror the Column builders
+in ``operators/pq.py`` / ``functions/text.py`` textually; the same tests
+are their drift gate.
 """
 
 from __future__ import annotations
@@ -43,20 +47,6 @@ DEFAULT_TABLES = (
     "documents embeddings"
 ).split()
 
-_DIM_GUARD = (
-    "CASE WHEN a IS NULL OR b IS NULL THEN CAST(NULL AS {typ}) "
-    "WHEN size(a) != size(b) THEN CAST(raise_error(concat("
-    "'{name}: dimension mismatch (', CAST(size(a) AS STRING), "
-    "' vs ', CAST(size(b) AS STRING), ')')) AS {typ}) "
-    "ELSE {body} END"
-)
-
-_DSUM = "aggregate({arr}, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-
-
-def _guarded(name: str, body: str, typ: str = "DOUBLE") -> str:
-    return _DIM_GUARD.format(name=name, body=body, typ=typ)
-
 
 def _ddl(name: str, args: str, ret: str, body: str) -> str:
     return (
@@ -65,87 +55,24 @@ def _ddl(name: str, args: str, ret: str, body: str) -> str:
     )
 
 
-_AB = "a ARRAY<DOUBLE>, b ARRAY<DOUBLE>"
+def _kernel_ddls() -> List[str]:
+    """The distance kernels and vector algebra, each rendered from its
+    one template (``KERNELS`` of functions/distances.py and
+    functions/vectors.py) over the SQL parameters."""
+    from lantern_spark.functions import distances, vectors
 
-# Pure-expression SQL bodies. Kept textually close to the Column
-# builders they mirror (functions/distances.py, functions/vectors.py,
-# operators/pq.py) — the equivalence tests are the drift gate.
+    return [
+        _ddl(name, args, ret, fn(*[p.split()[0] for p in args.split(", ")]))
+        for name, (fn, args, ret) in {
+            **distances.KERNELS, **vectors.KERNELS
+        }.items()
+    ]
+
+
+# The remaining pure-expression SQL bodies, kept textually close to the
+# Column builders they mirror (operators/pq.py, functions/text.py,
+# operators/bm25.py) — the equivalence tests are the drift gate.
 _SQL_FUNCTIONS: List[str] = [
-    # -- distances (lantern.sql:12-45 names + extras) -------------------
-    _ddl(
-        "l2sq_dist", _AB, "DOUBLE",
-        _guarded(
-            "l2sq_dist",
-            _DSUM.format(arr="zip_with(a, b, (x, y) -> (x - y) * (x - y))"),
-        ),
-    ),
-    _ddl(
-        "l2_dist", _AB, "DOUBLE",
-        "sqrt(l2sq_dist(a, b))",
-    ),
-    _ddl(
-        "l1_dist", _AB, "DOUBLE",
-        _guarded(
-            "l1_dist",
-            _DSUM.format(arr="zip_with(a, b, (x, y) -> abs(x - y))"),
-        ),
-    ),
-    _ddl(
-        "inner_dist", _AB, "DOUBLE",
-        _guarded(
-            "inner_dist",
-            "-" + _DSUM.format(arr="zip_with(a, b, (x, y) -> x * y)"),
-        ),
-    ),
-    _ddl(
-        "cos_dist", _AB, "DOUBLE",
-        _guarded(
-            "cos_dist",
-            "1.0 - try_divide("
-            + _DSUM.format(arr="zip_with(a, b, (x, y) -> x * y)")
-            + ", sqrt("
-            + _DSUM.format(arr="transform(a, x -> x * x)")
-            + " * "
-            + _DSUM.format(arr="transform(b, x -> x * x)")
-            + "))",
-        ),
-    ),
-    _ddl(
-        "hamming_dist", "a ARRAY<INT>, b ARRAY<INT>", "BIGINT",
-        _guarded(
-            "hamming_dist",
-            "aggregate(zip_with(a, b, (x, y) -> "
-            "bit_count((CAST(x AS BIGINT) ^ CAST(y AS BIGINT)) "
-            "& 4294967295)), CAST(0 AS BIGINT), (acc, x) -> acc + x)",
-            typ="BIGINT",
-        ),
-    ),
-    # -- vector algebra (functions/vectors.py) --------------------------
-    _ddl(
-        "vec_dot", _AB, "DOUBLE",
-        _DSUM.format(arr="zip_with(a, b, (x, y) -> x * y)"),
-    ),
-    _ddl(
-        "vec_norm", "a ARRAY<DOUBLE>", "DOUBLE",
-        "sqrt(" + _DSUM.format(arr="transform(a, x -> x * x)") + ")",
-    ),
-    _ddl(
-        "vec_normalize", "a ARRAY<DOUBLE>", "ARRAY<DOUBLE>",
-        "CASE WHEN vec_norm(a) = 0.0 THEN a "
-        "ELSE transform(a, x -> x / vec_norm(a)) END",
-    ),
-    _ddl(
-        "vec_add", _AB, "ARRAY<DOUBLE>",
-        "zip_with(a, b, (x, y) -> x + y)",
-    ),
-    _ddl(
-        "vec_sub", _AB, "ARRAY<DOUBLE>",
-        "zip_with(a, b, (x, y) -> x - y)",
-    ),
-    _ddl(
-        "vec_scale", "a ARRAY<DOUBLE>, s DOUBLE", "ARRAY<DOUBLE>",
-        "transform(a, x -> x * s)",
-    ),
     # -- scalar quantization (operators/pq.py i8 family) ----------------
     _ddl(
         "sq_encode_i8", "a ARRAY<DOUBLE>, mn DOUBLE, mx DOUBLE", "ARRAY<INT>",
@@ -284,7 +211,7 @@ def install_sql_functions(spark: SparkSession) -> List[str]:
     matching the reference's per-database ``CREATE EXTENSION`` scope.
     """
     names = []
-    for ddl in _SQL_FUNCTIONS:
+    for ddl in _kernel_ddls() + _SQL_FUNCTIONS:
         spark.sql(ddl)
         names.append(ddl.split("FUNCTION ", 1)[1].split("(", 1)[0])
     # Porter stemmer: the one non-expression kernel (same split as the
@@ -501,17 +428,16 @@ def routed_sql(
                 f":{m['param']} not provided in params"
             )
         query = [float(v) for v in params[m["param"]]]
-    df = spark.table(table)
-    n_rows = df.count()
-    decision = route(catalog, table, col, metric, n_rows, recall_floor)
+    decision = route(catalog, table, col, metric, recall_floor=recall_floor)
     e = decision.entry
     if decision.access_path == "exact" or e is None:
         out = run_sql(sql)
         return (out, decision) if explain else out
     # WHERE → over-fetch so the post-hoc filter can still fill k
     fetch_k = k * max(1, int(oversample)) if m["where"] else k
-    cand, id_col = search_entry(spark, e, query, fetch_k)
+    cand, id_col = search_entry(spark, catalog, e, query, fetch_k)
     ids = [r[0] for r in cand.select(id_col).collect()]  # ≤ fetch_k rows
+    df = spark.table(table)
     view = f"{table}__ann_candidates"
     df.filter(df[id_col].isin(ids)).createOrReplaceTempView(view)
     start, end = m["table_span"]

@@ -138,3 +138,36 @@ def test_vec_normalize(small_world):
     rows = small_world.select("id", vec_norm(vec_normalize("v")).alias("n")).collect()
     for r in rows:
         assert r.n == pytest.approx(0.0 if r.id == "000" else 1.0, abs=1e-12)
+
+
+def test_kernel_build_is_one_parse(spark, monkeypatch):
+    """A kernel renders to ONE ``F.expr``: building
+    ``l2sq_dist("v", vec_lit(q))`` over a 64-dim literal sends 6 py4j
+    commands (the literal's parse and the kernel's). The Column-API
+    composition it replaced sent 323."""
+    q = [i / 64.0 for i in range(64)]
+    l2sq_dist("v", vec_lit(q))  # warm-up: first-call imports
+    client = spark.sparkContext._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    l2sq_dist("v", vec_lit(q))
+    monkeypatch.undo()
+    assert len(sent) <= 6
+
+
+def test_vec_lit_values_equal_f_lit(spark):
+    """vec_lit parses its SQL text to the same doubles F.lit holds,
+    negative zero and non-finite components included."""
+    vals = [0.1, 1e-300, 1.7976931348623157e308, 0.35000000000000003,
+            float(3.14159274), -0.0, float("inf"), float("-inf"), float("nan")]
+    got = spark.range(1).select(vec_lit(vals).alias("v")).first()["v"]
+    want = spark.range(1).select(
+        F.array(*[F.lit(v) for v in vals]).alias("v")
+    ).first()["v"]
+    assert [repr(x) for x in got] == [repr(x) for x in want]

@@ -1,6 +1,7 @@
 """Cost-based access-path routing (plans/router.py) — the
 amcostestimate analog (lantern_hnsw/src/hnsw.c:97-209)."""
 
+import json
 import math
 import os
 
@@ -343,7 +344,8 @@ class TestAnnSearchDispatch:
         n = emb.count()
         # ONE graph: the reference's n/3 always-prefer floor makes the
         # walk bound beat the exact scan at honest, live row counts
-        # (ann_search prices exact from df.count(), not catalog state)
+        # (ann_search prices exact from the manifest count plus the
+        # unfolded delta rows, not from build-time catalog state)
         idx = HNSWIndex.build(
             emb, "embedding", "vec_id", str(tmp_path / "hnsw"),
             m=8, ef_construction=48, shards=1, seed=42,
@@ -670,3 +672,153 @@ class TestRouteBatch:
             recall_floor=0.9,
         )
         assert dec.access_path == "exact"
+
+
+class TestWarmCatalog:
+    """Routed calls reuse the catalog's session state: the exact scan is
+    priced from the manifest count plus the unfolded delta (no count
+    job), and each index path searches a warm handle (no cold listing
+    job), reloaded when the artifact's manifest changes."""
+
+    N, DIM = 1000, 16
+
+    @pytest.fixture(scope="class")
+    def corpus(self, spark, tmp_path_factory):
+        import numpy as np
+
+        from lantern_spark.operators.hnsw import HNSWIndex
+        from lantern_spark.operators.index import IVFIndex
+
+        root = tmp_path_factory.mktemp("warm_catalog")
+        x = np.random.default_rng(3).normal(size=(self.N, self.DIM))
+        rows = [(i, [float(v) for v in r]) for i, r in enumerate(x)]
+        spark.createDataFrame(rows, "id long, vec array<float>").write.parquet(
+            str(root / "corpus")
+        )
+        df = spark.read.parquet(str(root / "corpus"))
+        ivf = IVFIndex.build(df, "vec", "id", str(root / "ivf"), seed=3)
+        hnsw = HNSWIndex.build(
+            df, "vec", "id", str(root / "hnsw"), shards=1, seed=3
+        )
+        return root, df, ivf, hnsw, x
+
+    def _catalog(self, root, ivf, hnsw, name):
+        cat = IndexCatalog(str(root / name))
+        cat.register_ivf(ivf, "corpus", nprobe=8, recall_estimate=0.90)
+        cat.register_hnsw(hnsw, "corpus", ef=64, recall_estimate=0.97)
+        return cat
+
+    def test_hnsw_manifest_counts_vectors(self, corpus, tmp_path):
+        root, df, ivf, hnsw, _ = corpus
+        assert hnsw.manifest["num_vectors"] == self.N
+        cat = self._catalog(root, ivf, hnsw, "cat_count")
+        (e,) = [x for x in cat.lookup("corpus", "vec", "l2sq") if x.kind == "hnsw"]
+        assert e.num_vectors == self.N
+        # a legacy manifest without the count falls back to the
+        # registered value
+        legacy = dict(hnsw.manifest)
+        del legacy["num_vectors"]
+        (tmp_path / "legacy").mkdir()
+        (tmp_path / "legacy" / "manifest.json").write_text(json.dumps(legacy))
+        old = CatalogEntry(
+            "t", "vec", "l2sq", "hnsw", str(tmp_path / "legacy"), 123,
+            params={"m": 16, "ef": 64, "shards": 1},
+        )
+        assert cat.manifest_rows(old) == 123
+
+    # parent: 4, 4 and 3 jobs (a count job, plus a cold index load's
+    # listing job on the index paths)
+    @pytest.mark.parametrize(
+        "floor,path", [(0.85, "ivf"), (0.95, "hnsw"), (0.99, "exact")]
+    )
+    def test_routed_call_runs_one_job(
+        self, spark, spark_jobs, corpus, floor, path
+    ):
+        root, df, ivf, hnsw, x = corpus
+        cat = self._catalog(root, ivf, hnsw, f"cat_jobs_{path}")
+        q = [float(v) for v in x[5]]
+
+        def call():
+            out, dec = ann_search(
+                spark, df, "corpus", "vec", q, k=10, catalog=cat,
+                recall_floor=floor, explain=True,
+            )
+            return dec, out.select("id", "dist").collect()
+
+        call()  # warms the catalog's handle
+        (dec, rows), jobs = spark_jobs(call)
+        assert dec.access_path == path
+        assert rows[0]["id"] == 5
+        assert jobs <= 1
+
+    def test_reason_names_the_live_count(self, corpus, tmp_path):
+        root, df, ivf, hnsw, _ = corpus
+        cat = self._catalog(root, ivf, hnsw, "cat_reason")
+        dec = route(cat, "corpus", "vec", "l2sq", recall_floor=0.99)
+        assert dec.access_path == "exact"
+        assert f"exact {self.N} rows (ivf manifest {self.N} + 0 unfolded delta)" in dec.reason
+        assert "rows not counted" in route(
+            cat, "other", "vec", "l2sq"
+        ).reason
+        # an artifact that is gone counts its registered rows
+        gone = _cat(tmp_path, CatalogEntry(
+            "t", "vec", "l2sq", "ivf", str(tmp_path / "gone"), 500,
+            params={"nlist": 4, "nprobe": 1},
+        ))
+        assert "exact 500 rows (ivf manifest 500 + 0" in route(
+            gone, "t", "vec", "l2sq"
+        ).reason
+
+    def test_warm_handle_sees_writes_through_another_handle(
+        self, spark, tmp_path
+    ):
+        import numpy as np
+
+        from lantern_spark.operators.hnsw import HNSWIndex
+        from lantern_spark.operators.index import IVFIndex
+
+        x = np.random.default_rng(4).normal(size=(400, 8))
+        df = spark.createDataFrame(
+            [(i, [float(v) for v in r]) for i, r in enumerate(x)],
+            "id long, vec array<float>",
+        )
+        ivf = IVFIndex.build(df, "vec", "id", str(tmp_path / "ivf"), seed=4)
+        hnsw = HNSWIndex.build(
+            df, "vec", "id", str(tmp_path / "hnsw"), shards=1, seed=4
+        )
+        q = [float(v) + 0.01 for v in x[7]]
+        new = spark.createDataFrame(
+            [(10_000 + i, [float(v) + 0.001 * i for v in x[7]]) for i in range(3)],
+            "id long, vec array<float>",
+        )
+        for idx, register, point in (
+            (ivf, IndexCatalog.register_ivf, {"nprobe": 8}),
+            (hnsw, IndexCatalog.register_hnsw, {"ef": 64}),
+        ):
+            cat = IndexCatalog(str(tmp_path / f"cat_{id(idx)}"))
+            e = register(cat, idx, "corpus", recall_estimate=1.0, **point)
+
+            def routed():
+                out, dec = ann_search(
+                    spark, df, "corpus", "vec", q, k=5, catalog=cat,
+                    explain=True,
+                )
+                assert dec.access_path == e.kind
+                return [(r["id"], r["dist"]) for r in out.collect()]
+
+            def fresh():
+                out = type(idx).load(idx.path).search(spark, q, k=5, **point)
+                return [(r["id"], r["dist"]) for r in out.collect()]
+
+            assert routed() == fresh()
+            warm = cat.handle(e)
+            writer = type(idx).load(idx.path)  # a different handle
+            writer.add_delta(new)
+            assert cat.handle(e) is warm  # the manifest did not change
+            got = routed()
+            assert got == fresh()
+            assert {i for i, _ in got} >= {10_000, 10_001, 10_002}
+            writer.fold_delta(spark)
+            assert cat.handle(e) is not warm  # reloaded on the new manifest
+            assert routed() == fresh()
+            assert cat.manifest_rows(e) == 403

@@ -14,6 +14,7 @@ from lantern_spark.functions.distances import (
     hamming_dist,
     inner_dist,
     l1_dist,
+    l2_dist,
     l2sq_dist,
 )
 from lantern_spark.functions.text import text_to_stem_array, tokenize
@@ -92,18 +93,16 @@ class TestDistanceParity:
             ("cos_dist", cos_dist),
             ("l1_dist", l1_dist),
             ("inner_dist", inner_dist),
+            ("l2_dist", l2_dist),
         ],
     )
     def test_sql_equals_python(self, spark, pairs, name, builder):
+        # one body per kernel: bit-equal, NULL and zero-norm rows included
         got = spark.sql(
             f"SELECT {name}(a, b) AS d FROM sql_pairs"
         ).collect()
         want = pairs.select(builder("a", "b").alias("d")).collect()
-        for g, w in zip(got, want):
-            if w["d"] is None:
-                assert g["d"] is None
-            else:
-                assert g["d"] == pytest.approx(w["d"], rel=1e-12)
+        assert got == want
 
     def test_float_array_implicit_cast(self, spark):
         """real[] columns (array<float>) work through the DOUBLE-typed
@@ -123,10 +122,16 @@ class TestDistanceParity:
         assert row["d"] == pytest.approx(13.0)
 
     def test_dim_mismatch_raises(self, spark):
-        with pytest.raises(Exception, match="dimension mismatch"):
+        msg = r"l2sq_dist: dimension mismatch \(1 vs 2\)"
+        with pytest.raises(Exception, match=msg):
             spark.sql(
                 "SELECT l2sq_dist(array(1.0d), array(1.0d, 2.0d))"
             ).collect()
+        df = spark.createDataFrame(
+            [([1.0], [1.0, 2.0])], "a array<double>, b array<double>"
+        )
+        with pytest.raises(Exception, match=msg):
+            df.select(l2sq_dist("a", "b")).collect()
 
     def test_hamming_parity(self, spark):
         schema = T.StructType(
@@ -176,11 +181,7 @@ class TestVectorAlgebraParity:
             vec_sub("a", "b").alias("diff"),
             vec_scale("a", 2.5).alias("sc"),
         ).collect()
-        for g, w in zip(got, want):
-            assert g["dot"] == pytest.approx(w["dot"], rel=1e-12)
-            assert g["na"] == pytest.approx(w["na"], rel=1e-12)
-            for col in ("an", "s", "diff", "sc"):
-                assert g[col] == pytest.approx(w[col], rel=1e-12)
+        assert got == want
 
 
 class TestQuantAndTextParity:
